@@ -51,8 +51,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import sys
-import time
 from typing import Dict, Iterator, List, Optional
 
 import numpy as np
@@ -71,19 +69,6 @@ from lucene_solr_spark.indexing.codec import (
     encode_prox,
 )
 
-
-_TIMING = os.environ.get("LSS_BUILD_TIMING") == "1"
-
-
-def _tlog(label: str, t0: float) -> float:
-    """Phase-timing probe (LSS_BUILD_TIMING=1): prints wall seconds per
-    build phase to stderr — the profiling hook behind the scaling-
-    efficiency work (serial driver segments are what Amdahl punishes
-    at 4N cores)."""
-    t1 = time.time()
-    if _TIMING:
-        print(f"[build-timing] {label}: {t1 - t0:.2f}s", file=sys.stderr)
-    return t1
 
 DOC_KEY = ["repo", "path", "commit"]
 
@@ -806,9 +791,7 @@ class IndexWriter:
             self.spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
     def _build_inner(self, corpus: DataFrame, resume: bool) -> Snapshot:
-        _t = time.time()
         snap = self._plan_snapshot(corpus, resume)
-        _t = _tlog("plan_snapshot", _t)
         if snap.stage in ("commit", "merge", "delete") and resume:
             return snap
         props = snap.props
@@ -849,9 +832,7 @@ class IndexWriter:
             out = part.mapInPandas(builder, schema=SEGMENT_OUT_SCHEMA)
             path = self.catalog.path("seg", f"batch={b}")
             out.write.mode("overwrite").partitionBy("is_meta").parquet(path)
-            _t = _tlog(f"segment_batch_{b}", _t)
             lineage_acc.extend(self._batch_lineage(path, b))
-            _t = _tlog(f"batch_lineage_{b}", _t)
             done.add(b)
             self.catalog.commit(
                 "segments",
@@ -860,7 +841,6 @@ class IndexWriter:
                 lineage=lineage_acc,
             )
         keyed.unpersist()
-        _t = _tlog("segment_commits", _t)
         return self._finalize(props, sorted(done), lineage_acc)
 
     def _batch_lineage(self, path: str, batch: int) -> List[dict]:
@@ -888,7 +868,6 @@ class IndexWriter:
 
     # -- stage 3: stats + commit -----------------------------------------
     def _finalize(self, props: dict, done: List[int], lineage: List[dict]) -> Snapshot:
-        _t = time.time()
         batch_paths = [self.catalog.path("seg", f"batch={b}") for b in done]
         postings, meta = read_segment_output(
             self.spark, batch_paths, self.catalog.path("seg")
@@ -901,11 +880,9 @@ class IndexWriter:
             .sortWithinPartitions("term")
             .write.mode("overwrite").parquet(term_stats_path)
         )
-        _t = _tlog("term_stats", _t)
         agg = meta.agg(
             F.sum("doc_count").alias("max_doc"), F.sum("sum_len").alias("sum_ttf")
         ).collect()[0]
-        _t = _tlog("coll_agg", _t)
         coll = {
             "max_doc": int(agg["max_doc"] or 0),
             "sum_total_term_freq": int(agg["sum_ttf"] or 0),
@@ -918,7 +895,6 @@ class IndexWriter:
         write_docs_table(
             self.spark, batch_paths, self.catalog.path("seg"), docs_path
         )
-        _t = _tlog("docs_table", _t)
         dps = int(props.get("docs_per_segment", self.docs_per_segment))
         return self.catalog.commit(
             "commit",

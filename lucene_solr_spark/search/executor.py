@@ -992,17 +992,13 @@ class IndexSearcher:
         posts = self._postings.filter(
             F.col("term").isin(sorted({t for t, _s in selected}))
         ).select("term", "df", "doc_ids_enc", "tfs_enc", "skips_enc",
-                 "sdoc")
+                 "sdoc", "stf")
 
         def decode(batches):
             for pdf in batches:
                 terms_out, docs_out = [], []
                 for r in pdf.itertuples(index=False):
-                    if r.df == 1:
-                        d = np.array([r.sdoc], np.int64)
-                    else:
-                        d, _ = decode_postings(
-                            r.doc_ids_enc, r.tfs_enc, r.skips_enc)
+                    d, _ = _row_postings(r)
                     terms_out.append(
                         np.repeat(np.array([r.term], object), len(d)))
                     docs_out.append(d)
@@ -1640,7 +1636,7 @@ class IndexSearcher:
                 probe.update(analyze(q.get("exclude", "")))
         self._lookup_dfs(sorted(probe))
 
-        subkernels: List[Tuple[int, List[str], object, bool]] = []
+        subkernels: List[Tuple[int, List[str], object]] = []
         fetch: set = set()
         for qid, q in enumerate(queries):
             if isinstance(q, str):
@@ -1659,7 +1655,6 @@ class IndexSearcher:
                 kern = make_phrase_scorer(
                     offsets, F32(w * K1_PLUS_1), self.cache, k
                 )
-                shareable = False
                 terms = uniq
             else:
                 plan = self.plan(
@@ -1672,9 +1667,8 @@ class IndexSearcher:
                 if plan.empty:
                     continue
                 kern = make_group_scorer(plan, wand)
-                shareable = True
                 terms = plan.terms + plan.exclude_terms
-            subkernels.append((qid, sorted(set(terms)), kern, shareable))
+            subkernels.append((qid, sorted(set(terms)), kern))
             fetch.update(terms)
         if not subkernels:
             return self.spark.createDataFrame([], out_schema)
@@ -1685,10 +1679,9 @@ class IndexSearcher:
         def multi(posts_pdf: pd.DataFrame, segs_pdf: pd.DataFrame):
             outs = []
             shared: dict = {}
-            for qid, terms, kern, shareable in kernels:
+            for qid, terms, kern in kernels:
                 sub = posts_pdf[posts_pdf["term"].isin(terms)]
-                r = (kern.with_shared(sub, segs_pdf, shared)
-                     if shareable else kern(sub, segs_pdf))
+                r = kern.with_shared(sub, segs_pdf, shared)
                 if len(r):
                     r.insert(0, "query_id", np.int32(qid))
                     outs.append(r)
@@ -2063,20 +2056,13 @@ class IndexSearcher:
         Decode is distributed (mapInPandas over posting rows); dedup is
         a Spark distinct on the narrow doc_id column."""
         posts = self._postings.filter(term_condition).select(
-            "df", "doc_ids_enc", "tfs_enc", "skips_enc", "sdoc"
+            "df", "doc_ids_enc", "tfs_enc", "skips_enc", "sdoc", "stf"
         )
 
         def decode(batches):
             for pdf in batches:
-                out = []
-                for r in pdf.itertuples(index=False):
-                    if r.df == 1:
-                        out.append(np.array([r.sdoc], np.int64))
-                    else:
-                        d, _ = decode_postings(
-                            r.doc_ids_enc, r.tfs_enc, r.skips_enc
-                        )
-                        out.append(d)
+                out = [_row_postings(r)[0]
+                       for r in pdf.itertuples(index=False)]
                 if out:
                     yield pd.DataFrame({"doc_id": np.concatenate(out)})
 
@@ -2273,21 +2259,14 @@ class IndexSearcher:
         )
         rows = self._postings.filter(
             cond | (F.col("term") == term)
-        ).select("term", "doc_ids_enc", "tfs_enc", "skips_enc", "sdoc")
+        ).select("term", "df", "doc_ids_enc", "tfs_enc", "skips_enc",
+                 "sdoc", "stf")
 
         def explode_shards(batches):
-            import numpy as np
-            import pandas as pd
-            from lucene_solr_spark.indexing.codec import decode_postings
             for pdf in batches:
                 ts, sh, dfc = [], [], []
                 for r in pdf.itertuples(index=False):
-                    if r.sdoc is not None and not pd.isna(r.sdoc):
-                        docs = np.array([int(r.sdoc)], np.int64)
-                    else:
-                        docs, _ = decode_postings(
-                            bytes(r.doc_ids_enc), bytes(r.tfs_enc),
-                            bytes(r.skips_enc))
+                    docs, _ = _row_postings(r)
                     s, c = np.unique(docs // span, return_counts=True)
                     ts.extend([r.term] * len(s))
                     sh.extend(s.tolist())
@@ -2597,15 +2576,9 @@ class IndexSearcher:
             for pdf in batches:
                 ds, ts = [], []
                 for r in pdf.itertuples(index=False):
-                    if r.df == 1:
-                        ds.append(np.array([r.sdoc], np.int64))
-                        ts.append(np.array([r.stf], np.int64))
-                    else:
-                        d, t = decode_postings(
-                            r.doc_ids_enc, r.tfs_enc, r.skips_enc
-                        )
-                        ds.append(d)
-                        ts.append(t.astype(np.int64))
+                    d, t = _row_postings(r)
+                    ds.append(d)
+                    ts.append(t.astype(np.int64))
                 if ds:
                     yield pd.DataFrame({
                         "doc_id": np.concatenate(ds),
@@ -3045,17 +3018,14 @@ class IndexSearcher:
         (facet-sized, small) enter the global order/offset window."""
         cond = F.col("term").startswith(prefix) if prefix else F.lit(True)
         posts = self._postings.filter(cond).select(
-            "term", "df", "doc_ids_enc", "tfs_enc", "skips_enc", "sdoc")
+            "term", "df", "doc_ids_enc", "tfs_enc", "skips_enc", "sdoc",
+            "stf")
 
         def decode(batches):
             for pdf in batches:
                 terms_out, docs_out = [], []
                 for r in pdf.itertuples(index=False):
-                    if r.df == 1:
-                        d = np.array([r.sdoc], np.int64)
-                    else:
-                        d, _ = decode_postings(
-                            r.doc_ids_enc, r.tfs_enc, r.skips_enc)
+                    d, _ = _row_postings(r)
                     terms_out.append(np.repeat(r.term, len(d)))
                     docs_out.append(d)
                 if docs_out:
@@ -3253,6 +3223,18 @@ def _group_ctx(segs: pd.DataFrame):
     return gbase, span, norms, deleted
 
 
+def _row_postings(r, block_mask: Optional[np.ndarray] = None
+                  ) -> Tuple[np.ndarray, np.ndarray]:
+    """(docs int64, tfs int32) of one postings row — the single place a
+    row is decoded. A df == 1 row carries its doc inline (sdoc/stf, no
+    blobs); ``block_mask`` selects FOR blocks of a blob row (the
+    skip/WAND path)."""
+    if r.df == 1:
+        return np.array([r.sdoc], np.int64), np.array([r.stf], np.int32)
+    return decode_postings(r.doc_ids_enc, r.tfs_enc, r.skips_enc,
+                           block_mask)
+
+
 class _TermIndex:
     """Lazy, block-granular view of one term's postings inside a scoring
     group — the TermScorer + skip-list reader analogue
@@ -3268,17 +3250,15 @@ class _TermIndex:
 
     __slots__ = (
         "his", "max_tf", "max_nb", "n_blocks",
-        "_rows", "_row_of", "_local_bi", "_row_nblocks", "_kind",
-        "_memo",
+        "_rows", "_row_of", "_local_bi", "_row_nblocks", "_memo",
     )
 
     def __init__(self, rows, norms: np.ndarray, gbase: int):
-        his, kind, row_of, local_bi = [], [], [], []
+        his, row_of, local_bi = [], [], []
         mtf, mnb, row_nblocks = [], [], []
         for ri, r in enumerate(rows):
             if r.df == 1:
                 his.append(np.array([r.sdoc], np.int64))
-                kind.append(np.array([1], np.int8))
                 row_of.append(np.array([ri], np.int32))
                 local_bi.append(np.array([0], np.int32))
                 mtf.append(np.array([r.stf], np.int32))
@@ -3291,7 +3271,6 @@ class _TermIndex:
                 sk = decode_skips(r.skips_enc)
                 n = len(sk)
                 his.append(sk["last_doc"].astype(np.int64))
-                kind.append(np.zeros(n, np.int8))
                 row_of.append(np.full(n, ri, np.int32))
                 local_bi.append(np.arange(n, dtype=np.int32))
                 mtf.append(sk["max_tf"].astype(np.int32))
@@ -3299,7 +3278,6 @@ class _TermIndex:
                 row_nblocks.append(n)
         self._rows = rows
         self.his = np.concatenate(his)
-        self._kind = np.concatenate(kind)
         self._row_of = np.concatenate(row_of)
         self._local_bi = np.concatenate(local_bi)
         self.max_tf = np.concatenate(mtf)
@@ -3313,13 +3291,9 @@ class _TermIndex:
         if hit is not None:
             return hit
         ri = int(self._row_of[gi])
-        r = self._rows[ri]
-        if self._kind[gi]:
-            out = (np.array([r.sdoc], np.int64), np.array([r.stf], np.int32))
-        else:
-            mask = np.zeros(self._row_nblocks[ri], dtype=bool)
-            mask[int(self._local_bi[gi])] = True
-            out = decode_postings(r.doc_ids_enc, r.tfs_enc, r.skips_enc, mask)
+        mask = np.zeros(self._row_nblocks[ri], dtype=bool)
+        mask[int(self._local_bi[gi])] = True
+        out = _row_postings(self._rows[ri], mask)
         self._memo[gi] = out
         return out
 
@@ -3338,44 +3312,162 @@ class _TermIndex:
         return self.decode_blocks(np.arange(self.n_blocks))
 
 
+# -- the per-group scoring skeleton -----------------------------------------
+#
+# Every scoring kernel is ``_kernel(body, k)``. The skeleton owns the
+# frame around a body: the empty-input check, the group context (cached
+# in the search_many ``shared`` dict), the by-term row grouping, ONE
+# live-docs mask, the searchAfter cursor, the bounded top-k and the
+# ``doc_id long, score float`` frame. A body receives the _Group and
+# returns (docs, scores) — the group's matching docIDs (int64, unique,
+# any order) with their float32 scores — or None for no match. A body
+# must NOT mask tombstones or cut to k: the skeleton does both, so
+# deletions and the tie-at-k rule behave the same in every query type.
+# (A pruning body may READ ``g.deleted`` to keep its bound score-safe.)
+
+
+class _Group:
+    """One scoring group as a body sees it: the doc span [gbase,
+    gbase + span), dense norm bytes, the tombstone mask (None = no
+    deletes), postings rows by term in seg_id order, and the rows of
+    make_boolean_scorer's docset clauses by their ``_cl`` tag."""
+
+    __slots__ = ("gbase", "span", "norms", "deleted", "by_term",
+                 "by_clause", "_shared")
+
+    def __init__(self, posts: pd.DataFrame, segs: pd.DataFrame,
+                 shared: Optional[dict]):
+        ctx = None if shared is None else shared.get("ctx")
+        if ctx is None:
+            ctx = _group_ctx(segs)
+            if shared is not None:
+                shared["ctx"] = ctx
+        self.gbase, self.span, self.norms, self.deleted = ctx
+        self._shared = shared
+        # docset clauses ride in with a _cl tag (>= 0); term-addressed
+        # clauses use the _cl == -1 rows (or everything when untagged)
+        self.by_clause: Dict[int, pd.DataFrame] = {}
+        if "_cl" in posts.columns:
+            cl = posts["_cl"].to_numpy()
+            for c_id in np.unique(cl[cl >= 0]):
+                self.by_clause[int(c_id)] = posts[cl == c_id]
+            posts = posts[cl == -1]
+        self.by_term: Dict[str, list] = {}
+        for r in posts.sort_values("seg_id").itertuples(index=False):
+            self.by_term.setdefault(r.term, []).append(r)
+
+    def tindex(self, t: str) -> Optional[_TermIndex]:
+        """Block view of term ``t`` (None when absent). Under
+        search_many one instance serves every query of the batch, so
+        high-DF terms decode once per (task, group)."""
+        rows = self.by_term.get(t)
+        if not rows:
+            return None
+        if self._shared is None:
+            return _TermIndex(rows, self.norms, self.gbase)
+        ti = self._shared.get(("ti", t))
+        if ti is None:
+            ti = self._shared[("ti", t)] = _TermIndex(
+                rows, self.norms, self.gbase)
+        return ti
+
+    def postings(self, t: str) -> Optional[Tuple[np.ndarray, np.ndarray]]:
+        """(docs, tfs) of term ``t`` over all its rows, or None."""
+        rows = self.by_term.get(t)
+        if not rows:
+            return None
+        parts = [_row_postings(r) for r in rows]
+        return (np.concatenate([d for d, _ in parts]),
+                np.concatenate([tf for _, tf in parts]))
+
+    def bm25(self, cache: np.ndarray, wv, docs: np.ndarray,
+             freq: np.ndarray) -> np.ndarray:
+        """f32 BM25 at weightValue ``wv`` and freq (tf, or a phrase /
+        span freq): wv * freq / (freq + cache[norm byte])
+        (BM25Similarity.java:233-238)."""
+        freq = freq.astype(np.float32)
+        nrm = cache[self.norms[docs - self.gbase].astype(np.int64)]
+        return ((F32(wv) * freq) / (freq + nrm)).astype(np.float32)
+
+
+def _empty_hits() -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
+                         "score": pd.Series(dtype="float32")})
+
+
+def _kernel(body, k: Optional[int],
+            after: Optional[Tuple[float, int]] = None):
+    """Wrap a per-group ``body`` (see the contract above) into the
+    2-arg cogroup kernel; ``kernel.with_shared(posts, segs, shared)``
+    is the search_many entry that shares group state across a batch."""
+
+    def score_group(posts: pd.DataFrame, segs: pd.DataFrame,
+                    shared: Optional[dict] = None) -> pd.DataFrame:
+        if len(posts) == 0 or len(segs) == 0:
+            return _empty_hits()
+        g = _Group(posts, segs, shared)
+        hit = body(g)
+        if hit is None:
+            return _empty_hits()
+        docs, scores = hit
+        keep = None
+        if g.deleted is not None and len(docs):
+            keep = ~g.deleted[docs - g.gbase]
+        if after is not None:
+            # searchAfter: strictly after the cursor in (score desc,
+            # doc asc) order, applied before the cut so page k+1 is exact
+            s0 = np.float32(after[0])
+            later = (scores < s0) | ((scores == s0) & (docs > after[1]))
+            keep = later if keep is None else keep & later
+        if keep is not None:
+            docs, scores = docs[keep], scores[keep]
+        if len(docs) == 0:
+            return _empty_hits()
+        # bounded per-group top-k: score desc, doc asc (k=None: keep all)
+        if k is not None and len(docs) > k:
+            # keep every candidate tied with the k-th score so the
+            # docID-asc tie-break resolves exactly at the boundary
+            thresh = scores[np.argpartition(-scores, k - 1)[k - 1]]
+            sel = scores >= thresh
+            docs, scores = docs[sel], scores[sel]
+        order = np.lexsort((docs, -scores.astype(np.float64)))
+        if k is not None:
+            order = order[:k]
+        return pd.DataFrame({"doc_id": docs[order], "score": scores[order]})
+
+    def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
+        # cogroup.applyInPandas dispatches on arity (3 args would mean
+        # (key, left, right)) — keep the public kernel 2-arg and expose
+        # the batch-sharing variant separately
+        return score_group(posts, segs)
+
+    kernel.with_shared = score_group  # type: ignore[attr-defined]
+    return kernel
+
+
 def make_conjunction_counter(terms):
     """Minimal AND hit counter (the SpellCheckCollator verify path):
-    per group, decode each term's doc ids (no tfs/norms/scores kept),
+    per group, decode each term's doc ids (no norms/scores kept),
     np.intersect1d across the clause set, mask tombstones, emit one
     count row. Disjoint per-segment doc ranges make the concatenated
     per-term arrays unique, so assume_unique intersection is exact."""
     uniq = list(dict.fromkeys(terms))
 
-    def zero():
-        return pd.DataFrame({"cnt": pd.Series([0], dtype="int64")})
-
     def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        if len(posts) == 0 or len(segs) == 0:
-            return zero()
-        gbase, _span, _norms, deleted = _group_ctx(segs)
-        by_term: Dict[str, list] = {}
-        for r in posts.sort_values("seg_id").itertuples(index=False):
-            by_term.setdefault(r.term, []).append(r)
-        cur = None
-        for t in uniq:
-            rows = by_term.get(t)
-            if not rows:
-                return zero()
-            parts = []
-            for r in rows:
-                if r.df == 1:
-                    parts.append(np.array([r.sdoc], np.int64))
-                else:
-                    docs, _tfs = decode_postings(
-                        r.doc_ids_enc, r.tfs_enc, r.skips_enc)
-                    parts.append(docs)
-            docs = np.concatenate(parts)
-            cur = docs if cur is None else np.intersect1d(
-                cur, docs, assume_unique=True)
-            if len(cur) == 0:
-                return zero()
-        if deleted is not None:
-            cur = cur[~deleted[cur - gbase]]
+        cur = np.empty(0, np.int64)
+        if len(posts) and len(segs):
+            g = _Group(posts, segs, None)
+            for i, t in enumerate(uniq):
+                p = g.postings(t)
+                if p is None:
+                    cur = np.empty(0, np.int64)
+                    break
+                cur = p[0] if i == 0 else np.intersect1d(
+                    cur, p[0], assume_unique=True)
+                if len(cur) == 0:
+                    break
+            if g.deleted is not None:
+                cur = cur[~g.deleted[cur - g.gbase]]
         return pd.DataFrame(
             {"cnt": pd.Series([int(len(cur))], dtype="int64")})
 
@@ -3419,47 +3511,14 @@ def make_group_scorer(plan: QueryPlan, wand: bool):
     wand = wand and sim is None and mode != "dismax"
     and_order = sorted(terms, key=lambda t: dfs[t])  # stable: ties keep order
 
-    def empty_result():
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float32")})
-
-    def score_group(posts: pd.DataFrame, segs: pd.DataFrame,
-                    shared: Optional[dict] = None) -> pd.DataFrame:
-        """``shared``: per-(task, gid) registry used by search_many —
-        group context and _TermIndex instances (decoded blocks) are
-        built once and reused by every query kernel in the batch."""
-        if len(posts) == 0 or len(segs) == 0:
-            return empty_result()
-        if shared is not None and "ctx" in shared:
-            gbase, span, norms, deleted = shared["ctx"]
-        else:
-            gbase, span, norms, deleted = _group_ctx(segs)
-            if shared is not None:
-                shared["ctx"] = (gbase, span, norms, deleted)
-
-        by_term: Dict[str, list] = {}
-        for r in posts.sort_values("seg_id").itertuples(index=False):
-            by_term.setdefault(r.term, []).append(r)
-
-        def tindex(t: str) -> Optional[_TermIndex]:
-            rows = by_term.get(t)
-            if not rows:
-                return None
-            if shared is not None:
-                ti = shared.get(("ti", t))
-                if ti is None:
-                    ti = _TermIndex(rows, norms, gbase)
-                    shared[("ti", t)] = ti
-                return ti
-            return _TermIndex(rows, norms, gbase)
+    def body(g: _Group):
+        gbase, span, norms = g.gbase, g.span, g.norms
 
         def wv_of(t: str) -> np.float32:
             return F32(F32(weights[t]) * K1_PLUS_1)
 
         def term_scores(wv, docs, tfs):
-            freq = tfs.astype(np.float32)
-            nrm = cache[norms[docs - gbase].astype(np.int64)]
-            return (wv * freq / (freq + nrm)).astype(np.float32)
+            return g.bm25(cache, wv, docs, tfs)
 
         def scorer_for(spec):
             """Per-similarity clause scorer factory (the SimScorer
@@ -3579,31 +3638,31 @@ def make_group_scorer(plan: QueryPlan, wand: bool):
 
         clause_scores = scorer_for(sim)
 
-        def excl_mask_or_none() -> Optional[np.ndarray]:
-            m = None if deleted is None else deleted.copy()
-            if exclude_terms:
-                if m is None:
-                    m = np.zeros(span, dtype=bool)
-                for t in exclude_terms:
-                    ti = tindex(t)
-                    if ti is not None:
-                        d, _ = ti.decode_all()
-                        m[d - gbase] = True
+        def excl_mask() -> Optional[np.ndarray]:
+            """MUST_NOT docs of this group as a dense mask, or None."""
+            m = None
+            for t in exclude_terms:
+                ti = g.tindex(t)
+                if ti is not None:
+                    if m is None:
+                        m = np.zeros(span, dtype=bool)
+                    d, _ = ti.decode_all()
+                    m[d - gbase] = True
             return m
 
         if mode == "and":
             tis = []
             for t in and_order:
-                ti = tindex(t)
+                ti = g.tindex(t)
                 if ti is None:
-                    return empty_result()  # null MUST clause
+                    return None  # null MUST clause
                 tis.append(ti)
             lead_docs, lead_tfs = tis[0].decode_all()
             cand = lead_docs
             datas = [(lead_docs, lead_tfs)]
             for ti in tis[1:]:
                 if len(cand) == 0:
-                    return empty_result()
+                    return None
                 if wand:
                     gis = np.unique(
                         np.searchsorted(ti.his, cand, side="left")
@@ -3615,117 +3674,88 @@ def make_group_scorer(plan: QueryPlan, wand: bool):
                 cand = cand[np.isin(cand, docs_t, assume_unique=True)]
                 datas.append((docs_t, tfs_t))
             if len(cand) == 0:
-                return empty_result()
+                return None
             acc = np.zeros(len(cand), dtype=np.float32)
             for t, (docs_t, tfs_t) in zip(and_order, datas):
                 pos = np.searchsorted(docs_t, cand)
                 # float32 sum in ascending-df clause order (normative)
                 acc = acc + clause_scores(t, cand, tfs_t[pos])
-            cand_docs, cand_scores = cand, acc
-            em = excl_mask_or_none()
-            if em is not None and len(cand_docs):
-                keep = ~em[cand_docs - gbase]
-                cand_docs, cand_scores = cand_docs[keep], cand_scores[keep]
-        else:  # or / mm
-            tis, wvs, tnames = [], [], []
-            for t in terms:
-                ti = tindex(t)
-                if ti is not None:
-                    tis.append(ti)
-                    wvs.append(wv_of(t) if sim is None else None)
-                    tnames.append(t)
-            if not tis:
-                return empty_result()
-            em = excl_mask_or_none()
-            if mode == "dismax":
-                # DisjunctionMaxScorer (search/DisjunctionMaxScorer.java
-                # :85-108): score = scoreMax + (scoreSum - scoreMax) *
-                # tieBreakerMultiplier, all float32. scoreSum/scoreMax
-                # accumulate in FLOAT per sub-scorer; we accumulate in
-                # clause order (identical to the reference's heap walk
-                # for <= 3 clauses; a documented deterministic variant
-                # beyond that — max is order-free, only the f32 sum
-                # rounding order differs).
-                ssum = np.zeros(span, dtype=np.float32)
-                smax = np.full(span, -np.inf, dtype=np.float32)
-                cnt = np.zeros(span, dtype=np.int32)
-                for ti, t in zip(tis, tnames):
-                    docs, tfs = ti.decode_all()
-                    s = clause_scores(t, docs, tfs)
-                    idxs = docs - gbase
-                    ssum[idxs] = ssum[idxs] + s      # f32 step add
-                    smax[idxs] = np.maximum(smax[idxs], s)
-                    cnt[idxs] += 1
-                hit = cnt >= 1
-                if em is not None:
-                    hit &= ~em
-                idxs = np.nonzero(hit)[0]
-                cand_docs = idxs.astype(np.int64) + gbase
-                cand_scores = (
-                    smax[idxs] + (ssum[idxs] - smax[idxs]) * tie
-                ).astype(np.float32)
-            elif wand and k is not None:
-                cand_docs, cand_scores = _wand_or(
-                    tis, wvs, cache, norms, gbase, span, k, mm,
-                    em, term_scores,
-                )
-            else:
-                acc = np.zeros(span, dtype=np.float64)
-                cnt = np.zeros(span, dtype=np.int32)
-                for ti, t in zip(tis, tnames):
-                    docs, tfs = ti.decode_all()
-                    s = clause_scores(t, docs, tfs)
-                    idxs = docs - gbase
-                    acc[idxs] += s.astype(np.float64)
-                    cnt[idxs] += 1
-                hit = cnt >= mm
-                if em is not None:
-                    hit &= ~em
-                idxs = np.nonzero(hit)[0]
-                cand_docs = idxs.astype(np.int64) + gbase
-                cand_scores = acc[idxs].astype(np.float32)
-                if sim is not None and sim["kind"] == "classic":
-                    # coordFactors[m] applied to the f32 sum
-                    # (BooleanScorer2 coordinator, TFIDFSimilarity.coord)
-                    from lucene_solr_spark.functions.similarity import (
-                        classic_coords,
-                    )
-
-                    coords = classic_coords(sim["max_coord"])
-                    cand_scores = (
-                        cand_scores * coords[cnt[idxs]]
-                    ).astype(np.float32)
-
-        if after is not None and len(cand_docs):
-            s0 = np.float32(after[0])
-            keep = (cand_scores < s0) | (
-                (cand_scores == s0) & (cand_docs > after[1])
+            em = excl_mask()
+            if em is not None:
+                keep = ~em[cand - gbase]
+                cand, acc = cand[keep], acc[keep]
+            return cand, acc
+        # or / mm
+        tis, wvs, tnames = [], [], []
+        for t in terms:
+            ti = g.tindex(t)
+            if ti is not None:
+                tis.append(ti)
+                wvs.append(wv_of(t) if sim is None else None)
+                tnames.append(t)
+        if not tis:
+            return None
+        em = excl_mask()
+        if mode == "dismax":
+            # DisjunctionMaxScorer (search/DisjunctionMaxScorer.java
+            # :85-108): score = scoreMax + (scoreSum - scoreMax) *
+            # tieBreakerMultiplier, all float32. scoreSum/scoreMax
+            # accumulate in FLOAT per sub-scorer; we accumulate in
+            # clause order (identical to the reference's heap walk
+            # for <= 3 clauses; a documented deterministic variant
+            # beyond that — max is order-free, only the f32 sum
+            # rounding order differs).
+            ssum = np.zeros(span, dtype=np.float32)
+            smax = np.full(span, -np.inf, dtype=np.float32)
+            cnt = np.zeros(span, dtype=np.int32)
+            for ti, t in zip(tis, tnames):
+                docs, tfs = ti.decode_all()
+                s = clause_scores(t, docs, tfs)
+                idxs = docs - gbase
+                ssum[idxs] = ssum[idxs] + s      # f32 step add
+                smax[idxs] = np.maximum(smax[idxs], s)
+                cnt[idxs] += 1
+            hit = cnt >= 1
+            if em is not None:
+                hit &= ~em
+            idxs = np.nonzero(hit)[0]
+            return idxs.astype(np.int64) + gbase, (
+                smax[idxs] + (ssum[idxs] - smax[idxs]) * tie
+            ).astype(np.float32)
+        if wand and k is not None:
+            # the pruning floor may only count live docs, so WAND reads
+            # the tombstones too (the skeleton's re-mask is then a no-op)
+            if g.deleted is not None:
+                em = g.deleted if em is None else em | g.deleted
+            return _wand_or(tis, wvs, cache, norms, gbase, span, k, mm,
+                            em, term_scores)
+        acc = np.zeros(span, dtype=np.float64)
+        cnt = np.zeros(span, dtype=np.int32)
+        for ti, t in zip(tis, tnames):
+            docs, tfs = ti.decode_all()
+            s = clause_scores(t, docs, tfs)
+            idxs = docs - gbase
+            acc[idxs] += s.astype(np.float64)
+            cnt[idxs] += 1
+        hit = cnt >= mm
+        if em is not None:
+            hit &= ~em
+        idxs = np.nonzero(hit)[0]
+        cand_scores = acc[idxs].astype(np.float32)
+        if sim is not None and sim["kind"] == "classic":
+            # coordFactors[m] applied to the f32 sum
+            # (BooleanScorer2 coordinator, TFIDFSimilarity.coord)
+            from lucene_solr_spark.functions.similarity import (
+                classic_coords,
             )
-            cand_docs, cand_scores = cand_docs[keep], cand_scores[keep]
-        if len(cand_docs) == 0:
-            return empty_result()
-        # bounded per-group top-k: score desc, doc asc (k=None: keep all)
-        if k is not None and len(cand_docs) > k:
-            # keep every candidate tied with the k-th score so the
-            # docID-asc tie-break resolves exactly at the boundary
-            thresh = cand_scores[np.argpartition(-cand_scores, k - 1)[k - 1]]
-            sel = cand_scores >= thresh
-            cand_docs, cand_scores = cand_docs[sel], cand_scores[sel]
-        order = np.lexsort((cand_docs, -cand_scores.astype(np.float64)))
-        if k is not None:
-            order = order[:k]
-        return pd.DataFrame(
-            {"doc_id": cand_docs[order], "score": cand_scores[order]}
-        )
 
-    def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        # cogroup.applyInPandas dispatches on arity (3 args would mean
-        # (key, left, right)) — keep the public kernel 2-arg and expose
-        # the batch-sharing variant separately
-        return score_group(posts, segs)
+            coords = classic_coords(sim["max_coord"])
+            cand_scores = (
+                cand_scores * coords[cnt[idxs]]
+            ).astype(np.float32)
+        return idxs.astype(np.int64) + gbase, cand_scores
 
-    kernel.with_shared = score_group  # type: ignore[attr-defined]
-    return kernel
+    return _kernel(body, k, after)
 
 
 def _wand_or(tis, wvs, cache, norms, gbase, span, k, mm, excl_mask,
@@ -3801,7 +3831,7 @@ def _wand_or(tis, wvs, cache, norms, gbase, span, k, mm, excl_mask,
 
 # -- exact phrase (ExactPhraseScorer analogue) ------------------------------
 
-def _decode_phrase_postings(posts: pd.DataFrame, uniq_terms,
+def _decode_phrase_postings(by_term: Dict[str, list], uniq_terms,
                             require_all: bool = True):
     """Shared decode for the positional kernels: {term: (docs, tfs,
     flat positions)} with positions aligned to np.repeat(docs, tfs).
@@ -3814,9 +3844,6 @@ def _decode_phrase_postings(posts: pd.DataFrame, uniq_terms,
         positions_from_deltas,
     )
 
-    by_term: Dict[str, list] = {}
-    for r in posts.sort_values("seg_id").itertuples(index=False):
-        by_term.setdefault(r.term, []).append(r)
     decoded = {}
     max_pos = 0
     for t in uniq_terms:
@@ -3834,13 +3861,7 @@ def _decode_phrase_postings(posts: pd.DataFrame, uniq_terms,
                 raise ValueError(
                     "phrase query on an index built without positions"
                 )
-            if r.df == 1:
-                d = np.array([r.sdoc], np.int64)
-                tf = np.array([r.stf], np.int32)
-            else:
-                d, tf = decode_postings(
-                    r.doc_ids_enc, r.tfs_enc, r.skips_enc
-                )
+            d, tf = _row_postings(r)
             cnts = (None if getattr(r, "pos_cnts", None) is None
                     else np.frombuffer(r.pos_cnts, "<i8"))
             deltas = decode_prox_parts(r.pos_enc, cnts, int(tf.sum()))
@@ -3857,145 +3878,73 @@ def _decode_phrase_postings(posts: pd.DataFrame, uniq_terms,
     return decoded, max_pos
 
 
+def _exact_phrase_freqs(decoded, offsets, max_pos: int
+                        ) -> Tuple[np.ndarray, np.ndarray]:
+    """ExactPhraseScorer as a sorted-key intersection: each (term,
+    offset) clause contributes the int64 key set
+    ``doc << shift | (pos - offset + offbase)``; the chained
+    intersection leaves one key per phrase occurrence, and the run
+    length over ``key >> shift`` is the per-doc phraseFreq.
+    Returns (docs ascending, freqs); an absent term yields no docs."""
+    offbase = max(off for _, off in offsets)
+    shift = max(21, int(max_pos + offbase + 1).bit_length())
+    keys = None
+    for t, off in offsets:
+        d, tf, pos = decoded[t]
+        kk = (np.repeat(d, tf) << shift) + (pos - off + offbase)
+        keys = kk if keys is None else np.intersect1d(
+            keys, kk, assume_unique=True
+        )
+        if len(keys) == 0:
+            break
+    return np.unique(keys >> shift, return_counts=True)
+
+
 def make_phrase_scorer(offsets, wv, cache: np.ndarray, k: Optional[int]):
     """Per-group kernel for exact phrase matching with position holes
     (search/ExactPhraseScorer.java:26-91; QueryParser builds hole-aware
     PhraseQuery positions from the analyzed stream,
-    queryparser/.../classic/QueryParserBase.java:570-616).
-
-    Vectorized shape: each (term, offset) clause contributes the sorted
-    int64 key set `doc << SHIFT | (pos - offset + OFFBASE)`; chained
-    sorted intersection leaves one key per phrase occurrence;
-    run-length over `key >> SHIFT` is the per-doc phraseFreq, scored
-    with the standard BM25 kernel where weight = sum of clause idfs
+    queryparser/.../classic/QueryParserBase.java:570-616): the
+    _exact_phrase_freqs key intersection, scored with the standard
+    BM25 kernel where weight = sum of clause idfs
     (BM25Similarity.java:185-198)."""
     uniq_terms = list(dict.fromkeys(t for t, _ in offsets))
-    offbase = max(off for _, off in offsets)
 
-    def empty_result():
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float32")})
-
-    def score_group(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        if len(posts) == 0 or len(segs) == 0:
-            return empty_result()
-        gbase, span, norms, deleted = _group_ctx(segs)
-
-        dec = _decode_phrase_postings(posts, uniq_terms)
+    def body(g: _Group):
+        dec = _decode_phrase_postings(g.by_term, uniq_terms)
         if dec is None:
-            return empty_result()  # conjunction: all terms required
-        decoded, max_pos = dec
+            return None  # conjunction: all terms required
+        docs, pf = _exact_phrase_freqs(dec[0], offsets, dec[1])
+        return docs, g.bm25(cache, wv, docs, pf)
 
-        shift = max(21, int(max_pos + offbase + 1).bit_length())
-        keys = None
-        for t, off in offsets:
-            d, tf, pos = decoded[t]
-            kk = (np.repeat(d, tf) << shift) + (pos - off + offbase)
-            keys = kk if keys is None else np.intersect1d(
-                keys, kk, assume_unique=True
-            )
-            if len(keys) == 0:
-                return empty_result()
-        docs_h = keys >> shift
-        udocs, counts = np.unique(docs_h, return_counts=True)
-        if deleted is not None and len(udocs):
-            keep = ~deleted[udocs - gbase]
-            udocs, counts = udocs[keep], counts[keep]
-        if len(udocs) == 0:
-            return empty_result()
-        pf = counts.astype(np.float32)
-        nrm = cache[norms[udocs - gbase].astype(np.int64)]
-        scores = ((wv * pf) / (pf + nrm)).astype(np.float32)
-
-        cand_docs, cand_scores = udocs, scores
-        if k is not None and len(cand_docs) > k:
-            thresh = cand_scores[np.argpartition(-cand_scores, k - 1)[k - 1]]
-            sel = cand_scores >= thresh
-            cand_docs, cand_scores = cand_docs[sel], cand_scores[sel]
-        order = np.lexsort((cand_docs, -cand_scores.astype(np.float64)))
-        if k is not None:
-            order = order[:k]
-        return pd.DataFrame(
-            {"doc_id": cand_docs[order], "score": cand_scores[order]}
-        )
-
-    def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        # cogroup.applyInPandas dispatches on arity (3 args would mean
-        # (key, left, right)) — keep the public kernel 2-arg and expose
-        # the batch-sharing variant separately
-        return score_group(posts, segs)
-
-    kernel.with_shared = score_group  # type: ignore[attr-defined]
-    return kernel
+    return _kernel(body, k)
 
 
 def make_phrase_windows_scorer(windows, cache: np.ndarray):
     """Per-group kernel for a pf2/pf3 FieldParams sub-query
     (search_phrase_windows): ``windows`` = [(offsets, wv_f32)]. Each
-    window runs the ExactPhraseScorer sorted-key intersection of
+    window runs the ExactPhraseScorer key intersection of
     make_phrase_scorer; its f32 BM25 score feeds a per-doc DOUBLE
     accumulator over the SHOULD windows, cast to f32 once — the
     union + sum(double) + cast(float) plan of the per-leg path,
-    fused into one postings pass."""
+    fused into one postings pass. Returns every match (no cut)."""
     uniq_terms = list(dict.fromkeys(
         t for offs, _ in windows for t, _ in offs))
-    offbase = max(off for offs, _ in windows for _, off in offs)
 
-    def empty_result():
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float32")})
-
-    def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        if len(posts) == 0 or len(segs) == 0:
-            return empty_result()
-        gbase, span, norms, deleted = _group_ctx(segs)
-        dec = _decode_phrase_postings(posts, uniq_terms,
-                                      require_all=False)
-        if dec is None:
-            return empty_result()
-        decoded, max_pos = dec
-        shift = max(21, int(max_pos + offbase + 1).bit_length())
-        flat = {t: (np.repeat(d, tf) << shift, pos)
-                for t, (d, tf, pos) in decoded.items()}
+    def body(g: _Group):
+        decoded, max_pos = _decode_phrase_postings(
+            g.by_term, uniq_terms, require_all=False)
         acc_docs, acc_sc = [], []
         for offs, wv in windows:
-            keys = None
-            for t, off in offs:
-                base, pos = flat[t]
-                if len(base) == 0:
-                    keys = None
-                    break
-                kk = base + (pos - off + offbase)
-                keys = kk if keys is None else np.intersect1d(
-                    keys, kk, assume_unique=True)
-                if len(keys) == 0:
-                    keys = None
-                    break
-            if keys is None:
-                continue
-            docs_h = keys >> shift
-            udocs, counts = np.unique(docs_h, return_counts=True)
-            if deleted is not None and len(udocs):
-                keep = ~deleted[udocs - gbase]
-                udocs, counts = udocs[keep], counts[keep]
-            if len(udocs) == 0:
-                continue
-            pf = counts.astype(np.float32)
-            nrm = cache[norms[udocs - gbase].astype(np.int64)]
-            sc = ((np.float32(wv) * pf) / (pf + nrm)).astype(np.float32)
-            acc_docs.append(udocs)
-            acc_sc.append(sc.astype(np.float64))
-        if not acc_docs:
-            return empty_result()
-        docs = np.concatenate(acc_docs)
-        scs = np.concatenate(acc_sc)
-        ud, inv = np.unique(docs, return_inverse=True)
+            docs, pf = _exact_phrase_freqs(decoded, offs, max_pos)
+            acc_docs.append(docs)
+            acc_sc.append(g.bm25(cache, wv, docs, pf).astype(np.float64))
+        ud, inv = np.unique(np.concatenate(acc_docs), return_inverse=True)
         sums = np.zeros(len(ud), np.float64)
-        np.add.at(sums, inv, scs)
-        return pd.DataFrame({"doc_id": ud,
-                             "score": sums.astype(np.float32)})
+        np.add.at(sums, inv, np.concatenate(acc_sc))
+        return ud, sums.astype(np.float32)
 
-    return kernel
+    return _kernel(body, None)
 
 
 def make_multi_phrase_scorer(slots, wv, cache: np.ndarray,
@@ -4019,20 +3968,9 @@ def make_multi_phrase_scorer(slots, wv, cache: np.ndarray,
     uniq_terms = list(dict.fromkeys(t for alts in slot_terms for t in alts))
     offbase = max(slot_offs)
 
-    def empty_result():
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float32")})
-
-    def score_group(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        if len(posts) == 0 or len(segs) == 0:
-            return empty_result()
-        gbase, span, norms, deleted = _group_ctx(segs)
-
-        dec = _decode_phrase_postings(posts, uniq_terms, require_all=False)
-        if dec is None:
-            return empty_result()
-        decoded, max_pos = dec
-
+    def body(g: _Group):
+        decoded, max_pos = _decode_phrase_postings(
+            g.by_term, uniq_terms, require_all=False)
         shift = max(21, int(max_pos + offbase + 1).bit_length())
         # union keys + per-group coarse df per slot
         slot_keys: list = []
@@ -4048,7 +3986,7 @@ def make_multi_phrase_scorer(slots, wv, cache: np.ndarray,
                 parts.append((np.repeat(d, tf) << shift)
                              + (pos - off + offbase))
             if not parts:
-                return empty_result()  # slot absent in this group
+                return None  # slot absent in this group
             kk = np.concatenate(parts)
             kk.sort()
             slot_keys.append(kk)
@@ -4064,7 +4002,7 @@ def make_multi_phrase_scorer(slots, wv, cache: np.ndarray,
                 cands = ds if cands is None else np.intersect1d(
                     cands, ds, assume_unique=True)
                 if len(cands) == 0:
-                    return empty_result()
+                    return None
             slot_ids = [f"\x00slot{i}" for i in range(len(slots))]
             docs_out, freqs_out = [], []
             for doc in cands:
@@ -4080,11 +4018,9 @@ def make_multi_phrase_scorer(slots, wv, cache: np.ndarray,
                 if fr > 0:
                     docs_out.append(int(doc))
                     freqs_out.append(np.float32(fr))
-            if not docs_out:
-                return empty_result()
-            return _finish(np.asarray(docs_out, np.int64),
-                           np.asarray(freqs_out, np.float32),
-                           gbase, norms, deleted)
+            udocs = np.asarray(docs_out, np.int64)
+            pf = np.asarray(freqs_out, np.float32)
+            return udocs, g.bm25(cache, wv, udocs, pf)
 
         # ascending coarse df; ties by position (PostingsAndFreq
         # compareTo: docFreq, then position) then slot index
@@ -4097,136 +4033,81 @@ def make_multi_phrase_scorer(slots, wv, cache: np.ndarray,
             inter = kk if inter is None else np.intersect1d(
                 inter, kk, assume_unique=True)
             if len(inter) == 0:
-                return empty_result()
+                return None
         lk = slot_keys[last]
         lo = np.searchsorted(lk, inter, side="left")
         hi = np.searchsorted(lk, inter, side="right")
         mult = (hi - lo).astype(np.int64)
         sel = mult > 0
-        if not sel.any():
-            return empty_result()
         keys, mult = inter[sel], mult[sel]
         docs_h = keys >> shift
         udocs = np.unique(docs_h)
         pf_per_doc = np.zeros(len(udocs), np.int64)
         np.add.at(pf_per_doc, np.searchsorted(udocs, docs_h), mult)
-        return _finish(udocs, pf_per_doc.astype(np.float32),
-                       gbase, norms, deleted)
+        return udocs, g.bm25(cache, wv, udocs,
+                             pf_per_doc.astype(np.float32))
 
-    def _finish(udocs, pf, gbase, norms, deleted):
-        if deleted is not None and len(udocs):
-            keep = ~deleted[udocs - gbase]
-            udocs, pf = udocs[keep], pf[keep]
-        if len(udocs) == 0:
-            return empty_result()
-        nrm = cache[norms[udocs - gbase].astype(np.int64)]
-        scores = ((wv * pf) / (pf + nrm)).astype(np.float32)
-        cand_docs, cand_scores = udocs, scores
-        if k is not None and len(cand_docs) > k:
-            thresh = cand_scores[np.argpartition(-cand_scores, k - 1)[k - 1]]
-            sel = cand_scores >= thresh
-            cand_docs, cand_scores = cand_docs[sel], cand_scores[sel]
-        order = np.lexsort((cand_docs, -cand_scores.astype(np.float64)))
-        if k is not None:
-            order = order[:k]
-        return pd.DataFrame(
-            {"doc_id": cand_docs[order], "score": cand_scores[order]}
-        )
-
-    def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        return score_group(posts, segs)
-
-    kernel.with_shared = score_group  # type: ignore[attr-defined]
-    return kernel
+    return _kernel(body, k)
 
 
 # -- sloppy phrase (SloppyPhraseScorer analogue) ----------------------------
 
-def make_sloppy_phrase_scorer(offsets, wv, cache: np.ndarray,
-                              k: Optional[int], slop: int):
-    """Per-group kernel for sloppy phrase matching
-    (search/SloppyPhraseScorer.java via search/sloppy.py): candidate
-    docs are the conjunction of all clause terms' doc sets (the
-    ConjunctionScorer walk driving the reference scorer), then each
-    candidate runs the exact greedy phraseFreq traversal; freq > 0 docs
-    are scored with the float sloppy freq through the standard BM25
-    kernel (weightValue * freq / (freq + norm),
-    BM25Similarity.java:233-238 with freq = sloppyFreq).
-
-    Scale: the candidate intersection is vectorized per partition; the
-    per-doc Python loop touches candidate docs only (post-conjunction),
-    linear in their position lists — the reference's own per-doc cost.
-    """
+def _sloppy_freqs(decoded, offsets, slop: int
+                  ) -> Tuple[np.ndarray, np.ndarray]:
+    """SloppyPhraseScorer freqs: candidate docs are the conjunction of
+    the clause terms' doc sets (the ConjunctionScorer walk driving the
+    reference scorer); each candidate runs the exact greedy phraseFreq
+    traversal of search/sloppy.py. Returns (docs ascending, f32 freq)
+    of the docs with freq > 0. The per-doc Python loop touches
+    post-conjunction candidates only, linear in their position lists —
+    the reference's own per-doc cost."""
     from lucene_solr_spark.search.sloppy import sloppy_phrase_freq
 
     uniq_terms = list(dict.fromkeys(t for t, _ in offsets))
+    cand = None
+    for t in uniq_terms:
+        d = decoded[t][0]
+        cand = d if cand is None else np.intersect1d(
+            cand, d, assume_unique=True
+        )
+        if len(cand) == 0:
+            break
+    slices = {}
+    for t in uniq_terms:
+        d, tf, pos = decoded[t]
+        ends = np.cumsum(tf)
+        idx = np.searchsorted(d, cand)
+        slices[t] = (ends[idx] - tf[idx], ends[idx], pos)
     clause_terms = [t for t, _ in offsets]
     clause_offs = [o for _, o in offsets]
+    pf = np.zeros(len(cand), np.float32)
+    for j in range(len(cand)):
+        arrs = []
+        for t in clause_terms:
+            s, e, pos = slices[t]
+            arrs.append(pos[s[j]:e[j]])
+        pf[j] = sloppy_phrase_freq(arrs, clause_offs, clause_terms, slop)
+    sel = pf > 0
+    return cand[sel], pf[sel]
 
-    def empty_result():
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float32")})
 
-    def score_group(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        if len(posts) == 0 or len(segs) == 0:
-            return empty_result()
-        gbase, span, norms, deleted = _group_ctx(segs)
-        dec = _decode_phrase_postings(posts, uniq_terms)
+def make_sloppy_phrase_scorer(offsets, wv, cache: np.ndarray,
+                              k: Optional[int], slop: int):
+    """Per-group kernel for sloppy phrase matching
+    (search/SloppyPhraseScorer.java via search/sloppy.py): the
+    _sloppy_freqs candidate loop, scored with the float sloppy freq
+    through the standard BM25 kernel (weightValue * freq / (freq +
+    norm), BM25Similarity.java:233-238 with freq = sloppyFreq)."""
+    uniq_terms = list(dict.fromkeys(t for t, _ in offsets))
+
+    def body(g: _Group):
+        dec = _decode_phrase_postings(g.by_term, uniq_terms)
         if dec is None:
-            return empty_result()
-        decoded, _ = dec
-        cand = None
-        for t in uniq_terms:
-            d = decoded[t][0]
-            cand = d if cand is None else np.intersect1d(
-                cand, d, assume_unique=True
-            )
-            if len(cand) == 0:
-                return empty_result()
-        if deleted is not None and len(cand):
-            cand = cand[~deleted[cand - gbase]]
-        if len(cand) == 0:
-            return empty_result()
-        slices = {}
-        for t in uniq_terms:
-            d, tf, pos = decoded[t]
-            ends = np.cumsum(tf)
-            starts = ends - tf
-            idx = np.searchsorted(d, cand)
-            slices[t] = (starts[idx], ends[idx], pos)
-        pf = np.zeros(len(cand), np.float32)
-        for j in range(len(cand)):
-            arrs = []
-            for t in clause_terms:
-                s, e, pos = slices[t]
-                arrs.append(pos[s[j]:e[j]])
-            pf[j] = sloppy_phrase_freq(
-                arrs, clause_offs, clause_terms, slop
-            )
-        sel = pf > 0
-        udocs, pfv = cand[sel], pf[sel]
-        if len(udocs) == 0:
-            return empty_result()
-        nrm = cache[norms[udocs - gbase].astype(np.int64)]
-        scores = ((wv * pfv) / (pfv + nrm)).astype(np.float32)
+            return None
+        docs, pf = _sloppy_freqs(dec[0], offsets, slop)
+        return docs, g.bm25(cache, wv, docs, pf)
 
-        cand_docs, cand_scores = udocs, scores
-        if k is not None and len(cand_docs) > k:
-            thresh = cand_scores[np.argpartition(-cand_scores, k - 1)[k - 1]]
-            sel2 = cand_scores >= thresh
-            cand_docs, cand_scores = cand_docs[sel2], cand_scores[sel2]
-        order = np.lexsort((cand_docs, -cand_scores.astype(np.float64)))
-        if k is not None:
-            order = order[:k]
-        return pd.DataFrame(
-            {"doc_id": cand_docs[order], "score": cand_scores[order]}
-        )
-
-    def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        return score_group(posts, segs)
-
-    kernel.with_shared = score_group  # type: ignore[attr-defined]
-    return kernel
+    return _kernel(body, k)
 
 
 # -- span queries (SpanScorer + spans algebra) ------------------------------
@@ -4248,10 +4129,6 @@ def make_span_scorer(span, wv, cache: np.ndarray, k: Optional[int]):
     from lucene_solr_spark.search import spans as SP
 
     uniq_terms = list(dict.fromkeys(SP.positions_terms(span)))
-
-    def empty_result():
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float32")})
 
     def node_docs(node, decoded):
         if isinstance(node, SP.SpanTerm):
@@ -4276,22 +4153,12 @@ def make_span_scorer(span, wv, cache: np.ndarray, k: Optional[int]):
             return node_docs(node.match, decoded)
         raise TypeError(f"not a span node: {node!r}")
 
-    def score_group(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        if len(posts) == 0 or len(segs) == 0:
-            return empty_result()
-        gbase, span_w, norms, deleted = _group_ctx(segs)
-        dec = _decode_phrase_postings(posts, uniq_terms,
-                                      require_all=False)
-        if dec is None:
-            return empty_result()
-        decoded, _ = dec
+    def body(g: _Group):
+        decoded, _ = _decode_phrase_postings(g.by_term, uniq_terms,
+                                             require_all=False)
         cand = node_docs(span, decoded)
         if cand is None or len(cand) == 0:
-            return empty_result()
-        if deleted is not None:
-            cand = cand[~deleted[cand - gbase]]
-        if len(cand) == 0:
-            return empty_result()
+            return None
         slices = {}
         for t in uniq_terms:
             d, tf, pos = decoded[t]
@@ -4315,28 +4182,10 @@ def make_span_scorer(span, wv, cache: np.ndarray, k: Optional[int]):
 
             pf[j] = SP.span_freq(span, pos_of)
         sel = pf > 0
-        udocs, pfv = cand[sel], pf[sel]
-        if len(udocs) == 0:
-            return empty_result()
-        nrm = cache[norms[udocs - gbase].astype(np.int64)]
-        scores = ((wv * pfv) / (pfv + nrm)).astype(np.float32)
-        cand_docs, cand_scores = udocs, scores
-        if k is not None and len(cand_docs) > k:
-            thresh = cand_scores[np.argpartition(-cand_scores, k - 1)[k - 1]]
-            sel2 = cand_scores >= thresh
-            cand_docs, cand_scores = cand_docs[sel2], cand_scores[sel2]
-        order = np.lexsort((cand_docs, -cand_scores.astype(np.float64)))
-        if k is not None:
-            order = order[:k]
-        return pd.DataFrame(
-            {"doc_id": cand_docs[order], "score": cand_scores[order]}
-        )
+        docs = cand[sel]
+        return docs, g.bm25(cache, wv, docs, pf[sel])
 
-    def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        return score_group(posts, segs)
-
-    kernel.with_shared = score_group  # type: ignore[attr-defined]
-    return kernel
+    return _kernel(body, k)
 
 
 # -- mixed boolean queries (BooleanScorer2 composition) ---------------------
@@ -4355,184 +4204,67 @@ def make_boolean_scorer(clauses: List[dict], cache: np.ndarray,
       MUST_NOT       -> ReqExclScorer doc removal (ReqExclScorer.java)
       no MUST        -> plain disjunction (+ optional mm)
 
-    Clause kinds: 'term' (TermScorer), 'phrase' (ExactPhraseScorer),
-    'prefix' (CONSTANT_SCORE rewrite: matching docs score 1.0,
-    MultiTermQuery.java:107-116), 'multi' (SCORING_BOOLEAN rewrite of a
-    fuzzy/multi-term expansion: an inner disjunction)."""
+    Clause kinds: 'term' (TermScorer), 'phrase' (ExactPhraseScorer, or
+    SloppyPhraseScorer with slop > 0), 'prefix' (CONSTANT_SCORE
+    rewrite: matching docs score 1.0, MultiTermQuery.java:107-116),
+    'docset' (the same over a filter-rewrite postings scan), 'multi'
+    (SCORING_BOOLEAN rewrite of a fuzzy/multi-term expansion: an inner
+    disjunction)."""
+    no_docs = (np.empty(0, np.int64), np.empty(0, np.float32))
 
-    def empty_result():
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float32")})
-
-    def score_group(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        if len(posts) == 0 or len(segs) == 0:
-            return empty_result()
-        gbase, span, norms, deleted = _group_ctx(segs)
-
-        # docset clauses ride in with a _cl tag (>= 0); term-addressed
-        # clauses use the _cl == -1 rows (or everything when untagged)
-        by_clause: Dict[int, pd.DataFrame] = {}
-        if "_cl" in posts.columns:
-            cl = posts["_cl"].to_numpy()
-            for c_id in np.unique(cl[cl >= 0]):
-                by_clause[int(c_id)] = posts[cl == c_id]
-            posts = posts[cl == -1]
-
-        by_term: Dict[str, list] = {}
-        for r in posts.sort_values("seg_id").itertuples(index=False):
-            by_term.setdefault(r.term, []).append(r)
-
-        def term_arrays(t: str):
-            rows = by_term.get(t)
-            if not rows:
-                return None
-            ti = _TermIndex(rows, norms, gbase)
-            return ti.decode_all()
-
-        def scored(wv, docs, tfs):
-            freq = tfs.astype(np.float32)
-            nrm = cache[norms[docs - gbase].astype(np.int64)]
-            return ((F32(wv) * freq) / (freq + nrm)).astype(np.float32)
-
-        from lucene_solr_spark.indexing.codec import (
-            decode_prox_parts,
-            positions_from_deltas,
-        )
+    def body(g: _Group):
+        gbase, span = g.gbase, g.span
 
         def eval_phrase(c):
-            decoded = {}
-            max_pos = 0
-            for t in c["terms"]:
-                rows = by_term.get(t)
-                if not rows:
-                    return (np.empty(0, np.int64), np.empty(0, np.float32))
-                dparts, tparts, pparts = [], [], []
-                for r in rows:
-                    if r.df == 1:
-                        d = np.array([r.sdoc], np.int64)
-                        tf = np.array([r.stf], np.int32)
-                    else:
-                        d, tf = decode_postings(
-                            r.doc_ids_enc, r.tfs_enc, r.skips_enc
-                        )
-                    cnts = (None if getattr(r, "pos_cnts", None) is None
-                            else np.frombuffer(r.pos_cnts, "<i8"))
-                    pos = positions_from_deltas(
-                        decode_prox_parts(r.pos_enc, cnts, int(tf.sum())),
-                        tf,
-                    )
-                    dparts.append(d)
-                    tparts.append(tf)
-                    pparts.append(pos)
-                d = np.concatenate(dparts)
-                tf = np.concatenate(tparts)
-                pos = np.concatenate(pparts)
-                if len(pos):
-                    max_pos = max(max_pos, int(pos.max()))
-                decoded[t] = (d, tf, pos)
+            dec = _decode_phrase_postings(
+                g.by_term, list(dict.fromkeys(c["terms"])))
+            if dec is None:
+                return no_docs
             if c.get("slop", 0) > 0:
                 # SloppyPhraseScorer clause inside a boolean tree
-                from lucene_solr_spark.search.sloppy import (
-                    sloppy_phrase_freq,
-                )
-
-                cand = None
-                for t in c["terms"]:
-                    d = decoded[t][0]
-                    cand = d if cand is None else np.intersect1d(
-                        cand, d, assume_unique=True
-                    )
-                    if len(cand) == 0:
-                        return (np.empty(0, np.int64),
-                                np.empty(0, np.float32))
-                slices = {}
-                for t in c["terms"]:
-                    d, tf, pos = decoded[t]
-                    ends = np.cumsum(tf)
-                    idx = np.searchsorted(d, cand)
-                    slices[t] = (ends[idx] - tf[idx], ends[idx], pos)
-                cl_terms = [t for t, _ in c["offsets"]]
-                cl_offs = [o for _, o in c["offsets"]]
-                pf = np.zeros(len(cand), np.float32)
-                for j in range(len(cand)):
-                    arrs = []
-                    for t in cl_terms:
-                        st, en, pos = slices[t]
-                        arrs.append(pos[st[j]:en[j]])
-                    pf[j] = sloppy_phrase_freq(
-                        arrs, cl_offs, cl_terms, c["slop"]
-                    )
-                sel = pf > 0
-                udocs, pfv = cand[sel], pf[sel]
-                if len(udocs) == 0:
-                    return (np.empty(0, np.int64),
-                            np.empty(0, np.float32))
-                nrm = cache[norms[udocs - gbase].astype(np.int64)]
-                s = ((F32(c["wv"]) * pfv) / (pfv + nrm)).astype(
-                    np.float32
-                )
-                return udocs, s
-            offbase = max(off for _, off in c["offsets"])
-            shift = max(21, int(max_pos + offbase + 1).bit_length())
-            keys = None
-            for t, off in c["offsets"]:
-                d, tf, pos = decoded[t]
-                kk = (np.repeat(d, tf) << shift) + (pos - off + offbase)
-                keys = kk if keys is None else np.intersect1d(
-                    keys, kk, assume_unique=True
-                )
-                if len(keys) == 0:
-                    return (np.empty(0, np.int64), np.empty(0, np.float32))
-            udocs, counts = np.unique(keys >> shift, return_counts=True)
-            pf = counts.astype(np.float32)
-            nrm = cache[norms[udocs - gbase].astype(np.int64)]
-            s = ((F32(c["wv"]) * pf) / (pf + nrm)).astype(np.float32)
-            return udocs, s
+                docs, pf = _sloppy_freqs(dec[0], c["offsets"], c["slop"])
+            else:
+                docs, pf = _exact_phrase_freqs(dec[0], c["offsets"],
+                                               dec[1])
+            return docs, g.bm25(cache, c["wv"], docs, pf)
 
         def eval_clause(c):
             """-> (docs sorted asc, f32 scores)."""
             if c["kind"] == "term":
-                arr = term_arrays(c["terms"][0])
+                arr = g.postings(c["terms"][0])
                 if arr is None:
-                    return (np.empty(0, np.int64), np.empty(0, np.float32))
+                    return no_docs
                 docs, tfs = arr
-                return docs, scored(c["wv"], docs, tfs)
+                return docs, g.bm25(cache, c["wv"], docs, tfs)
             if c["kind"] == "phrase":
                 return eval_phrase(c)
-            if c["kind"] == "prefix":
-                parts = [term_arrays(t) for t in c["terms"]]
-                parts = [p[0] for p in parts if p is not None]
+            if c["kind"] in ("prefix", "docset"):
+                if c["kind"] == "prefix":
+                    parts = [g.postings(t) for t in c["terms"]]
+                    parts = [p[0] for p in parts if p is not None]
+                else:
+                    # filter-rewrite constant-score: union the doc
+                    # arrays of every tagged postings row (no term
+                    # addressing at all)
+                    rows = g.by_clause.get(c["cl"])
+                    parts = ([] if rows is None else
+                             [_row_postings(r)[0]
+                              for r in rows.itertuples(index=False)])
                 if not parts:
-                    return (np.empty(0, np.int64), np.empty(0, np.float32))
-                docs = np.unique(np.concatenate(parts))
-                return docs, np.ones(len(docs), dtype=np.float32)
-            if c["kind"] == "docset":
-                # filter-rewrite constant-score: union the doc arrays of
-                # every tagged postings row (no term addressing at all)
-                rows = by_clause.get(c["cl"])
-                if rows is None or len(rows) == 0:
-                    return (np.empty(0, np.int64), np.empty(0, np.float32))
-                parts = []
-                for r in rows.itertuples(index=False):
-                    if r.df == 1:
-                        parts.append(np.array([r.sdoc], np.int64))
-                    else:
-                        d, _ = decode_postings(
-                            r.doc_ids_enc, r.tfs_enc, r.skips_enc
-                        )
-                        parts.append(d)
+                    return no_docs
                 docs = np.unique(np.concatenate(parts))
                 return docs, np.ones(len(docs), dtype=np.float32)
             if c["kind"] == "multi":  # inner scoring disjunction
                 acc = np.zeros(span, dtype=np.float64)
                 seen = np.zeros(span, dtype=bool)
                 for t, wv in zip(c["terms"], c["wvs"]):
-                    arr = term_arrays(t)
+                    arr = g.postings(t)
                     if arr is None:
                         continue
                     docs, tfs = arr
                     ix = docs - gbase
-                    acc[ix] += scored(wv, docs, tfs).astype(np.float64)
+                    acc[ix] += g.bm25(cache, wv, docs, tfs).astype(
+                        np.float64)
                     seen[ix] = True
                 ix = np.nonzero(seen)[0]
                 return (ix.astype(np.int64) + gbase,
@@ -4551,13 +4283,13 @@ def make_boolean_scorer(clauses: List[dict], cache: np.ndarray,
             for _, c in musts:
                 docs, sc = eval_clause(c)
                 if len(docs) == 0:
-                    return empty_result()
+                    return None
                 evs.append((docs, sc))
             cand = evs[0][0]
             for docs, _ in evs[1:]:
                 cand = cand[np.isin(cand, docs, assume_unique=True)]
                 if len(cand) == 0:
-                    return empty_result()
+                    return None
             req = np.zeros(len(cand), dtype=np.float32)
             for docs, sc in evs:  # f32 sum in ascending-cost order
                 pos = np.searchsorted(docs, cand)
@@ -4594,33 +4326,12 @@ def make_boolean_scorer(clauses: List[dict], cache: np.ndarray,
             cand_docs = ix.astype(np.int64) + gbase
             cand_scores = acc[ix].astype(np.float32)
 
-        if (nots or deleted is not None) and len(cand_docs):
-            ex = (np.zeros(span, dtype=bool) if deleted is None
-                  else deleted.copy())
+        if nots and len(cand_docs):
+            ex = np.zeros(span, dtype=bool)
             for c in nots:
-                docs, _ = eval_clause(c)
-                ex[docs - gbase] = True
+                ex[eval_clause(c)[0] - gbase] = True
             keep = ~ex[cand_docs - gbase]
             cand_docs, cand_scores = cand_docs[keep], cand_scores[keep]
+        return cand_docs, cand_scores
 
-        if len(cand_docs) == 0:
-            return empty_result()
-        if k is not None and len(cand_docs) > k:
-            thresh = cand_scores[np.argpartition(-cand_scores, k - 1)[k - 1]]
-            sel = cand_scores >= thresh
-            cand_docs, cand_scores = cand_docs[sel], cand_scores[sel]
-        order = np.lexsort((cand_docs, -cand_scores.astype(np.float64)))
-        if k is not None:
-            order = order[:k]
-        return pd.DataFrame(
-            {"doc_id": cand_docs[order], "score": cand_scores[order]}
-        )
-
-    def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        # cogroup.applyInPandas dispatches on arity (3 args would mean
-        # (key, left, right)) — keep the public kernel 2-arg and expose
-        # the batch-sharing variant separately
-        return score_group(posts, segs)
-
-    kernel.with_shared = score_group  # type: ignore[attr-defined]
-    return kernel
+    return _kernel(body, k)

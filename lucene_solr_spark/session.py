@@ -65,8 +65,8 @@ def get_spark(
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # UI off by default (saves driver memory/port churn in tests);
-        # LSS_UI=1 turns it on so profiling runs can read the REST
-        # stage-metrics API (tools/profile_stages.py)
+        # LSS_UI=1 turns it on for live inspection (per-stage metrics of
+        # a run: the perfbench ledger, perfbench/run.py --trace 1)
         .config("spark.ui.enabled", os.environ.get("LSS_UI", "false"))
     )
     return builder.getOrCreate()

@@ -5,6 +5,8 @@ source."""
 
 import re
 
+from reference_files import require_reference_file
+
 from lucene_solr_spark.functions.classicstemmers import (
     CLASSIC_STEMMERS,
     arabic_stem,
@@ -15,6 +17,7 @@ REF = "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/analysi
 
 
 def test_german_reference_vocabulary():
+    require_reference_file(f"{REF}/de/data.txt")
     pairs = []
     for line in open(f"{REF}/de/data.txt", encoding="utf-8"):
         line = line.strip()
@@ -30,6 +33,7 @@ def test_german_reference_vocabulary():
 
 
 def test_arabic_reference_vectors():
+    require_reference_file(f"{REF}/ar/TestArabicStemFilter.java")
     src = open(f"{REF}/ar/TestArabicStemFilter.java",
                encoding="utf-8").read()
     pairs = re.findall(r'check\("([^"]+)",\s*"([^"]+)"\)', src)
@@ -50,6 +54,7 @@ def test_brazilian_reference_vectors():
         brazilian_stem_filter,
     )
 
+    require_reference_file(f"{REF}/br/TestBrazilianStemmer.java")
     src = open(f"{REF}/br/TestBrazilianStemmer.java",
                encoding="utf-8").read()
     pairs = re.findall(r'check\("([^"]+)",\s*"([^"]+)"\)', src)

@@ -5,6 +5,8 @@ GreekAnalyzerTest assertAnalyzesTo vectors for the casefold."""
 
 import re
 
+from reference_files import require_reference_file
+
 from lucene_solr_spark.functions.greekstemmer import (
     greek_lowercase,
     greek_stem,
@@ -15,6 +17,7 @@ REF = "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/analysi
 
 
 def test_full_reference_vectors():
+    require_reference_file(f"{REF}/el/TestGreekStemmer.java")
     src = open(f"{REF}/el/TestGreekStemmer.java", encoding="utf-8").read()
     pairs = re.findall(r'checkOneTerm\(a,\s*"([^"]+)",\s*"([^"]+)"\)', src)
     assert len(pairs) >= 300

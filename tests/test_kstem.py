@@ -5,12 +5,15 @@ pairs)."""
 import io
 import zipfile
 
+from reference_files import require_reference_file
+
 from lucene_solr_spark.functions.kstem import kstem
 
 REF = "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/analysis"
 
 
 def test_full_reference_vocabulary():
+    require_reference_file(f"{REF}/en/kstemTestData.zip")
     with zipfile.ZipFile(f"{REF}/en/kstemTestData.zip") as z:
         raw = z.read("kstem_examples.txt").decode("utf-8")
     pairs = []

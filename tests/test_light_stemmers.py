@@ -13,6 +13,7 @@ import os
 import zipfile
 
 import pytest
+from reference_files import require_reference_file
 
 from lucene_solr_spark.functions.lightstemmers import (
     LIGHT_STEMMERS,
@@ -79,6 +80,7 @@ def _load_pairs(path, member):
     "stem,path,member", VOCABS,
     ids=[os.path.basename(v[1]) for v in VOCABS])
 def test_full_reference_vocabulary(stem, path, member):
+    require_reference_file(path)
     pairs = _load_pairs(path, member)
     # the zip vocabularies are 10k-55k pairs; the hand-crafted
     # Norwegian nb_*.txt lists are ~80

@@ -13,8 +13,8 @@
 """
 
 import numpy as np
-import pandas as pd
 import pytest
+from postings_fixture import encode_group
 
 from lucene_solr_spark.search.executor import (
     IndexSearcher,
@@ -49,70 +49,14 @@ def reference_union_exact_freq(slot_positions, offsets, slot_order):
 
 
 def run_kernel(slots, docs_positions, k=10, slop=0):
-    """Drive make_multi_phrase_scorer's score_group on a synthetic
-    single-group postings frame (bypassing the codec: feed the decoded
-    shape through a stub _decode_phrase_postings via monkeypatching is
-    heavier than just building tiny encoded postings — instead use the
-    real codec encoders)."""
-    from lucene_solr_spark.functions.smallfloat import encode_norm
-    from lucene_solr_spark.indexing.codec import (
-        deltas_from_positions,
-        encode_postings,
-        encode_prox,
-    )
+    """Drive make_multi_phrase_scorer on one synthetic scoring group
+    encoded with the real codec (postings_fixture.encode_group)."""
+    from lucene_solr_spark.functions.bm25 import K1_PLUS_1, idf
 
-    max_doc = max(docs_positions) + 1
-    doc_lens = {d: sum(len(v) for v in pos.values())
-                for d, pos in docs_positions.items()}
-    with np.errstate(divide="ignore"):
-        norms = np.asarray(
-            [int(encode_norm(doc_lens.get(d, 0)))
-             for d in range(max_doc)], np.uint8)
-
-    terms = sorted({t for alts, _ in slots for t in alts})
-    rows = []
-    for t in terms:
-        docs = sorted(d for d, pos in docs_positions.items()
-                      if t in pos and pos[t])
-        if not docs:
-            continue
-        tfs = [len(docs_positions[d][t]) for d in docs]
-        flat = [p for d in docs for p in sorted(docs_positions[d][t])]
-        d_arr = np.asarray(docs, np.int64)
-        tf_arr = np.asarray(tfs, np.int32)
-        pos_enc = encode_prox(
-            deltas_from_positions(np.asarray(flat, np.int64), tf_arr))
-        if len(docs) == 1:
-            rows.append(dict(term=t, seg_id=0, df=1,
-                             sdoc=int(docs[0]), stf=int(tfs[0]),
-                             doc_ids_enc=None, tfs_enc=None,
-                             skips_enc=None,
-                             pos_cnts=None, pos_enc=pos_enc))
-        else:
-            enc = encode_postings(d_arr, tf_arr, norms[d_arr])
-            rows.append(dict(term=t, seg_id=0, df=len(docs),
-                             sdoc=None, stf=None,
-                             doc_ids_enc=enc[0], tfs_enc=enc[1],
-                             skips_enc=enc[2],
-                             pos_cnts=None, pos_enc=pos_enc))
-    posts = pd.DataFrame(rows)
-    segs = pd.DataFrame([dict(
-        seg_id=0, doc_base=0, doc_count=max_doc,
-        norms_enc=norms.tobytes())])
-    from lucene_solr_spark.functions.bm25 import (
-        K1_PLUS_1,
-        avgdl,
-        idf,
-        norm_cache,
-    )
-    from lucene_solr_spark.constants import B, K1
-
-    sum_ttf = sum(doc_lens.values())
-    cache = norm_cache(avgdl(sum_ttf, max_doc), K1, B)
+    posts, segs, cache = encode_group(docs_positions)
+    max_doc = int(segs["doc_count"].sum())
+    dfs = dict(zip(posts["term"], posts["df"]))
     w = F32(0.0)
-    dfs = {t: sum(1 for d in docs_positions
-                  if t in docs_positions[d] and docs_positions[d][t])
-           for t in terms}
     for alts, _ in slots:
         for t in alts:
             w = F32(w + idf(dfs.get(t, 0), max_doc))

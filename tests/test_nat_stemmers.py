@@ -7,6 +7,7 @@ plain-stemmer test methods becomes a (word, stem) pair here."""
 import re
 
 import pytest
+from reference_files import require_reference_file
 
 from lucene_solr_spark.functions.natstemmers import (
     NAT_STEMMERS,
@@ -59,6 +60,7 @@ def _vectors(path, skip_methods):
     "stem,path,floor,skip", CASES,
     ids=[c[1].split("/")[0] for c in CASES])
 def test_reference_vectors(stem, path, floor, skip):
+    require_reference_file(f"{REF}/{path}")
     pairs = _vectors(f"{REF}/{path}", skip)
     assert len(pairs) >= floor, f"extraction too small for {path}"
     # assertAnalyzesTo runs the full analyzer chain, which lowercases
@@ -72,6 +74,7 @@ def test_reference_vectors(stem, path, floor, skip):
 def test_inflectional_indonesian():
     # TestIndonesianStemmer.testInflectionalOnly runs with
     # stemDerivational=false
+    require_reference_file(f"{REF}/id/TestIndonesianStemmer.java")
     src = open(f"{REF}/id/TestIndonesianStemmer.java",
                encoding="utf-8").read()
     body = src.split("testInflectionalOnly")[1].split(

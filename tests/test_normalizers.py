@@ -5,6 +5,7 @@ HindiNormalizer,GermanNormalization}Filter/.java sources."""
 import re
 
 import pytest
+from reference_files import require_reference_file
 
 from lucene_solr_spark.functions.normalizers import (
     NORMALIZERS,
@@ -36,6 +37,7 @@ CASES = [
 @pytest.mark.parametrize(
     "fn,path,floor", CASES, ids=[c[1].split("/")[0] for c in CASES])
 def test_reference_vectors(fn, path, floor):
+    require_reference_file(f"{REF}/{path}")
     src = open(f"{REF}/{path}", encoding="utf-8").read()
     pairs = [(_unesc(w), _unesc(e)) for w, e in _PAIR.findall(src)]
     assert len(pairs) >= floor, f"extraction too small: {len(pairs)}"

@@ -7,6 +7,7 @@ import io
 import zipfile
 
 import pytest
+from reference_files import require_reference_file
 
 from lucene_solr_spark.functions.rslpstemmer import (
     RSLP_STEMMERS,
@@ -45,6 +46,7 @@ def _load_pairs(path, member):
     "stem,path,member", VOCABS,
     ids=[v[2] for v in VOCABS])
 def test_full_reference_vocabulary(stem, path, member):
+    require_reference_file(path)
     pairs = _load_pairs(path, member)
     assert len(pairs) > 1000, f"suspiciously small vocabulary: {path}"
     bad = [(w, e, stem(w)) for w, e in pairs if stem(w) != e]

@@ -5,9 +5,11 @@ every language must stem EXACTLY; the transpiled classes
 (snowball_ext.py) execute on the ported string machine
 (snowball_runtime.py)."""
 
+import os
 import zipfile
 
 import pytest
+from reference_files import require_reference_file
 
 from lucene_solr_spark.functions.snowball_ext import SNOWBALL_CLASSES
 
@@ -28,6 +30,8 @@ LANGS = {
 
 
 def _available():
+    if not os.path.exists(ZIP):
+        return [None]  # one case, skipped by its guard
     with zipfile.ZipFile(ZIP) as z:
         dirs = {n.split("/")[0] for n in z.namelist() if "/" in n}
     return sorted(d for d in dirs if d in LANGS)
@@ -35,6 +39,7 @@ def _available():
 
 @pytest.mark.parametrize("lang", _available())
 def test_full_reference_vocabulary(lang):
+    require_reference_file(ZIP)
     cls = SNOWBALL_CLASSES[LANGS[lang]]
     with zipfile.ZipFile(ZIP) as z:
         voc = z.read(f"{lang}/voc.txt").decode("utf-8").splitlines()

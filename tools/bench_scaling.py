@@ -10,7 +10,7 @@ only the tokenizer, no Spark) measures 542 -> 3705 -> 10992 docs/s at
 4->16 reaches 3.82x (0.96). On a real cluster each executor brings its
 own memory bus and disks, so the 4-vs-16 point is the faithful proxy
 for N-vs-4N executors; the 8-vs-32 point measures the VM, not the
-engine. Both controls are reproducible via tools/profile_stages.py.
+engine. The per-phase build split is perfbench/run.py --trace 1.
 
 Writes BENCH_SCALING.json and prints a summary.
 """
