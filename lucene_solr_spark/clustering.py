@@ -40,6 +40,7 @@ from __future__ import annotations
 from typing import Dict, List
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -122,7 +123,11 @@ def stc_clusters(df: DataFrame, text_col: str = "text",
     path runs: pairwise-overlap aggregation for the union-find
     metadata, membership stays on the executors."""
     spark = df.sparkSession
-    df = df.persist()
+    # cache the hit set for the call unless the caller already did;
+    # a caller's cache must outlive the call
+    own_cache = df.storageLevel == StorageLevel.NONE
+    if own_cache:
+        df = df.persist()
     member_all = _phrases(df, text_col, id_col, analyzer,
                           min_phrase_len, max_phrase_len).persist()
     base = (member_all.groupBy("phrase", "n")
@@ -138,7 +143,8 @@ def stc_clusters(df: DataFrame, text_col: str = "text",
         member_all.unpersist(blocking=False)
         docs = sorted(r["doc_id"]
                       for r in df.select(id_col).distinct().collect())
-        df.unpersist(blocking=False)
+        if own_cache:
+            df.unpersist(blocking=False)
         return spark.createDataFrame(
             [(other_label, len(docs),
               0.0, ",".join(str(d) for d in docs))],
@@ -192,7 +198,8 @@ def stc_clusters(df: DataFrame, text_col: str = "text",
         hit_ids = {int(r[0])
                    for r in df.select(id_col).distinct().collect()}
         member_all.unpersist(blocking=False)
-        df.unpersist(blocking=False)
+        if own_cache:
+            df.unpersist(blocking=False)
         sets = [plists.get(p, set()) for p in sel]
         merge_pairs(
             (sel[i], sel[j], len(sets[i] & sets[j]))
@@ -257,7 +264,8 @@ def stc_clusters(df: DataFrame, text_col: str = "text",
     rows = (out.withColumn("n_docs", F.col("n_docs").cast("long"))
             .orderBy(F.desc("score"), F.asc("label")).collect())
     member_all.unpersist(blocking=False)
-    df.unpersist(blocking=False)
+    if own_cache:
+        df.unpersist(blocking=False)
     return spark.createDataFrame(
         rows, "label string, n_docs long, score double, docs_csv string"
     ).orderBy(F.desc("score"), F.asc("label"))

@@ -184,8 +184,21 @@ def _composite_key() -> F.Column:
     )
 
 
-def compute_key_bounds(corpus: DataFrame, num_buckets: int) -> List[str]:
-    """DETERMINISTIC key-range boundaries (num_buckets-1 composite keys).
+# Key buckets are sized from the corpus, never from the cluster: about
+# DOCS_PER_BUCKET docs each, at least one per batch, at most MAX_BUCKETS
+# (the bounds ride in snapshot props). Segments cut at bucket
+# transitions, so the layout is a pure function of the data.
+DOCS_PER_BUCKET = 256
+MAX_BUCKETS = 128
+
+
+def bucket_count(n_docs: int, n_batches: int = 1) -> int:
+    return min(MAX_BUCKETS, max(n_batches, -(-n_docs // DOCS_PER_BUCKET)))
+
+
+def compute_key_bounds(corpus: DataFrame, n_batches: int = 1) -> List[str]:
+    """DETERMINISTIC key-range boundaries (bucket_count - 1 composite
+    keys; the bucket count follows from the corpus row count).
 
     Spark's repartitionByRange samples with an RDD-id-dependent seed, so
     two jobs over the same data can disagree on boundaries — fatal here,
@@ -201,9 +214,10 @@ def compute_key_bounds(corpus: DataFrame, num_buckets: int) -> List[str]:
     # Target ~64 samples per boundary; the whole pipeline stays in
     # whole-stage codegen with only the sampled keys crossing to the
     # driver, so the cost is one pruned scan regardless of corpus size.
-    n = corpus.count()
+    n = int(corpus.count())
+    num_buckets = bucket_count(n, n_batches)
     target = max(num_buckets * 64, 4096)
-    mod = max(int(n) // target, 1)
+    mod = max(n // target, 1)
     samp = sorted(
         r["k"]
         for r in keys.filter(
@@ -744,16 +758,9 @@ class IndexWriter:
         )
         if resume and snap is not None:
             return snap
-        # bucket granularity: several buckets per core so the tokenize
-        # stage load-balances (doc lengths vary); bounds recorded in
-        # props, so every job and every resumed process reproduces the
-        # identical bucketing. Floor of 128: bucket layout is a DATA
-        # property, not a cluster property — a low-parallelism session
-        # must not produce coarse buckets (they lengthen the straggler
-        # tail and make docID layout depend on who built the index;
-        # docIDs themselves are P-invariant, but task balance is not).
-        P = max(128, 4 * self.spark.sparkContext.defaultParallelism)
-        bounds = compute_key_bounds(corpus, P)
+        # bounds recorded in props, so every job and every resumed
+        # process reproduces the identical bucketing
+        bounds = compute_key_bounds(corpus, self.n_batches)
         counts = count_keys_per_bucket(corpus, bounds)
         _, n_docs = offsets_from_counts(counts)
         return self.catalog.commit(
@@ -1196,8 +1203,7 @@ def append_documents(
     # one Arrow crossing; new docIDs continue the dense space at n0, so
     # appended segments (seg_id = doc_base >= n0) slot into existing
     # scoring groups by construction
-    par = spark.sparkContext.defaultParallelism
-    bounds = compute_key_bounds(corpus, 4 * par)
+    bounds = compute_key_bounds(corpus)
     keyed = _keyed_corpus(corpus, bounds)
     counts = count_keys_per_bucket(corpus, bounds)
     offsets, n_new = offsets_from_counts(counts, base=n0)

@@ -68,5 +68,8 @@ def get_spark(
         # LSS_UI=1 turns it on for live inspection (per-stage metrics of
         # a run: the perfbench ledger, perfbench/run.py --trace 1)
         .config("spark.ui.enabled", os.environ.get("LSS_UI", "false"))
+        # python workers fork from a daemon that keeps zip directories
+        # cached across tasks and preloads the kernel modules
+        .config("spark.python.daemon.module", "lucene_solr_spark.pyworker")
     )
     return builder.getOrCreate()

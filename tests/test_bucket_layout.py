@@ -1,0 +1,68 @@
+"""Write-path layout is a pure function of the data: the key-bucket
+count follows from the corpus size and the batch count, never from the
+session's parallelism, so the bounds, the per-bucket counts and the
+segment lineage are byte-identical at any core count."""
+
+import json
+
+import pytest
+from pyspark import SparkContext
+
+from lucene_solr_spark.catalog import Catalog
+from lucene_solr_spark.corpusgen import CORPUS_SCHEMA, corpus_rows, row
+from lucene_solr_spark.indexing.build import (
+    IndexWriter,
+    _as_list,
+    _is_meta_col,
+    append_documents,
+    bucket_count,
+)
+
+
+@pytest.mark.parametrize("n_docs, n_batches, want", [
+    (64, 1, 1),
+    (120, 2, 2),
+    (300, 3, 3),
+    (2048, 1, 8),
+    (327_680, 1, 128),
+    (0, 1, 1),
+    (10, 200, 128),
+])
+def test_bucket_count_rule(n_docs, n_batches, want):
+    assert bucket_count(n_docs, n_batches) == want
+
+
+def _canon(x) -> str:
+    return json.dumps(x, sort_keys=True)
+
+
+def _append_meta(spark, snap):
+    path = _as_list(snap.tables["segments"])[-1]
+    rows = (spark.read.parquet(path).filter(_is_meta_col())
+            .select("seg_id", "doc_base", "doc_count", "input_sha256",
+                    "term_lo", "term_hi", "post_bytes")
+            .orderBy("seg_id").collect())
+    return [r.asDict() for r in rows]
+
+
+def test_layout_invariant_to_default_parallelism(spark, tmp_path,
+                                                 monkeypatch):
+    corpus = spark.createDataFrame(corpus_rows(300), schema=CORPUS_SCHEMA)
+    delta = spark.createDataFrame([row(i) for i in range(300, 400)],
+                                  schema=CORPUS_SCHEMA)
+    out = {}
+    for par in (4, 64):
+        monkeypatch.setattr(SparkContext, "defaultParallelism",
+                            property(lambda self, p=par: p))
+        index_dir = str(tmp_path / f"par{par}")
+        snap = IndexWriter(spark, index_dir, docs_per_segment=64,
+                           n_batches=2).build(corpus)
+        appended = append_documents(spark, index_dir, delta)
+        out[par] = (snap, _append_meta(spark, appended))
+    (a, a_app), (b, b_app) = out[4], out[64]
+    for key in ("key_bounds", "counts"):
+        assert _canon(a.props[key]) == _canon(b.props[key]), key
+    assert _canon(a.lineage) == _canon(b.lineage)
+    assert a_app and _canon(a_app) == _canon(b_app)
+    assert len(a.props["key_bounds"]) + 1 == bucket_count(300, 2)
+    assert Catalog(str(tmp_path / "par4")).latest().props["max_doc"] == 400

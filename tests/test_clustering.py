@@ -90,3 +90,20 @@ class TestSTC:
         assert out[0]["score"] == pytest.approx(5.0)
         ks = [r for r in out if r["label"] == "k"]
         assert len(ks) == 1 and ks[0]["score"] == pytest.approx(2.0)
+
+    @pytest.mark.parametrize("texts", [
+        ["quick brown fox", "quick brown cat", "red wine glass"],
+        ["alpha beta", "gamma delta"],  # no base cluster: early return
+    ])
+    def test_caller_cache_survives(self, spark, texts):
+        df = _df(spark, texts).persist()
+        try:
+            df.count()
+            stc_clusters(df, min_phrase_len=2, min_base_docs=2).collect()
+            assert df.storageLevel.useMemory
+        finally:
+            df.unpersist()
+        # an uncached input is cached for the call only
+        plain = _df(spark, texts)
+        stc_clusters(plain, min_phrase_len=2, min_base_docs=2).collect()
+        assert not plain.storageLevel.useMemory

@@ -181,6 +181,14 @@ def test_kill_resume_matches_clean_build(spark, tmp_path):
     w._batch_lineage = dying
     with pytest.raises(RuntimeError):
         w.build(corpus)
+    from lucene_solr_spark.catalog import Catalog
+
+    # the crash path is not vacuous: batch 0 committed, and the planned
+    # buckets span at least two batches, so resume has work left
+    crashed = Catalog(crash_dir).latest()
+    assert crashed.stage == "segments"
+    assert crashed.props["batches_done"] == [0]
+    assert len(crashed.props["key_bounds"]) + 1 >= 2
     # fresh writer, resume from the committed generation
     snap = IndexWriter(
         spark, crash_dir, docs_per_segment=32, n_batches=2
@@ -188,8 +196,6 @@ def test_kill_resume_matches_clean_build(spark, tmp_path):
     assert snap.stage == "commit"
     by_part_crash = {r["partition_id"]: r["input_sha256"]
                      for r in snap.lineage}
-    from lucene_solr_spark.catalog import Catalog
-
     clean_snap = Catalog(clean_dir).latest()
     by_part_clean = {r["partition_id"]: r["input_sha256"]
                      for r in clean_snap.lineage}

@@ -89,7 +89,7 @@ def main() -> None:
         ("cached", "InMemoryTableScan" in plan or "PushedFilters" in plan),
     ]))
 
-    bounds = compute_key_bounds(corpus, 32)
+    bounds = compute_key_bounds(corpus)
     keyed = _keyed_corpus(corpus, bounds)
     narrow = keyed.select("repo", "path", "commit", "_bkt")
     plan = fmt(narrow)
