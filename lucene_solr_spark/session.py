@@ -71,5 +71,12 @@ def get_spark(
         # python workers fork from a daemon that keeps zip directories
         # cached across tasks and preloads the kernel modules
         .config("spark.python.daemon.module", "lucene_solr_spark.pyworker")
+        # one daemon for every Python task: Spark starts a daemon per
+        # distinct worker environment, and SQL UDF tasks add
+        # SPARK_SIMPLIFIED_TRACEBACK where Python RDD tasks (e.g.
+        # createDataFrame from a local list) do not, so the first RDD
+        # job would start a second daemon, preload and all, mid-workload
+        .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled",
+                "false")
     )
     return builder.getOrCreate()

@@ -1,6 +1,7 @@
 """The Python worker daemon's zip-directory cache: an unchanged archive
 is never re-read on invalidation, a rewritten one is, and the engine's
-session really runs its Python tasks under the daemon."""
+session really runs its Python tasks under the daemon, SQL and RDD
+tasks alike."""
 
 import importlib
 import sys
@@ -66,3 +67,23 @@ def test_tasks_run_under_the_daemon(spark):
     got = spark.range(1, numPartitions=1).mapInPandas(
         probe, "m string").collect()
     assert [r["m"] for r in got] == ["lucene_solr_spark.pyworker"]
+
+
+def test_sql_and_rdd_tasks_share_one_daemon(spark):
+    # a worker's parent is the daemon that forked it
+    def parent(batches):
+        import os
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"ppid": [os.getppid()]})
+
+    def rdd_parent(_):
+        import os
+
+        return os.getppid()
+
+    sql = spark.range(1, numPartitions=1).mapInPandas(
+        parent, "ppid long").collect()
+    rdd = spark.sparkContext.parallelize([0], 1).map(rdd_parent).collect()
+    assert [r["ppid"] for r in sql] == rdd
