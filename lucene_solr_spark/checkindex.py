@@ -381,7 +381,8 @@ def exorcise(spark: SparkSession, index_dir: str,
     from lucene_solr_spark.catalog import Catalog
     from lucene_solr_spark.indexing.build import (_as_list,
                                                   read_postings_any,
-                                                  read_segments_any)
+                                                  read_segments_any,
+                                                  write_term_stats)
 
     cat = Catalog(index_dir)
     snap = cat.latest_at_stage("commit", "merge", "delete")
@@ -448,19 +449,16 @@ def exorcise(spark: SparkSession, index_dir: str,
         tables["tombstones"] = tomb_path
 
     # stats recomputed from what survived
-    ts_path = cat.path("exorcised", f"gen-{gen}", "term_stats")
-    (
-        posts_new.groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .repartitionByRange(
-            spark.sparkContext.defaultParallelism, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(ts_path)
-    )
-    tables["term_stats"] = ts_path
     agg = (read_segments_any(spark, segs_path)
            .agg(F.sum("doc_count").alias("n"),
                 F.sum("sum_len").alias("ttf")).collect()[0])
+    ts_path = cat.path("exorcised", f"gen-{gen}", "term_stats")
+    write_term_stats(
+        posts_new.groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
+        ts_path, int(agg["n"] or 0),
+    )
+    tables["term_stats"] = ts_path
     import json as _json
     import os as _os
     coll_path = cat.path("exorcised", f"gen-{gen}", "collection.json")

@@ -185,6 +185,7 @@ def _add_one(spark: SparkSession, dst_dir: str, src_dir: str) -> Snapshot:
         _as_list,
         read_postings_any,
         read_segments_any,
+        write_term_stats,
     )
 
     cat = Catalog(dst_dir)
@@ -241,16 +242,6 @@ def _add_one(spark: SparkSession, dst_dir: str, src_dir: str) -> Snapshot:
     )
 
     # stats merge by summation
-    ts_path = cat.path("stats", f"term_stats_addidx{gen}")
-    (
-        spark.read.parquet(snap.tables["term_stats"])
-        .unionByName(spark.read.parquet(ssnap.tables["term_stats"]))
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(ts_path)
-    )
     with open(snap.tables["collection_stats"]) as f:
         dcoll = json.load(f)
     with open(ssnap.tables["collection_stats"]) as f:
@@ -260,6 +251,14 @@ def _add_one(spark: SparkSession, dst_dir: str, src_dir: str) -> Snapshot:
         "sum_total_term_freq": int(dcoll["sum_total_term_freq"])
         + int(scoll["sum_total_term_freq"]),
     }
+    ts_path = cat.path("stats", f"term_stats_addidx{gen}")
+    write_term_stats(
+        spark.read.parquet(snap.tables["term_stats"])
+        .unionByName(spark.read.parquet(ssnap.tables["term_stats"]))
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
+        ts_path, coll["max_doc"],
+    )
     coll_path = cat.path("stats", f"collection_addidx{gen}.json")
     with open(coll_path, "w") as f:
         json.dump(coll, f)

@@ -11,11 +11,13 @@ positive but guaranteed no false negatives"
 (BloomFilteringPostingsFormat.java:334-345).
 
 Our engine's seekExact analogue is ``IndexSearcher._lookup_dfs``: a
-pushed-down Spark scan of the sorted term_stats parquet. At 100 TB the
-scan is cheap per-partition but still a full Spark job per cold term
-batch; fuzzy/spell/suggest paths probe MANY absent terms. The bloom
-sidecar answers NO driver-side in microseconds — absent-only batches
-skip the Spark job entirely.
+driver-side pyarrow read of the term-sorted term_stats parquet,
+filtered on the term column so row groups whose min/max excludes
+every probed term are skipped (no Spark job). A cold term batch still
+opens the files' footers and decodes the matching row groups, and
+fuzzy/spell/suggest paths probe MANY absent terms. The bloom sidecar
+answers NO in memory in microseconds — absent-only batches skip the
+read entirely.
 
 Fidelity kept exactly (tests/test_bloom.py pins published vectors):
 - MurmurHash2.hash32 (seed 0x9747b28c) including Java's SIGNED-byte

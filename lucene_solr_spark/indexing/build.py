@@ -196,6 +196,31 @@ def bucket_count(n_docs: int, n_batches: int = 1) -> int:
     return min(MAX_BUCKETS, max(n_batches, -(-n_docs // DOCS_PER_BUCKET)))
 
 
+# term_stats is written as one term-sorted file per
+# DOCS_PER_TERM_STATS_FILE docs of the index, at most
+# MAX_TERM_STATS_FILES: like the key buckets, the layout follows from
+# the data, and the file count bounds the footers a cold driver-side
+# df lookup (IndexSearcher._lookup_dfs) opens.
+DOCS_PER_TERM_STATS_FILE = 65536
+MAX_TERM_STATS_FILES = 64
+
+
+def term_stats_files(n_docs: int) -> int:
+    return min(MAX_TERM_STATS_FILES,
+               max(1, -(-n_docs // DOCS_PER_TERM_STATS_FILE)))
+
+
+def write_term_stats(stats: DataFrame, path: str, n_docs: int) -> None:
+    """Write (term, df, cf) range-partitioned and sorted by term into
+    term_stats_files(n_docs) files, so min/max pruning on the term
+    column works for Spark scans and driver-side reads alike."""
+    (
+        stats.repartitionByRange(term_stats_files(n_docs), "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite").parquet(path)
+    )
+
+
 def compute_key_bounds(corpus: DataFrame, n_batches: int = 1) -> List[str]:
     """DETERMINISTIC key-range boundaries (bucket_count - 1 composite
     keys; the bucket count follows from the corpus row count).
@@ -880,12 +905,10 @@ class IndexWriter:
             self.spark, batch_paths, self.catalog.path("seg")
         )
         term_stats_path = self.catalog.path("stats", "term_stats")
-        (
+        write_term_stats(
             postings.groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-            .repartitionByRange(self.spark.sparkContext.defaultParallelism, "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite").parquet(term_stats_path)
+            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
+            term_stats_path, int(props.get("n_docs", 0)),
         )
         agg = meta.agg(
             F.sum("doc_count").alias("max_doc"), F.sum("sum_len").alias("sum_ttf")
@@ -1250,13 +1273,11 @@ def append_documents(
     )
     old_ts = spark.read.parquet(snap.tables["term_stats"])
     ts_path = cat.path("stats", f"term_stats_gen{gen}")
-    (
+    write_term_stats(
         old_ts.unionByName(delta_ts)
         .groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(ts_path)
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
+        ts_path, n0 + n_new,
     )
     agg = ameta.agg(
         F.sum("doc_count").alias("dc"), F.sum("sum_len").alias("sl")
@@ -1330,11 +1351,11 @@ def delete_by_query(
     """delete-by-term(s): docs containing ANY analyzed term of
     query_text (IndexWriter.deleteDocuments(Term...),
     IndexWriter.java:1309)."""
-    from lucene_solr_spark.search.executor import IndexSearcher
+    from lucene_solr_spark.search.executor import IndexSearcher, terms_in
 
     searcher = IndexSearcher(spark, index_dir)
     terms = searcher.analyzer.analyze(query_text)
     if not terms:
         return searcher.snap
-    docs = searcher.match_docs(F.col("term").isin(terms))
+    docs = searcher.match_docs(terms_in(terms))
     return delete_docs(spark, index_dir, docs)

@@ -5,9 +5,10 @@ lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:259-273):
 
   stage A (driver, no cluster): analyze query with the SAME chain
     (QueryParserBase re-analysis semantics, lucene/queryparser/.../classic/
-    QueryParserBase.java:490-620), look up term_stats (parquet pushdown
-    on the sorted term column), compute idf + the 256-entry norm cache
-    once per query (TermWeight ctor, TermQuery.java:50-59).
+    QueryParserBase.java:490-620), look up term_stats (a pyarrow read of
+    the term-sorted parquet, pruned on term min/max), compute idf + the
+    256-entry norm cache once per query (TermWeight ctor,
+    TermQuery.java:50-59).
   stage B (executors): postings.filter(term IN terms) -> cogroup with
     segment norms by scoring group -> applyInPandas kernel scores with
     numpy float32 in the NORMATIVE accumulation order (ConjunctionScorer
@@ -47,13 +48,16 @@ import json
 import math
 import os
 import re
+from collections import namedtuple
 from dataclasses import dataclass
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
+import pyarrow.dataset as pa_ds
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -149,6 +153,28 @@ def _regex_literal_prefix(pattern: str) -> str:
     return "".join(out)
 
 
+def _sql_string(s: str) -> str:
+    """Spark SQL string literal of ``s``. Every ASCII character but
+    letters, digits and ``_`` becomes a ``\\uXXXX`` escape, so neither
+    quotes and backslashes nor the parser's ``${...}`` variable
+    substitution can change the value; other characters pass verbatim."""
+    return "'" + "".join(
+        c if c.isalnum() or c == "_" or ord(c) > 127
+        else "\\u%04x" % ord(c) for c in s) + "'"
+
+
+def terms_in(terms) -> Column:
+    """``term IN (terms)`` built in ONE JVM call. Column.isin makes one
+    py4j literal call per term (about 0.5 ms each, over 100 ms for a
+    255-term batch); this parses a single SQL expression instead.
+    The plan is the same In/InSet predicate, so cached-batch and
+    row-group min/max pruning on the sorted term column still apply."""
+    terms = list(terms)
+    if not terms:
+        return F.col("term").isin([])
+    return F.expr(f"term IN ({', '.join(map(_sql_string, terms))})")
+
+
 class _SrndUnsat(Exception):
     """A surround prefix/trunc expansion matched no index terms — the
     enclosing distance query is unsatisfiable (empty SpanOr from
@@ -200,7 +226,7 @@ class IndexSearcher:
         # postings cached: every query filters this table by term, and
         # re-reading + re-decoding parquet per query is the latency
         # floor otherwise. Spark's columnar cache keeps per-batch
-        # min/max stats on the sorted term column, so the isin() filter
+        # min/max stats on the sorted term column, so the term IN filter
         # prunes cached batches the same way parquet row groups prune.
         # (Cluster scale: postings >> RAM — drop the persist and rely
         # on parquet predicate pushdown + OS page cache, exactly the
@@ -211,7 +237,7 @@ class IndexSearcher:
         # inside each partition: groupBy("gid").applyInPandas reuses
         # the cached hash partitioning (NO shuffle on the query path —
         # the kernel runs in the same stage as the cache scan), while
-        # per-batch term min/max stats keep pruning the isin() lookup
+        # per-batch term min/max stats keep pruning the term IN lookup
         n_groups_est = max(-(-self.max_doc // gf), 1)
         self._posts_parts = max(min(n_groups_est, 2 * par), 1)
         if cache_postings is None:
@@ -276,6 +302,9 @@ class IndexSearcher:
         self._term_stats = spark.read.parquet(
             snap.tables["term_stats"]
         ).persist()
+        # the same term-sorted files, read on the driver by _lookup_dfs
+        self._term_stats_files = pa_ds.dataset(
+            snap.tables["term_stats"], format="parquet")
         _docs_paths = snap.tables["docs"]
         if not isinstance(_docs_paths, list):
             _docs_paths = [_docs_paths]
@@ -462,7 +491,7 @@ class IndexSearcher:
         scan over term_stats and persisted next to the snapshots;
         afterwards ``_lookup_dfs`` answers definite-NO terms driver-side
         — an absent-only term batch (the common fuzzy/spell shape)
-        skips the Spark probe job entirely. Returns the FuzzySet, or
+        skips the term_stats read entirely. Returns the FuzzySet, or
         None when the filter was retired as saturated
         (DefaultBloomFilterFactory.isSaturated > 0.9)."""
         from lucene_solr_spark.indexing.bloom import FuzzySet, build_bloom
@@ -482,9 +511,12 @@ class IndexSearcher:
 
     def _lookup_dfs(self, terms) -> Dict[str, int]:
         """df per term with a driver-side cache; misses become ONE
-        pushed-down scan of the sorted term_stats table. With a bloom
-        sidecar attached (enable_bloom), definite-NO terms are resolved
-        in-memory first — the seekExact fail-fast of
+        filtered pyarrow read of the term-sorted term_stats parquet on
+        the driver (row groups whose term min/max excludes every miss
+        are skipped) — no Spark job, whose scheduling and planning
+        would cost more than the read. With a bloom sidecar attached
+        (enable_bloom), definite-NO terms are resolved in-memory first
+        — the seekExact fail-fast of
         BloomFilteringPostingsFormat.java:334-345."""
         missing = [t for t in terms if t not in self._df_cache]
         bloom = getattr(self, "_bloom", None)
@@ -497,12 +529,11 @@ class IndexSearcher:
                     self._df_cache[t] = None  # guaranteed absent
             missing = maybe
         if missing:
-            rows = (
-                self._term_stats.filter(F.col("term").isin(missing))
-                .select("term", "df", "cf")
-                .collect()
-            )
-            found = {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
+            tb = self._term_stats_files.to_table(
+                columns=["term", "df", "cf"],
+                filter=pc.field("term").isin(missing),
+            ).to_pydict()
+            found = dict(zip(tb["term"], zip(tb["df"], tb["cf"])))
             for t in missing:
                 self._df_cache[t] = found.get(t)
         return {t: self._df_cache[t][0] for t in terms
@@ -574,7 +605,7 @@ class IndexSearcher:
         if plan.empty:
             return self.spark.createDataFrame([], "doc_id long, score float")
         fetch = plan.terms + plan.exclude_terms
-        posts = self._postings.filter(F.col("term").isin(fetch))
+        posts = self._postings.filter(terms_in(fetch))
         kernel = make_group_scorer(plan, wand)
         topk_per_group = self._run_kernel(
             posts, kernel, "doc_id long, score float"
@@ -618,7 +649,7 @@ class IndexSearcher:
         for t, _ in offsets:  # f32 accumulation in clause order
             w = np.float32(w + idf(dfs[t], self.max_doc))
         wv = np.float32(w * K1_PLUS_1)
-        posts = self._postings.filter(F.col("term").isin(uniq))
+        posts = self._postings.filter(terms_in(uniq))
         if slop > 0:
             kernel = make_sloppy_phrase_scorer(
                 offsets, wv, self.cache, k, int(slop)
@@ -664,7 +695,7 @@ class IndexSearcher:
         if not planned:
             return None
         fetch = sorted({t for offs, _ in planned for t, _ in offs})
-        posts = self._postings.filter(F.col("term").isin(fetch))
+        posts = self._postings.filter(terms_in(fetch))
         kernel = make_phrase_windows_scorer(planned, self.cache)
         return self._run_kernel(posts, kernel,
                                 "doc_id long, score float")
@@ -711,7 +742,7 @@ class IndexSearcher:
         present = [t for t in p_terms if t in dfs]
         if not present:
             return self.spark.createDataFrame([], "doc_id long, score float")
-        posts = self._postings.filter(F.col("term").isin(present))
+        posts = self._postings.filter(terms_in(present))
         kernel = make_span_scorer(span, wv, self.cache, k)
         topk = self._run_kernel(posts, kernel, "doc_id long, score float")
         out = topk.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -848,7 +879,7 @@ class IndexSearcher:
             )
             if k is None:
                 plan.k = None  # type: ignore[assignment]
-            posts = self._postings.filter(F.col("term").isin(present))
+            posts = self._postings.filter(terms_in(present))
             kernel = make_group_scorer(plan, wand=False)
             topk = self._run_kernel(posts, kernel,
                                     "doc_id long, score float")
@@ -869,7 +900,7 @@ class IndexSearcher:
                         "documented scope cut")
                 seen |= aset
         wv = np.float32(w * K1_PLUS_1)
-        posts = self._postings.filter(F.col("term").isin(present))
+        posts = self._postings.filter(terms_in(present))
         kernel = make_multi_phrase_scorer(
             norm_slots, wv, self.cache, k, int(slop))
         topk = self._run_kernel(posts, kernel, "doc_id long, score float")
@@ -909,7 +940,7 @@ class IndexSearcher:
         the filter-cache analogue of an OR over TermQueries. Runs as
         a pushed-down isin over the sorted postings scan + distributed
         decode (same plan as the CONSTANT_SCORE multi-term path)."""
-        return self.match_docs(F.col("term").isin([t for t in terms]))
+        return self.match_docs(terms_in(terms))
 
     def fuzzy_like_this(self, query_text: str, min_sim: float = 0.5,
                         prefix_len: int = 0, max_num_terms: int = 50,
@@ -990,7 +1021,7 @@ class IndexSearcher:
             [(t, float(s)) for t, s in selected],
             "term string, vscore double")
         posts = self._postings.filter(
-            F.col("term").isin(sorted({t for t, _s in selected}))
+            terms_in(sorted({t for t, _s in selected}))
         ).select("term", "df", "doc_ids_enc", "tfs_enc", "skips_enc",
                  "sdoc", "stf")
 
@@ -1418,7 +1449,7 @@ class IndexSearcher:
         ):
             return empty_df
         planned[0]["mm"] = int(min_should_match)
-        posts = self._postings.filter(F.col("term").isin(sorted(fetch)))
+        posts = self._postings.filter(terms_in(sorted(fetch)))
         if docset_conds:
             # tag each oversize-expansion clause's postings with its
             # clause id; term-addressed clauses read the _cl = -1 rows.
@@ -1566,9 +1597,8 @@ class IndexSearcher:
         relationally level by level (doc_id equi-joins / unions, no
         driver-side iteration)."""
         # pre-warm the df cache with EVERY plain term in the tree in
-        # ONE pushed-down term_stats probe — without this each leaf's
-        # _execute_flat would issue its own driver action (N sequential
-        # Spark jobs of pure scheduling floor for an N-leaf tree)
+        # ONE term_stats read — without this each leaf's _execute_flat
+        # would issue its own (N sequential reads for an N-leaf tree)
         def _tree_terms(cs):
             for c in cs:
                 if c.kind == "bool":
@@ -1636,7 +1666,10 @@ class IndexSearcher:
                 probe.update(analyze(q.get("exclude", "")))
         self._lookup_dfs(sorted(probe))
 
-        subkernels: List[Tuple[int, List[str], object]] = []
+        # each query ships as (module-level factory, plain args): the
+        # kernels are built inside the task, so the batch pickles one
+        # closure, not one closure tree per query
+        specs: List[Tuple[int, List[str], object, tuple]] = []
         fetch: set = set()
         for qid, q in enumerate(queries):
             if isinstance(q, str):
@@ -1652,9 +1685,8 @@ class IndexSearcher:
                 w = F32(0.0)
                 for t, _ in offsets:  # f32 accumulation in clause order
                     w = F32(w + _idf(dfs[t], self.max_doc))
-                kern = make_phrase_scorer(
-                    offsets, F32(w * K1_PLUS_1), self.cache, k
-                )
+                spec = (make_phrase_scorer,
+                        (offsets, F32(w * K1_PLUS_1), self.cache, k))
                 terms = uniq
             else:
                 plan = self.plan(
@@ -1666,25 +1698,24 @@ class IndexSearcher:
                     plan.k = None  # type: ignore[assignment]
                 if plan.empty:
                     continue
-                kern = make_group_scorer(plan, wand)
+                spec = (make_group_scorer, (plan, wand))
                 terms = plan.terms + plan.exclude_terms
-            subkernels.append((qid, sorted(set(terms)), kern))
+            specs.append((qid, sorted(set(terms)), *spec))
             fetch.update(terms)
-        if not subkernels:
+        if not specs:
             return self.spark.createDataFrame([], out_schema)
 
-        posts = self._postings.filter(F.col("term").isin(sorted(fetch)))
-        kernels = subkernels
+        posts = self._postings.filter(terms_in(sorted(fetch)))
 
         def multi(posts_pdf: pd.DataFrame, segs_pdf: pd.DataFrame):
             outs = []
-            shared: dict = {}
-            for qid, terms, kern in kernels:
-                sub = posts_pdf[posts_pdf["term"].isin(terms)]
-                r = kern.with_shared(sub, segs_pdf, shared)
-                if len(r):
-                    r.insert(0, "query_id", np.int32(qid))
-                    outs.append(r)
+            if len(posts_pdf) and len(segs_pdf):
+                shared = _batch_shared(posts_pdf, segs_pdf)
+                for qid, terms, make, args in specs:
+                    r = make(*args).with_shared(terms, shared)
+                    if len(r):
+                        r.insert(0, "query_id", np.int32(qid))
+                        outs.append(r)
             if not outs:
                 return pd.DataFrame(
                     {"query_id": pd.Series(dtype="int32"),
@@ -1702,7 +1733,7 @@ class IndexSearcher:
         # when n_groups*n_queries*k outgrows the cap (n_groups scales
         # with corpus size at 100x), the merge runs executor-side as a
         # per-query window top-k — identical results, bounded driver.
-        est_rows = self.n_groups * len(kernels) * k
+        est_rows = self.n_groups * len(specs) * k
         if est_rows > self.SEARCH_MANY_DRIVER_MERGE_MAX:
             from pyspark.sql import Window
 
@@ -1765,7 +1796,7 @@ class IndexSearcher:
         fetch = plan.terms + plan.exclude_terms
         rows = (
             self._postings.filter(
-                (F.col("gid") == gid) & F.col("term").isin(fetch)
+                (F.col("gid") == gid) & terms_in(fetch)
             ).toPandas()
         )
         if self._segs_bc is not None:
@@ -1783,14 +1814,13 @@ class IndexSearcher:
             return {"match": False, "value": 0.0,
                     "description": "document deleted or out of range"}
         nb = int(norms[off])
+        by_term = _rows_by_term(rows)
 
         def tf_of(term: str) -> int:
-            sub = [r for r in rows.itertuples(index=False)
-                   if r.term == term]
+            sub = by_term.get(term)
             if not sub:
                 return 0
-            ti = _TermIndex(sorted(sub, key=lambda r: r.seg_id),
-                            norms, gbase)
+            ti = _TermIndex(sub, norms, gbase)
             bi = int(np.searchsorted(ti.his, doc_id, side="left"))
             if bi >= ti.n_blocks:
                 return 0
@@ -2374,8 +2404,7 @@ class IndexSearcher:
             uniq_out = sorted(set(out))
             sugg = set(best.values())
             if all(dfs.get(t, 0) > 0 or t in sugg for t in uniq_out):
-                posts = self._postings.filter(
-                    F.col("term").isin(uniq_out))
+                posts = self._postings.filter(terms_in(uniq_out))
                 cnt = self._run_kernel(
                     posts, make_conjunction_counter(uniq_out),
                     "cnt long")
@@ -3315,15 +3344,36 @@ class _TermIndex:
 # -- the per-group scoring skeleton -----------------------------------------
 #
 # Every scoring kernel is ``_kernel(body, k)``. The skeleton owns the
-# frame around a body: the empty-input check, the group context (cached
-# in the search_many ``shared`` dict), the by-term row grouping, ONE
-# live-docs mask, the searchAfter cursor, the bounded top-k and the
-# ``doc_id long, score float`` frame. A body receives the _Group and
-# returns (docs, scores) — the group's matching docIDs (int64, unique,
-# any order) with their float32 scores — or None for no match. A body
-# must NOT mask tombstones or cut to k: the skeleton does both, so
-# deletions and the tie-at-k rule behave the same in every query type.
-# (A pruning body may READ ``g.deleted`` to keep its bound score-safe.)
+# frame around a body: the empty-input check, the group context, the
+# by-term row grouping, ONE live-docs mask, the searchAfter cursor,
+# the bounded top-k and the ``doc_id long, score float`` frame. A body
+# receives the _Group and returns (docs, scores) — the group's
+# matching docIDs (int64, unique, any order) with their float32
+# scores — or None for no match. A body must NOT mask tombstones or
+# cut to k: the skeleton does both, so deletions and the tie-at-k rule
+# behave the same in every query type. (A pruning body may READ
+# ``g.deleted`` to keep its bound score-safe.)
+
+
+def _rows_by_term(posts: pd.DataFrame) -> Dict[str, list]:
+    """Postings rows by term, each list in seg_id order (one row per
+    (term, segment)). Rows are namedtuples over the frame's columns,
+    built from one column-list pass (DataFrame.itertuples reads every
+    column through iloc)."""
+    posts = posts.sort_values("seg_id", kind="stable")
+    make = namedtuple("Row", posts.columns, rename=True)._make
+    by_term: Dict[str, list] = {}
+    for r in map(make, zip(*(posts[c].tolist() for c in posts.columns))):
+        by_term.setdefault(r.term, []).append(r)
+    return by_term
+
+
+def _batch_shared(posts: pd.DataFrame, segs: pd.DataFrame) -> dict:
+    """The (task, group) state every query of a search_many batch
+    reads: the group context and the by-term row lists, built once
+    from the whole group frame; _Group.tindex adds the decoded term
+    indexes (``("ti", term)``) as queries ask for them."""
+    return {"ctx": _group_ctx(segs), "rows": _rows_by_term(posts)}
 
 
 class _Group:
@@ -3335,26 +3385,36 @@ class _Group:
     __slots__ = ("gbase", "span", "norms", "deleted", "by_term",
                  "by_clause", "_shared")
 
-    def __init__(self, posts: pd.DataFrame, segs: pd.DataFrame,
-                 shared: Optional[dict]):
-        ctx = None if shared is None else shared.get("ctx")
-        if ctx is None:
-            ctx = _group_ctx(segs)
-            if shared is not None:
-                shared["ctx"] = ctx
+    def __init__(self, ctx, by_term: Dict[str, list],
+                 by_clause: Optional[Dict[int, pd.DataFrame]] = None,
+                 shared: Optional[dict] = None):
         self.gbase, self.span, self.norms, self.deleted = ctx
+        self.by_term = by_term
+        self.by_clause = by_clause or {}
         self._shared = shared
+
+    @classmethod
+    def of(cls, posts: pd.DataFrame, segs: pd.DataFrame) -> "_Group":
+        """One query's group from its own cogrouped frames."""
         # docset clauses ride in with a _cl tag (>= 0); term-addressed
         # clauses use the _cl == -1 rows (or everything when untagged)
-        self.by_clause: Dict[int, pd.DataFrame] = {}
+        by_clause: Dict[int, pd.DataFrame] = {}
         if "_cl" in posts.columns:
             cl = posts["_cl"].to_numpy()
             for c_id in np.unique(cl[cl >= 0]):
-                self.by_clause[int(c_id)] = posts[cl == c_id]
+                by_clause[int(c_id)] = posts[cl == c_id]
             posts = posts[cl == -1]
-        self.by_term: Dict[str, list] = {}
-        for r in posts.sort_values("seg_id").itertuples(index=False):
-            self.by_term.setdefault(r.term, []).append(r)
+        return cls(_group_ctx(segs), _rows_by_term(posts), by_clause)
+
+    @classmethod
+    def from_shared(cls, terms, shared: dict) -> Optional["_Group"]:
+        """One query's view of a search_many group: the shared row
+        lists of its own terms, or None when none has rows here."""
+        rows = shared["rows"]
+        by_term = {t: rows[t] for t in terms if t in rows}
+        if not by_term:
+            return None
+        return cls(shared["ctx"], by_term, shared=shared)
 
     def tindex(self, t: str) -> Optional[_TermIndex]:
         """Block view of term ``t`` (None when absent). Under
@@ -3398,14 +3458,10 @@ def _empty_hits() -> pd.DataFrame:
 def _kernel(body, k: Optional[int],
             after: Optional[Tuple[float, int]] = None):
     """Wrap a per-group ``body`` (see the contract above) into the
-    2-arg cogroup kernel; ``kernel.with_shared(posts, segs, shared)``
-    is the search_many entry that shares group state across a batch."""
+    2-arg cogroup kernel; ``kernel.with_shared(terms, shared)`` is the
+    search_many entry over a group's _batch_shared state."""
 
-    def score_group(posts: pd.DataFrame, segs: pd.DataFrame,
-                    shared: Optional[dict] = None) -> pd.DataFrame:
-        if len(posts) == 0 or len(segs) == 0:
-            return _empty_hits()
-        g = _Group(posts, segs, shared)
+    def score(g: _Group) -> pd.DataFrame:
         hit = body(g)
         if hit is None:
             return _empty_hits()
@@ -3436,12 +3492,15 @@ def _kernel(body, k: Optional[int],
         return pd.DataFrame({"doc_id": docs[order], "score": scores[order]})
 
     def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        # cogroup.applyInPandas dispatches on arity (3 args would mean
-        # (key, left, right)) — keep the public kernel 2-arg and expose
-        # the batch-sharing variant separately
-        return score_group(posts, segs)
+        if len(posts) == 0 or len(segs) == 0:
+            return _empty_hits()
+        return score(_Group.of(posts, segs))
 
-    kernel.with_shared = score_group  # type: ignore[attr-defined]
+    def with_shared(terms, shared: dict) -> pd.DataFrame:
+        g = _Group.from_shared(terms, shared)
+        return _empty_hits() if g is None else score(g)
+
+    kernel.with_shared = with_shared  # type: ignore[attr-defined]
     return kernel
 
 
@@ -3456,7 +3515,7 @@ def make_conjunction_counter(terms):
     def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
         cur = np.empty(0, np.int64)
         if len(posts) and len(segs):
-            g = _Group(posts, segs, None)
+            g = _Group.of(posts, segs)
             for i, t in enumerate(uniq):
                 p = g.postings(t)
                 if p is None:

@@ -1,10 +1,13 @@
 """Write-path layout is a pure function of the data: the key-bucket
 count follows from the corpus size and the batch count, never from the
-session's parallelism, so the bounds, the per-bucket counts and the
-segment lineage are byte-identical at any core count."""
+session's parallelism, so the bounds, the per-bucket counts, the
+segment lineage and the term_stats files are identical at any core
+count."""
 
 import json
+import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark import SparkContext
 
@@ -16,6 +19,7 @@ from lucene_solr_spark.indexing.build import (
     _is_meta_col,
     append_documents,
     bucket_count,
+    term_stats_files,
 )
 
 
@@ -30,6 +34,27 @@ from lucene_solr_spark.indexing.build import (
 ])
 def test_bucket_count_rule(n_docs, n_batches, want):
     assert bucket_count(n_docs, n_batches) == want
+
+
+@pytest.mark.parametrize("n_docs, want", [
+    (0, 1),
+    (64, 1),
+    (2048, 1),
+    (65_536, 1),
+    (65_537, 2),
+    (327_680, 5),
+    (10 ** 9, 64),
+])
+def test_term_stats_file_rule(n_docs, want):
+    assert term_stats_files(n_docs) == want
+
+
+def _term_stats_layout(snap):
+    """Rows of each term_stats file, in part order."""
+    path = snap.tables["term_stats"]
+    parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    return [pq.read_table(os.path.join(path, f)).to_pylist()
+            for f in parts]
 
 
 def _canon(x) -> str:
@@ -58,11 +83,17 @@ def test_layout_invariant_to_default_parallelism(spark, tmp_path,
         snap = IndexWriter(spark, index_dir, docs_per_segment=64,
                            n_batches=2).build(corpus)
         appended = append_documents(spark, index_dir, delta)
-        out[par] = (snap, _append_meta(spark, appended))
-    (a, a_app), (b, b_app) = out[4], out[64]
+        out[par] = (snap, _append_meta(spark, appended),
+                    _term_stats_layout(snap), _term_stats_layout(appended))
+    (a, a_app, a_ts, a_ts_app), (b, b_app, b_ts, b_ts_app) = out[4], out[64]
     for key in ("key_bounds", "counts"):
         assert _canon(a.props[key]) == _canon(b.props[key]), key
     assert _canon(a.lineage) == _canon(b.lineage)
     assert a_app and _canon(a_app) == _canon(b_app)
     assert len(a.props["key_bounds"]) + 1 == bucket_count(300, 2)
     assert Catalog(str(tmp_path / "par4")).latest().props["max_doc"] == 400
+    assert len(a_ts) == term_stats_files(300)
+    assert len(a_ts_app) == term_stats_files(400)
+    assert a_ts and a_ts == b_ts
+    assert a_ts_app and a_ts_app == b_ts_app
+    assert sum(map(len, a_ts_app)) > sum(map(len, a_ts))
