@@ -138,7 +138,12 @@ def atomic_update_index(
     exactly DistributedUpdateProcessor's resulting AddUpdateCommand).
     Returns (snapshot, updated_docs_df)."""
     from lucene_solr_spark.catalog import Catalog
-    from lucene_solr_spark.indexing.build import append_documents
+    from lucene_solr_spark.indexing.build import (
+        DOCS_SCHEMA,
+        TOMBSTONES_SCHEMA,
+        append_documents,
+        read_table,
+    )
 
     cat = Catalog(index_dir)
     snap = cat.latest_at_stage("commit", "merge", "delete")
@@ -147,16 +152,10 @@ def atomic_update_index(
     current = row_store
     tomb = snap.tables.get("tombstones")
     if tomb:
-        docs_paths = snap.tables["docs"]
-        if not isinstance(docs_paths, list):
-            docs_paths = [docs_paths]
         live_keys = (
-            spark.read.parquet(*docs_paths)
-            .join(
-                spark.read.parquet(tomb).select("doc_id"),
-                "doc_id",
-                "left_anti",
-            )
+            read_table(spark, DOCS_SCHEMA, snap.tables["docs"])
+            .join(read_table(spark, TOMBSTONES_SCHEMA, tomb), "doc_id",
+                  "left_anti")
             .select(*DOC_KEY)
         )
         current = current.join(live_keys, list(DOC_KEY), "left_semi")

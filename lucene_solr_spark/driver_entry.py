@@ -12084,10 +12084,7 @@ def q_atomic_update(spark, sf_dir):
 
     d = _atomic_index(spark, sf_dir)
     s = IndexSearcher(spark, d)
-    paths = s.snap.tables["docs"]
-    if not isinstance(paths, list):
-        paths = [paths]
-    live = s._live(s.spark.read.parquet(*paths).select("doc_id", "lang"))
+    live = s._live(s._docs.select("doc_id", "lang"))
     tagged = s.match_docs(F.col("term") == "atomupdated").select(
         "doc_id", F.lit(1).alias("t"))
     return (
@@ -12128,10 +12125,7 @@ def q_realtime_get(spark, sf_dir):
 
     d = _atomic_index(spark, sf_dir)
     s = IndexSearcher(spark, d)
-    paths = s.snap.tables["docs"]
-    if not isinstance(paths, list):
-        paths = [paths]
-    docs = s._live(s.spark.read.parquet(*paths))
+    docs = s._live(s._docs)
     n = F.col("path").try_cast("long")
     want = ((F.col("path") == "zzzcreated")
             | (n % ATOMIC_MOD == 0) | (n % 103 == 1))

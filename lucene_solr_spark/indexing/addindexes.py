@@ -181,10 +181,14 @@ def add_indexes(spark: SparkSession, dst_dir: str,
 
 def _add_one(spark: SparkSession, dst_dir: str, src_dir: str) -> Snapshot:
     from lucene_solr_spark.indexing.build import (
+        DOCS_SCHEMA,
         SEGMENT_OUT_SCHEMA,
+        TERM_STATS_SCHEMA,
+        TOMBSTONES_SCHEMA,
         _as_list,
         read_postings_any,
         read_segments_any,
+        read_table,
         write_term_stats,
     )
 
@@ -235,7 +239,7 @@ def _add_one(spark: SparkSession, dst_dir: str, src_dir: str) -> Snapshot:
 
     # docs table: same offset on the stored keys
     docs_path = cat.path("docs_gen", f"addidx-{gen}")
-    sdocs = spark.read.parquet(*_as_list(ssnap.tables["docs"]))
+    sdocs = read_table(spark, DOCS_SCHEMA, ssnap.tables["docs"])
     (
         sdocs.withColumn("doc_id", F.col("doc_id") + F.lit(off))
         .write.mode("overwrite").parquet(docs_path)
@@ -253,8 +257,9 @@ def _add_one(spark: SparkSession, dst_dir: str, src_dir: str) -> Snapshot:
     }
     ts_path = cat.path("stats", f"term_stats_addidx{gen}")
     write_term_stats(
-        spark.read.parquet(snap.tables["term_stats"])
-        .unionByName(spark.read.parquet(ssnap.tables["term_stats"]))
+        read_table(spark, TERM_STATS_SCHEMA, snap.tables["term_stats"])
+        .unionByName(read_table(spark, TERM_STATS_SCHEMA,
+                                ssnap.tables["term_stats"]))
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
         ts_path, coll["max_doc"],
@@ -271,12 +276,12 @@ def _add_one(spark: SparkSession, dst_dir: str, src_dir: str) -> Snapshot:
     tables["collection_stats"] = coll_path
     stomb = ssnap.tables.get("tombstones")
     if stomb:
-        t = spark.read.parquet(stomb).select(
+        t = read_table(spark, TOMBSTONES_SCHEMA, stomb).select(
             (F.col("doc_id") + F.lit(off)).alias("doc_id")
         )
         old = tables.get("tombstones")
         if old:
-            t = t.unionByName(spark.read.parquet(old))
+            t = t.unionByName(read_table(spark, TOMBSTONES_SCHEMA, old))
         tomb_path = cat.path("tombstones", f"addidx-{gen}")
         t.distinct().repartition(1).write.mode("overwrite").parquet(
             tomb_path

@@ -55,6 +55,8 @@ from typing import Dict, Iterator, List, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,15 +76,37 @@ DOC_KEY = ["repo", "path", "commit"]
 
 
 def _is_meta_col():
-    # is_meta is a partition directory column; Spark infers it as string
+    # is_meta is a partition directory column: boolean under the declared
+    # SEGMENT_OUT_SCHEMA, a string when Spark infers the schema
     return F.col("is_meta").cast("boolean")
+
+
+# Every table the engine writes is read back with its declared schema
+# (the writer's own schema string), so Spark plans the scan without the
+# footer-inference job an undeclared read runs. tests/test_table_schemas.py
+# checks each declaration against the files the writers produce.
+TERM_STATS_SCHEMA = "term string, df long, cf long"
+DOCS_SCHEMA = (
+    "doc_id long, repo string, path string, commit string, lang string, "
+    "content_sha256 string"
+)
+TOMBSTONES_SCHEMA = "doc_id long"
+
+
+def read_table(spark: SparkSession, schema: str, paths) -> DataFrame:
+    """Read engine-written parquet path(s) with the declared ``schema``."""
+    return spark.read.schema(schema).parquet(*_as_list(paths))
+
+
+def _read_combined(spark: SparkSession, paths, base_path: str) -> DataFrame:
+    """Combined build/append output dirs (is_meta-partitioned)."""
+    return (spark.read.schema(SEGMENT_OUT_SCHEMA)
+            .option("basePath", base_path).parquet(*_as_list(paths)))
 
 
 def read_segment_output(spark: SparkSession, paths, base_path: str):
     """Read batch output dirs; returns (postings_df, meta_df)."""
-    if isinstance(paths, str):
-        paths = [paths]
-    sdf = spark.read.option("basePath", base_path).parquet(*paths)
+    sdf = _read_combined(spark, paths, base_path)
     return sdf.filter(~_is_meta_col()), sdf.filter(_is_meta_col())
 
 
@@ -96,19 +120,13 @@ def read_postings_any(spark: SparkSession, entries) -> DataFrame:
     """Read a postings table that may mix storage generations: combined
     build/append dirs (is_meta-partitioned) and merged dirs (plain
     MERGED_SCHEMA parquet). Normalized to _POSTING_COLS."""
-    if isinstance(entries, str):
-        entries = [entries]
     parts = []
-    for p in entries:
+    for p in _as_list(entries):
         if _is_combined_dir(p):
-            d = (
-                spark.read.option("basePath", p).parquet(p)
-                .filter(~_is_meta_col())
-                .select(*_POSTING_COLS)
-            )
+            d = _read_combined(spark, p, p).filter(~_is_meta_col())
         else:
-            d = spark.read.parquet(p).select(*_POSTING_COLS)
-        parts.append(d)
+            d = read_table(spark, MERGED_SCHEMA, p)
+        parts.append(d.select(*_POSTING_COLS))
     out = parts[0]
     for d in parts[1:]:
         out = out.unionByName(d)
@@ -118,16 +136,10 @@ def read_postings_any(spark: SparkSession, entries) -> DataFrame:
 def read_segments_any(spark: SparkSession, entries) -> DataFrame:
     """Read segment-meta rows from combined dirs. Normalized to
     _META_COLS."""
-    if isinstance(entries, str):
-        entries = [entries]
-    parts = []
-    for p in entries:
-        d = (
-            spark.read.option("basePath", p).parquet(p)
-            .filter(_is_meta_col())
-            .select(*_META_COLS)
-        )
-        parts.append(d)
+    parts = [
+        _read_combined(spark, p, p).filter(_is_meta_col()).select(*_META_COLS)
+        for p in _as_list(entries)
+    ]
     out = parts[0]
     for d in parts[1:]:
         out = out.unionByName(d)
@@ -221,9 +233,20 @@ def write_term_stats(stats: DataFrame, path: str, n_docs: int) -> None:
     )
 
 
+def _one_bucket_keys(corpus: DataFrame) -> Optional[List[tuple]]:
+    """The doc keys of a corpus that fits one key bucket (at most
+    DOCS_PER_BUCKET rows), else None. A bounded take, not a count: a
+    local corpus (createDataFrame, e.g. an NRT micro-batch) answers
+    without a Spark job, a file scan stops after the first partitions."""
+    rows = corpus.select(*DOC_KEY).limit(DOCS_PER_BUCKET + 1).collect()
+    return None if len(rows) > DOCS_PER_BUCKET else [tuple(r) for r in rows]
+
+
 def compute_key_bounds(corpus: DataFrame, n_batches: int = 1) -> List[str]:
     """DETERMINISTIC key-range boundaries (bucket_count - 1 composite
-    keys; the bucket count follows from the corpus row count).
+    keys; the bucket count follows from the corpus row count). A corpus
+    that fits one bucket has no boundaries and is neither counted nor
+    sampled.
 
     Spark's repartitionByRange samples with an RDD-id-dependent seed, so
     two jobs over the same data can disagree on boundaries — fatal here,
@@ -232,6 +255,8 @@ def compute_key_bounds(corpus: DataFrame, n_batches: int = 1) -> List[str]:
     boundaries recorded in its snapshot. This sampler has no RNG at
     all: evenly strided keys per input partition, quantiles on the
     driver. Boundaries are stored in snapshot props and reused."""
+    if n_batches <= 1 and _one_bucket_keys(corpus) is not None:
+        return []
     keys = corpus.select(_composite_key().alias("k"))
     # Deterministic JVM-side hash sample (xxhash64 has no seed state; a
     # key either is or is not in the sample, independent of
@@ -319,7 +344,12 @@ def _keyed_corpus(corpus: DataFrame, bounds: List[str]) -> DataFrame:
 def count_keys_per_bucket(corpus: DataFrame, bounds: List[str]) -> Dict[int, int]:
     """Distinct-key count per bucket — pure JVM aggregation (map-side
     partial agg, no sort, no range shuffle, content column pruned at
-    the parquet scan). Feeds the dense-rank offsets."""
+    the parquet scan). Feeds the dense-rank offsets. One bucket of at
+    most DOCS_PER_BUCKET rows is counted on the driver from its keys."""
+    if not bounds:
+        keys = _one_bucket_keys(corpus)
+        if keys is not None:
+            return {0: len(set(keys))} if keys else {}
     keyed = corpus.select(*DOC_KEY).withColumn(
         "_bkt", _bucket_col(bounds)
     )
@@ -879,7 +909,7 @@ class IndexWriter:
         # meta rows carry the per-segment stats (computed in the build
         # pass): one pruned read of the is_meta=true partition only
         rows = (
-            self.spark.read.parquet(path)
+            _read_combined(self.spark, path, path)
             .filter(_is_meta_col())
             .select("seg_id", "doc_count", "input_sha256", "term_lo",
                     "term_hi", "post_bytes")
@@ -1073,7 +1103,7 @@ def _make_merge_udf(new_gfac: int):
             emit(chunk, j)
         return out
 
-    def _merge_gid_udf(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _merge_gid_udf(key, pdf):
         """One applyInPandas call per (group, term-bucket): the reducer
         payload stays bounded by the group's doc range — same salt
         guarantee — while the task count is n_gids x n_buckets. One
@@ -1158,13 +1188,19 @@ def merge_postings(
     )
     gen = snap.snapshot_id + 1
     out_path = cat.path("merged", f"gen-{gen}")
+    # the file count follows from the data, like term_stats: files are
+    # term-sorted with disjoint term ranges at any core count. Range
+    # bounds over several files come from a sampling job, so the kernel
+    # output is persisted across it instead of being merged twice.
+    n_files = term_stats_files(int(snap.props.get("max_doc", 0)))
+    if n_files > 1:
+        merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
     (
-        merged.repartitionByRange(
-            spark.sparkContext.defaultParallelism, "term", "seg_id"
-        )
+        merged.repartitionByRange(n_files, "term")
         .sortWithinPartitions("term", "seg_id")
         .write.mode("overwrite").parquet(out_path)
     )
+    merged.unpersist()
     tables = dict(snap.tables)
     tables["postings"] = out_path
     return cat.commit(
@@ -1253,39 +1289,28 @@ def append_documents(
     # (IndexWriter two-phase commit semantics, IndexWriter.java
     # prepareCommit/commit; ADVICE r1: no in-place mutation of the live
     # docs table, no separate delete commit).
-    existing = spark.read.parquet(*_as_list(snap.tables["docs"]))
-    replaced_path = cat.path("tombstones", f"replaced-gen-{gen}")
-    (
-        existing.join(
-            corpus.select(*DOC_KEY).dropDuplicates(DOC_KEY), DOC_KEY, "inner"
-        )
-        .select("doc_id")
-        .write.mode("overwrite")
-        .parquet(replaced_path)
-    )
     docs_gen_path = cat.path("docs_gen", f"gen-{gen}")
     write_docs_table(spark, path, cat.path("seg"), docs_gen_path)
 
-    # incremental stats: old + delta, never a full re-aggregation
-    apost, ameta = read_segment_output(spark, path, cat.path("seg"))
-    delta_ts = apost.groupBy("term").agg(
-        F.sum("df").alias("df"), F.sum("cf").alias("cf")
-    )
-    old_ts = spark.read.parquet(snap.tables["term_stats"])
+    # incremental stats: old + delta in one aggregation, never a full
+    # re-aggregation of the postings
+    apost, _ = read_segment_output(spark, path, cat.path("seg"))
+    old_ts = read_table(spark, TERM_STATS_SCHEMA, snap.tables["term_stats"])
     ts_path = cat.path("stats", f"term_stats_gen{gen}")
     write_term_stats(
-        old_ts.unionByName(delta_ts)
+        old_ts.unionByName(apost.select("term", "df", "cf"))
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
         ts_path, n0 + n_new,
     )
-    agg = ameta.agg(
-        F.sum("doc_count").alias("dc"), F.sum("sum_len").alias("sl")
-    ).collect()[0]
+    # the delta's collection stats sum its few meta rows: read on the
+    # driver (like IndexSearcher._lookup_dfs), not by a Spark job
+    meta = pq.read_table(os.path.join(path, "is_meta=true"),
+                         columns=["doc_count", "sum_len"])
     coll = {
-        "max_doc": n0 + int(agg["dc"] or 0),
+        "max_doc": n0 + int(pc.sum(meta["doc_count"]).as_py() or 0),
         "sum_total_term_freq": int(props["sum_total_term_freq"])
-        + int(agg["sl"] or 0),
+        + int(pc.sum(meta["sum_len"]).as_py() or 0),
     }
     coll_path = cat.path("stats", f"collection_gen{gen}.json")
     with open(coll_path, "w") as f:
@@ -1299,13 +1324,19 @@ def append_documents(
     tables["collection_stats"] = coll_path
     # updateDocuments: old versions of replaced keys become tombstones
     # in the SAME commit as the appended docs (delete-then-add is one
-    # atomic visibility flip, IndexWriter.java:1257 updateDocuments)
-    tomb = spark.read.parquet(replaced_path)
+    # atomic visibility flip, IndexWriter.java:1257 updateDocuments),
+    # unioned into the one generation-specific tombstone write
+    tomb = (
+        read_table(spark, DOCS_SCHEMA, snap.tables["docs"])
+        .join(corpus.select(*DOC_KEY), DOC_KEY, "left_semi")
+        .select("doc_id")
+    )
     old_tomb = tables.get("tombstones")
     if old_tomb:
-        tomb = tomb.unionByName(spark.read.parquet(old_tomb))
+        tomb = tomb.unionByName(
+            read_table(spark, TOMBSTONES_SCHEMA, old_tomb))
     tomb_path = cat.path("tombstones", f"gen-{gen}")
-    tomb.distinct().repartition(1).write.mode("overwrite").parquet(tomb_path)
+    tomb.distinct().coalesce(1).write.mode("overwrite").parquet(tomb_path)
     tables["tombstones"] = tomb_path
     return cat.commit(
         "commit",
@@ -1334,10 +1365,10 @@ def delete_docs(
     df = doc_ids.select(F.col("doc_id").cast("long").alias("doc_id"))
     old = snap.tables.get("tombstones")
     if old:
-        df = df.unionByName(spark.read.parquet(old))
+        df = df.unionByName(read_table(spark, TOMBSTONES_SCHEMA, old))
     gen = snap.snapshot_id + 1
     path = cat.path("tombstones", f"gen-{gen}")
-    df.distinct().repartition(1).write.mode("overwrite").parquet(path)
+    df.distinct().coalesce(1).write.mode("overwrite").parquet(path)
     tables = dict(snap.tables)
     tables["tombstones"] = path
     return cat.commit(

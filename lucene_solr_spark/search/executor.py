@@ -65,6 +65,14 @@ from lucene_solr_spark.catalog import Catalog
 from lucene_solr_spark.constants import B, K1
 from lucene_solr_spark.functions.analysis import get_analyzer
 from lucene_solr_spark.functions.bm25 import K1_PLUS_1, avgdl, idf, norm_cache
+from lucene_solr_spark.indexing.build import (
+    DOCS_SCHEMA,
+    TERM_STATS_SCHEMA,
+    TOMBSTONES_SCHEMA,
+    read_postings_any,
+    read_segments_any,
+    read_table,
+)
 from lucene_solr_spark.indexing.codec import decode_postings, decode_skips
 
 F32 = np.float32
@@ -218,11 +226,6 @@ class IndexSearcher:
         # built with (QueryParserBase re-analysis semantics)
         self.analyzer = get_analyzer(snap.props.get("analyzer", "standard"))
 
-        from lucene_solr_spark.indexing.build import (
-            read_postings_any,
-            read_segments_any,
-        )
-
         # postings cached: every query filters this table by term, and
         # re-reading + re-decoding parquet per query is the latency
         # floor otherwise. Spark's columnar cache keeps per-batch
@@ -272,19 +275,9 @@ class IndexSearcher:
         tomb = snap.tables.get("tombstones")
         if tomb:
             segments = self._attach_tombstones(segments, tomb)
-        # pre-shard the cached segs side by scoring group: cogroups
-        # then reuse this hash partitioning instead of re-sharding into
-        # spark.sql.shuffle.partitions tiny tasks on every query — the
-        # per-query task count tracks n_groups, not the global conf
         segments = segments.withColumn(
             "gid", (F.col("seg_id") / F.lit(gf)).cast("long")
         )
-        n_gids = segments.select("gid").distinct().count()
-        self.n_groups = max(int(n_gids), 1)
-        par = spark.sparkContext.defaultParallelism
-        n_parts = max(min(self.n_groups, 2 * par), 1)
-        self._segments = segments.repartition(n_parts, "gid").persist()
-        self._segments.count()  # materialize the cache eagerly
         # adaptive broadcast of segment meta (the Catalyst
         # broadcast-join idea applied to the norms side): when all norm
         # blobs fit comfortably (~1 byte/doc + deletions), ship them to
@@ -292,23 +285,35 @@ class IndexSearcher:
         # groupBy — one shuffle leg instead of a cogroup's two, and no
         # per-query Arrow transfer of the segs side. Above the
         # threshold (cluster scale) the cogroup path delivers each task
-        # exactly its groups' norms.
+        # exactly its groups' norms. The one collect also gives n_groups.
         self._segs_bc = None
         if self.max_doc <= 32 * 1024 * 1024:
-            seg_pdf = self._segments.toPandas()
+            seg_pdf = segments.toPandas()
+            n_gids = seg_pdf["gid"].nunique()
             self._segs_bc = spark.sparkContext.broadcast(
                 {int(g): p for g, p in seg_pdf.groupby("gid")}
             )
-        self._term_stats = spark.read.parquet(
-            snap.tables["term_stats"]
+        else:
+            n_gids = segments.select("gid").distinct().count()
+        self.n_groups = max(int(n_gids), 1)
+        # pre-shard the segs side by scoring group: cogroups then reuse
+        # this hash partitioning instead of re-sharding into
+        # spark.sql.shuffle.partitions tiny tasks on every query — the
+        # per-query task count tracks n_groups, not the global conf.
+        # Cached only where it is read per query (the cogroup path and
+        # explain's fallback); with the broadcast it stays a plan.
+        n_parts = max(min(self.n_groups, 2 * par), 1)
+        self._segments = segments.repartition(n_parts, "gid")
+        if self._segs_bc is None:
+            self._segments = self._segments.persist()
+            self._segments.count()  # materialize the cache eagerly
+        self._term_stats = read_table(
+            spark, TERM_STATS_SCHEMA, snap.tables["term_stats"]
         ).persist()
         # the same term-sorted files, read on the driver by _lookup_dfs
         self._term_stats_files = pa_ds.dataset(
             snap.tables["term_stats"], format="parquet")
-        _docs_paths = snap.tables["docs"]
-        if not isinstance(_docs_paths, list):
-            _docs_paths = [_docs_paths]
-        self._docs = spark.read.parquet(*_docs_paths)
+        self._docs = read_table(spark, DOCS_SCHEMA, snap.tables["docs"])
         # driver-side TermContext cache (TermQuery gathers stats once
         # per query, TermQuery.java:161-177; hot terms stay cached)
         self._df_cache: Dict[str, Optional[int]] = {}
@@ -340,7 +345,7 @@ class IndexSearcher:
         packed docID blob (the .liv bitset analogue) so every scoring
         kernel sees deletions through the cogrouped segs side — no extra
         shuffle at query time. Segment bounds broadcast (O(n_segs))."""
-        tomb = self.spark.read.parquet(tomb_path)
+        tomb = read_table(self.spark, TOMBSTONES_SCHEMA, tomb_path)
         bounds = segments.select("seg_id", "doc_base", "doc_count")
         joined = tomb.join(
             F.broadcast(bounds),
@@ -348,7 +353,7 @@ class IndexSearcher:
             & (F.col("doc_id") < F.col("doc_base") + F.col("doc_count")),
         ).select("seg_id", "doc_id")
 
-        def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def pack(key, pdf):
             ids = np.sort(pdf["doc_id"].to_numpy(np.int64))
             return pd.DataFrame(
                 {"seg_id": [int(key[0])],
@@ -1993,8 +1998,6 @@ class IndexSearcher:
         pruned) segments scan."""
         if getattr(self, "_doc_stats_df", None) is not None:
             return self._doc_stats_df
-        from lucene_solr_spark.indexing.build import read_segments_any
-
         segs = read_segments_any(self.spark, self.snap.tables["segments"])
         meta = segs.select("doc_base", "doc_count", "norms_enc", "doc_lens_enc")
 
@@ -2626,7 +2629,7 @@ class IndexSearcher:
         tomb = self.snap.tables.get("tombstones")
         if not tomb:
             return df
-        t = self.spark.read.parquet(tomb).select("doc_id")
+        t = read_table(self.spark, TOMBSTONES_SCHEMA, tomb)
         return df.join(F.broadcast(t), "doc_id", "left_anti")
 
     def real_time_get(self, keys) -> DataFrame:
@@ -2647,10 +2650,7 @@ class IndexSearcher:
         snap = self.catalog.latest_at_stage("commit", "merge", "delete")
         if snap is None:
             snap = self.snap
-        paths = snap.tables["docs"]
-        if not isinstance(paths, list):
-            paths = [paths]
-        docs = self.spark.read.parquet(*paths)
+        docs = read_table(self.spark, DOCS_SCHEMA, snap.tables["docs"])
         kdf = self.spark.createDataFrame(
             [(str(r), str(p), str(c)) for r, p, c in keys],
             "repo string, path string, commit string",
@@ -2660,7 +2660,7 @@ class IndexSearcher:
         )
         tomb = snap.tables.get("tombstones")
         if tomb:
-            t = self.spark.read.parquet(tomb).select("doc_id")
+            t = read_table(self.spark, TOMBSTONES_SCHEMA, tomb)
             hit = hit.join(F.broadcast(t), "doc_id", "left_anti")
         return hit.select(
             "doc_id", "repo", "path", "commit", "lang"

@@ -1,8 +1,8 @@
 """Write-path layout is a pure function of the data: the key-bucket
 count follows from the corpus size and the batch count, never from the
 session's parallelism, so the bounds, the per-bucket counts, the
-segment lineage and the term_stats files are identical at any core
-count."""
+segment lineage, the term_stats files and the compacted postings files
+are identical at any core count."""
 
 import json
 import os
@@ -19,6 +19,8 @@ from lucene_solr_spark.indexing.build import (
     _is_meta_col,
     append_documents,
     bucket_count,
+    delete_docs,
+    maybe_compact,
     term_stats_files,
 )
 
@@ -49,12 +51,15 @@ def test_term_stats_file_rule(n_docs, want):
     assert term_stats_files(n_docs) == want
 
 
-def _term_stats_layout(snap):
-    """Rows of each term_stats file, in part order."""
-    path = snap.tables["term_stats"]
+def _files_layout(path):
+    """Rows of each parquet file under path, in part order."""
     parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
     return [pq.read_table(os.path.join(path, f)).to_pylist()
             for f in parts]
+
+
+def _term_stats_layout(snap):
+    return _files_layout(snap.tables["term_stats"])
 
 
 def _canon(x) -> str:
@@ -83,9 +88,13 @@ def test_layout_invariant_to_default_parallelism(spark, tmp_path,
         snap = IndexWriter(spark, index_dir, docs_per_segment=64,
                            n_batches=2).build(corpus)
         appended = append_documents(spark, index_dir, delta)
+        merged = maybe_compact(spark, index_dir, max_generations=1,
+                               segs_per_group=2)
         out[par] = (snap, _append_meta(spark, appended),
-                    _term_stats_layout(snap), _term_stats_layout(appended))
-    (a, a_app, a_ts, a_ts_app), (b, b_app, b_ts, b_ts_app) = out[4], out[64]
+                    _term_stats_layout(snap), _term_stats_layout(appended),
+                    _files_layout(merged.tables["postings"]))
+    ((a, a_app, a_ts, a_ts_app, a_merged),
+     (b, b_app, b_ts, b_ts_app, b_merged)) = out[4], out[64]
     for key in ("key_bounds", "counts"):
         assert _canon(a.props[key]) == _canon(b.props[key]), key
     assert _canon(a.lineage) == _canon(b.lineage)
@@ -97,3 +106,33 @@ def test_layout_invariant_to_default_parallelism(spark, tmp_path,
     assert a_ts and a_ts == b_ts
     assert a_ts_app and a_ts_app == b_ts_app
     assert sum(map(len, a_ts_app)) > sum(map(len, a_ts))
+    # compaction: one term-sorted file per term_stats_files(max_doc),
+    # the same rows at 4 and at 64 cores
+    assert len(a_merged) == term_stats_files(400)
+    assert a_merged and a_merged == b_merged
+
+
+def test_append_folds_replaced_keys_into_one_tombstone_write(spark,
+                                                             tmp_path):
+    """updateDocuments: the old docIDs of replaced keys join the
+    existing tombstones in the append's one generation-specific
+    tombstone write; no separate replaced-keys table is left behind."""
+    rows = [{**row(i), "content": f"doc {i} alpha"} for i in range(60)]
+    index_dir = str(tmp_path / "idx")
+    IndexWriter(spark, index_dir, docs_per_segment=32, n_batches=1,
+                analyzer="whitespace").build(
+        spark.createDataFrame(rows, schema=CORPUS_SCHEMA))
+    key = lambda r: (r["repo"], r["path"], r["commit"])  # noqa: E731
+    doc_id = {key(r): i for i, r in enumerate(sorted(rows, key=key))}
+    delete_docs(spark, index_dir, spark.createDataFrame(
+        [(7,)], "doc_id long"))
+    replaced = [{**rows[i], "content": f"doc {i} beta"} for i in (2, 30, 41)]
+    fresh = [{**row(i), "content": f"doc {i} gamma"} for i in range(60, 70)]
+    snap = append_documents(spark, index_dir, spark.createDataFrame(
+        fresh + replaced, schema=CORPUS_SCHEMA))
+    want = sorted({7} | {doc_id[key(r)] for r in replaced})
+    got = sorted(r["doc_id"] for f in _files_layout(
+        snap.tables["tombstones"]) for r in f)
+    assert got == want
+    assert [n for n in os.listdir(os.path.join(index_dir, "tombstones"))
+            if n.startswith("replaced-gen-")] == []
