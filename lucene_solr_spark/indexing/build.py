@@ -233,6 +233,14 @@ def write_term_stats(stats: DataFrame, path: str, n_docs: int) -> None:
     )
 
 
+class KeyBounds(list):
+    """Bucket boundaries from compute_key_bounds. For a corpus that fits
+    one bucket they are empty and carry the doc keys of the bounded
+    take (``keys``), so count_keys_per_bucket reuses that one sample."""
+
+    keys: Optional[List[tuple]] = None
+
+
 def _one_bucket_keys(corpus: DataFrame) -> Optional[List[tuple]]:
     """The doc keys of a corpus that fits one key bucket (at most
     DOCS_PER_BUCKET rows), else None. A bounded take, not a count: a
@@ -255,8 +263,12 @@ def compute_key_bounds(corpus: DataFrame, n_batches: int = 1) -> List[str]:
     boundaries recorded in its snapshot. This sampler has no RNG at
     all: evenly strided keys per input partition, quantiles on the
     driver. Boundaries are stored in snapshot props and reused."""
-    if n_batches <= 1 and _one_bucket_keys(corpus) is not None:
-        return []
+    if n_batches <= 1:
+        keys = _one_bucket_keys(corpus)
+        if keys is not None:
+            out = KeyBounds()
+            out.keys = keys
+            return out
     keys = corpus.select(_composite_key().alias("k"))
     # Deterministic JVM-side hash sample (xxhash64 has no seed state; a
     # key either is or is not in the sample, independent of
@@ -345,9 +357,10 @@ def count_keys_per_bucket(corpus: DataFrame, bounds: List[str]) -> Dict[int, int
     """Distinct-key count per bucket — pure JVM aggregation (map-side
     partial agg, no sort, no range shuffle, content column pruned at
     the parquet scan). Feeds the dense-rank offsets. One bucket of at
-    most DOCS_PER_BUCKET rows is counted on the driver from its keys."""
+    most DOCS_PER_BUCKET rows is counted on the driver from its keys,
+    taken once per plan (KeyBounds.keys)."""
     if not bounds:
-        keys = _one_bucket_keys(corpus)
+        keys = getattr(bounds, "keys", None) or _one_bucket_keys(corpus)
         if keys is not None:
             return {0: len(set(keys))} if keys else {}
     keyed = corpus.select(*DOC_KEY).withColumn(

@@ -22,6 +22,11 @@ lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:259-273):
     tie-break, TopDocs.java:95-117; SURVEY.md section 3.3).
 
 Physical execution adapts to scale:
+  - an index whose cached postings fit the caller session's
+    autoBroadcastJoinThreshold is also held on the driver: single
+    queries run the same kernels in-process and merge there
+    (IndexSearcher._top_hits), with no Spark job — stage B and C
+    without the cluster;
   - postings cache pre-partitioned by scoring group (term-sorted within
     partitions): groupBy(gid).applyInPandas reuses the partitioning, so
     a query's kernel runs in the SAME stage as the cache scan — zero
@@ -54,21 +59,31 @@ from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pa_ds
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import (
+    FloatType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from lucene_solr_spark.catalog import Catalog
 from lucene_solr_spark.constants import B, K1
 from lucene_solr_spark.functions.analysis import get_analyzer
 from lucene_solr_spark.functions.bm25 import K1_PLUS_1, avgdl, idf, norm_cache
 from lucene_solr_spark.indexing.build import (
+    _POSTING_COLS,
     DOCS_SCHEMA,
     TERM_STATS_SCHEMA,
     TOMBSTONES_SCHEMA,
+    _as_list,
+    _is_combined_dir,
     read_postings_any,
     read_segments_any,
     read_table,
@@ -76,6 +91,8 @@ from lucene_solr_spark.indexing.build import (
 from lucene_solr_spark.indexing.codec import decode_postings, decode_skips
 
 F32 = np.float32
+HITS_SCHEMA = StructType([StructField("doc_id", LongType()),
+                          StructField("score", FloatType())])
 
 
 @dataclass
@@ -194,6 +211,8 @@ class IndexSearcher:
     # parquet predicate pushdown + OS page cache (the Lucene mmap
     # model). Override with LSS_POSTINGS_CACHE_MAX_BYTES.
     POSTINGS_CACHE_MAX_BYTES = 8 * 1024 ** 3
+    # segment meta (~1 byte/doc of norms) is broadcast up to this size
+    SEGS_BROADCAST_MAX_DOCS = 32 * 1024 * 1024
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  cache_postings: Optional[bool] = None):
@@ -207,6 +226,10 @@ class IndexSearcher:
         # postings plan so its gid hash partitioning is no longer
         # visible to groupBy(gid).applyInPandas — reintroducing a
         # per-query Exchange (see tools/explain_audit.py evidence).
+        # read before newSession(): the sibling starts from the static
+        # conf, so a runtime setting on the caller's session is lost
+        broadcast_max = (spark._jsparkSession.sessionState().conf()
+                         .autoBroadcastJoinThreshold())
         self.spark = spark.newSession()
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         spark = self.spark
@@ -243,20 +266,27 @@ class IndexSearcher:
         # per-batch term min/max stats keep pruning the term IN lookup
         n_groups_est = max(-(-self.max_doc // gf), 1)
         self._posts_parts = max(min(n_groups_est, 2 * par), 1)
+        posts_bytes = self._postings_bytes()
         if cache_postings is None:
             # auto: cache only when the postings plausibly fit — above
             # the threshold the persist would thrash executor memory at
             # cluster scale, and the sorted-parquet pushdown path is
             # the designed fallback (scan prunes row groups by term
             # min/max exactly like the cache prunes batches)
-            import os as _os
-
-            limit = int(_os.environ.get(
+            limit = int(os.environ.get(
                 "LSS_POSTINGS_CACHE_MAX_BYTES",
                 self.POSTINGS_CACHE_MAX_BYTES,
             ))
-            cache_postings = self._postings_bytes() <= limit
+            cache_postings = posts_bytes <= limit
         self.postings_cached = bool(cache_postings)
+        # driver path: when the whole index is as small as what Spark
+        # would broadcast anyway, the driver holds it and answers
+        # single queries in-process (_top_hits) — Lucene's in-process
+        # IndexSearcher; a Spark job's fixed cost would dominate. A
+        # threshold of -1 or uncached postings keep every query on Spark.
+        local = (self.postings_cached
+                 and self.max_doc <= self.SEGS_BROADCAST_MAX_DOCS
+                 and posts_bytes <= broadcast_max)
         posts = (
             read_postings_any(spark, snap.tables["postings"])
             .withColumn("gid", (F.col("seg_id") / F.lit(gf)).cast("long"))
@@ -285,14 +315,25 @@ class IndexSearcher:
         # groupBy — one shuffle leg instead of a cogroup's two, and no
         # per-query Arrow transfer of the segs side. Above the
         # threshold (cluster scale) the cogroup path delivers each task
-        # exactly its groups' norms. The one collect also gives n_groups.
+        # exactly its groups' norms. The one collect also gives n_groups;
+        # the driver path reads the same map with pyarrow (no job).
         self._segs_bc = None
-        if self.max_doc <= 32 * 1024 * 1024:
-            seg_pdf = segments.toPandas()
-            n_gids = seg_pdf["gid"].nunique()
-            self._segs_bc = spark.sparkContext.broadcast(
-                {int(g): p for g, p in seg_pdf.groupby("gid")}
-            )
+        # driver path state: postings as one Arrow table, each group's
+        # _group_ctx built once per searcher
+        self._local_postings = None
+        self._local_ctx: Dict[int, tuple] = {}
+        seg_map = None
+        if local:
+            seg_map = self._read_local_segments()
+            self._local_postings = self._read_local_postings()
+            self._local_row = namedtuple(
+                "Row", self._local_postings.column_names)._make
+        elif self.max_doc <= self.SEGS_BROADCAST_MAX_DOCS:
+            seg_map = {int(g): p for g, p in
+                       segments.toPandas().groupby("gid")}
+        if seg_map is not None:
+            self._segs_bc = spark.sparkContext.broadcast(seg_map)
+            n_gids = len(seg_map)
         else:
             n_gids = segments.select("gid").distinct().count()
         self.n_groups = max(int(n_gids), 1)
@@ -322,23 +363,57 @@ class IndexSearcher:
         """On-disk size of the postings parquet paths (driver-side file
         stat — no Spark job). Local-FS stand-in; on HDFS/S3 swap in the
         filesystem client's content summary."""
-        import os as _os
-
-        paths = self.snap.tables["postings"]
-        if not isinstance(paths, list):
-            paths = [paths]
         total = 0
-        for p in paths:
-            for root, _dirs, files in _os.walk(p):
+        for p in _as_list(self.snap.tables["postings"]):
+            for root, _dirs, files in os.walk(p):
                 for fn in files:
                     if fn.endswith(".parquet"):
                         try:
-                            total += _os.path.getsize(
-                                _os.path.join(root, fn)
-                            )
+                            total += os.path.getsize(os.path.join(root, fn))
                         except OSError:
                             pass
         return total
+
+    def _read_local_segments(self) -> Dict[int, pd.DataFrame]:
+        """The broadcast segment map read with pyarrow on the driver (no
+        Spark job): segment meta by gid, tombstones packed per segment
+        as sorted ``<i8`` docIDs — the rows _attach_tombstones builds."""
+        segs = pa.concat_tables([
+            pa_ds.dataset(os.path.join(p, "is_meta=true"), format="parquet")
+            .to_table(columns=["seg_id", "doc_base", "doc_count",
+                               "norms_enc"])
+            for p in _as_list(self.snap.tables["segments"])
+        ]).to_pandas()
+        tomb = self.snap.tables.get("tombstones")
+        if tomb:
+            ids = np.sort(pa_ds.dataset(tomb, format="parquet")
+                          .to_table(columns=["doc_id"])["doc_id"]
+                          .to_numpy())
+            base = segs["doc_base"].to_numpy()
+            lo = np.searchsorted(ids, base)
+            hi = np.searchsorted(ids, base + segs["doc_count"].to_numpy())
+            segs["deleted_enc"] = [
+                ids[a:b].astype("<i8").tobytes() if b > a else None
+                for a, b in zip(lo, hi)]
+        segs["gid"] = segs["seg_id"] // self.group_factor
+        return {int(g): p for g, p in segs.groupby("gid")}
+
+    def _read_local_postings(self) -> pa.Table:
+        """Every postings row (_POSTING_COLS plus gid) as one Arrow
+        table on the driver, sorted (term, seg_id) — the row order a
+        cached partition hands the kernel."""
+        parts = []
+        for p in _as_list(self.snap.tables["postings"]):
+            if _is_combined_dir(p):
+                p = os.path.join(p, "is_meta=false")
+                if not os.path.isdir(p):
+                    continue  # a generation without postings rows
+            parts.append(pa_ds.dataset(p, format="parquet")
+                         .to_table(columns=_POSTING_COLS))
+        tbl = pa.concat_tables(parts)
+        tbl = tbl.append_column(
+            "gid", pc.divide(tbl["seg_id"], self.group_factor))
+        return tbl.sort_by([("term", "ascending"), ("seg_id", "ascending")])
 
     def _attach_tombstones(self, segments: DataFrame, tomb_path: str):
         """Join the tombstone set onto segment meta as a per-segment
@@ -575,6 +650,51 @@ class IndexSearcher:
             .applyInPandas(kernel, schema=schema)
         )
 
+    def _top_hits(self, terms, kernel, k: Optional[int]) -> DataFrame:
+        """The single-query execution seam: the postings rows of
+        ``terms`` through the per-group ``kernel``, then the global
+        merge — score desc, doc_id asc, the first k (k=None: every
+        hit). On the driver path (see __init__) the kernel runs
+        in-process per group and the merged hits come back as a local
+        relation, so neither building nor collecting them runs a Spark
+        job; otherwise it is one kernel job over the cached postings."""
+        if self._local_postings is None or self._segs_bc is None:
+            posts = self._postings.filter(terms_in(terms))
+            out = self._run_kernel(posts, kernel, HITS_SCHEMA).orderBy(
+                F.desc("score"), F.asc("doc_id"))
+            return out if k is None else out.limit(k)
+        tbl = self._local_postings
+        cols = tbl.filter(pc.is_in(
+            tbl["term"], value_set=pa.array(list(terms), pa.string()))
+        ).to_pydict()
+        # rows by group, then by term: each term's rows in seg_id order
+        # (the table is sorted), the lists _rows_by_term builds
+        by_gid: Dict[int, Dict[str, list]] = {}
+        for r in map(self._local_row, zip(*cols.values())):
+            by_gid.setdefault(r.gid, {}).setdefault(r.term, []).append(r)
+        segs = self._segs_bc.value
+        parts = []
+        for gid, rows in by_gid.items():
+            if gid not in segs:
+                continue  # no meta: the kernel would return nothing
+            ctx = self._local_ctx.get(gid)
+            if ctx is None:
+                ctx = self._local_ctx[gid] = _group_ctx(segs[gid])
+            parts.append(kernel.with_shared(terms, {"ctx": ctx,
+                                                    "rows": rows}))
+        hits = pd.concat(parts, ignore_index=True) if parts else _empty_hits()
+        docs = hits["doc_id"].to_numpy()
+        scores = hits["score"].to_numpy()
+        order = np.lexsort((docs, -scores.astype(np.float64)))[:k]
+        return self._hits_frame(docs[order], scores[order])
+
+    def _hits_frame(self, docs=(), scores=()) -> DataFrame:
+        """(doc_id, score) rows as a local relation: collecting it runs
+        no Spark job, an empty one included."""
+        return self.spark.createDataFrame(pa.table({
+            "doc_id": pa.array(docs, pa.int64()),
+            "score": pa.array(scores, pa.float32())}), HITS_SCHEMA)
+
     # -- stage B + C: execute ----------------------------------------------
     def search(
         self,
@@ -608,15 +728,9 @@ class IndexSearcher:
             plan.after = (float(np.float32(after[0])), int(after[1]))
             wand = False
         if plan.empty:
-            return self.spark.createDataFrame([], "doc_id long, score float")
-        fetch = plan.terms + plan.exclude_terms
-        posts = self._postings.filter(terms_in(fetch))
-        kernel = make_group_scorer(plan, wand)
-        topk_per_group = self._run_kernel(
-            posts, kernel, "doc_id long, score float"
-        )
-        out = topk_per_group.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out if plan.k is None else out.limit(plan.k)
+            return self._hits_frame()
+        return self._top_hits(plan.terms + plan.exclude_terms,
+                              make_group_scorer(plan, wand), plan.k)
 
     def search_phrase(
         self, phrase_text: str, k: Optional[int] = 10, slop: int = 0
@@ -634,7 +748,7 @@ class IndexSearcher:
 
         tp = self.analyzer.analyze_with_positions(phrase_text)
         if not tp:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._hits_frame()
         p0 = tp[0][1]
         offsets = [(t, p - p0) for t, p in tp]
         return self._phrase_from_offsets(offsets, k, slop)
@@ -649,21 +763,18 @@ class IndexSearcher:
         uniq = list(dict.fromkeys(t for t, _ in offsets))
         dfs = self._lookup_dfs(uniq)
         if any(t not in dfs for t in uniq):
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._hits_frame()
         w = np.float32(0.0)
         for t, _ in offsets:  # f32 accumulation in clause order
             w = np.float32(w + idf(dfs[t], self.max_doc))
         wv = np.float32(w * K1_PLUS_1)
-        posts = self._postings.filter(terms_in(uniq))
         if slop > 0:
             kernel = make_sloppy_phrase_scorer(
                 offsets, wv, self.cache, k, int(slop)
             )
         else:
             kernel = make_phrase_scorer(offsets, wv, self.cache, k)
-        topk = self._run_kernel(posts, kernel, "doc_id long, score float")
-        out = topk.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out if k is None else out.limit(k)
+        return self._top_hits(uniq, kernel, k)
 
     def search_phrase_windows(self, windows, boost: float = 1.0
                               ) -> Optional[DataFrame]:
@@ -746,12 +857,9 @@ class IndexSearcher:
         wv = np.float32(w * K1_PLUS_1)
         present = [t for t in p_terms if t in dfs]
         if not present:
-            return self.spark.createDataFrame([], "doc_id long, score float")
-        posts = self._postings.filter(terms_in(present))
-        kernel = make_span_scorer(span, wv, self.cache, k)
-        topk = self._run_kernel(posts, kernel, "doc_id long, score float")
-        out = topk.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out if k is None else out.limit(k)
+            return self._hits_frame()
+        return self._top_hits(present,
+                              make_span_scorer(span, wv, self.cache, k), k)
 
     def search_complex_phrase(self, phrase_text: str, slop: int = 0,
                               k: Optional[int] = 10) -> DataFrame:
@@ -857,7 +965,7 @@ class IndexSearcher:
                 alts = (alts,)
             norm_slots.append((tuple(alts), int(pos)))
         if not norm_slots:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._hits_frame()
 
         all_terms_ordered = [t for alts, _ in norm_slots for t in alts]
         uniq = list(dict.fromkeys(all_terms_ordered))
@@ -872,8 +980,7 @@ class IndexSearcher:
             # rewrite(): BooleanQuery of SHOULD TermQueries (per-term
             # idf weights, DisjunctionSumScorer double accumulation)
             if not present:
-                return self.spark.createDataFrame(
-                    [], "doc_id long, score float")
+                return self._hits_frame()
             plan = QueryPlan(
                 terms=present,
                 dfs={t: dfs[t] for t in present},
@@ -884,15 +991,11 @@ class IndexSearcher:
             )
             if k is None:
                 plan.k = None  # type: ignore[assignment]
-            posts = self._postings.filter(terms_in(present))
-            kernel = make_group_scorer(plan, wand=False)
-            topk = self._run_kernel(posts, kernel,
-                                    "doc_id long, score float")
-            out = topk.orderBy(F.desc("score"), F.asc("doc_id"))
-            return out if k is None else out.limit(k)
+            return self._top_hits(present,
+                                  make_group_scorer(plan, wand=False), k)
 
         if not present:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._hits_frame()
         if slop > 0:
             seen: set = set()
             for alts, _ in norm_slots:
@@ -905,12 +1008,9 @@ class IndexSearcher:
                         "documented scope cut")
                 seen |= aset
         wv = np.float32(w * K1_PLUS_1)
-        posts = self._postings.filter(terms_in(present))
         kernel = make_multi_phrase_scorer(
             norm_slots, wv, self.cache, k, int(slop))
-        topk = self._run_kernel(posts, kernel, "doc_id long, score float")
-        out = topk.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out if k is None else out.limit(k)
+        return self._top_hits(present, kernel, k)
 
     def search_boosting(self, match_query: str, context_query: str,
                         demote: float, k: Optional[int] = 10) -> DataFrame:
@@ -2110,10 +2210,13 @@ class IndexSearcher:
         abort the search when the budget expires, raising
         TimeExceededError (the reference's TimeExceededException
         default; its optional greedy/partial mode has no analogue here
-        because a cancelled Spark job yields no partial rows). The
-        budget is enforced by cancelling the query's job group — the
-        distributed equivalent of the collector's per-doc clock check.
-        Returns collected rows (this API is eager by necessity)."""
+        because a cancelled Spark job yields no partial rows). On the
+        distributed path the budget is enforced by cancelling the
+        query's job group — the distributed equivalent of the
+        collector's per-doc clock check. On the driver path (see
+        _top_hits) there is no job to cancel: the search runs to its
+        end and the clock check after it raises. Returns collected rows
+        (this API is eager by necessity)."""
         import threading
         import time as _time
         import uuid
@@ -3459,7 +3562,8 @@ def _kernel(body, k: Optional[int],
             after: Optional[Tuple[float, int]] = None):
     """Wrap a per-group ``body`` (see the contract above) into the
     2-arg cogroup kernel; ``kernel.with_shared(terms, shared)`` is the
-    search_many entry over a group's _batch_shared state."""
+    search_many entry over a group's _batch_shared state (and the
+    driver path's, see IndexSearcher._top_hits)."""
 
     def score(g: _Group) -> pd.DataFrame:
         hit = body(g)

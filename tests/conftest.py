@@ -46,3 +46,34 @@ def built(spark, small_corpus, tmp_path_factory):
         [(i, r["content"]) for i, r in enumerate(docs_sorted)]
     )
     return index_dir, oracle
+
+
+@pytest.fixture(scope="session")
+def spark_distributed(spark):
+    """A session whose searchers keep single queries on Spark: a -1
+    broadcast threshold turns IndexSearcher's driver path off."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    return s
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """count_jobs(fn) -> (fn(), number of Spark jobs fn ran), counted
+    under a job group of its own."""
+    import itertools
+
+    sc = spark.sparkContext
+    ids = itertools.count()
+
+    def run(fn):
+        group = f"count-jobs-{next(ids)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

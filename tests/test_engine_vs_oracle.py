@@ -364,7 +364,7 @@ def test_sb_composition_equals_fused_alias(spark, built, alias, composed):
     assert a == b, (alias, composed)
 
 
-def test_cogroup_path_matches_broadcast_path(spark, built):
+def test_cogroup_path_matches_broadcast_path(spark, built, count_jobs):
     """The at-scale cogroup execution (norms too big to broadcast) must
     return bit-identical results to the broadcast fast path."""
     index_dir, _ = built
@@ -376,11 +376,15 @@ def test_cogroup_path_matches_broadcast_path(spark, built):
     ph_a = [(r["doc_id"], np.float32(r["score"]))
             for r in s.search_phrase("seven hundred", k=10).collect()]
     s._segs_bc = None  # force the cogroup path
-    b = [(r["doc_id"], np.float32(r["score"]))
-         for r in s.search("common_util base_handler", k=10,
-                           mode="and").collect()]
-    ph_b = [(r["doc_id"], np.float32(r["score"]))
-            for r in s.search_phrase("seven hundred", k=10).collect()]
+    rows, n_jobs = count_jobs(lambda: s.search(
+        "common_util base_handler", k=10, mode="and").collect())
+    b = [(r["doc_id"], np.float32(r["score"])) for r in rows]
+    rows, n_phrase_jobs = count_jobs(lambda: s.search_phrase(
+        "seven hundred", k=10).collect())
+    ph_b = [(r["doc_id"], np.float32(r["score"])) for r in rows]
+    # the forced side really ran on Spark, not on the driver path
+    assert n_jobs >= 1 and n_phrase_jobs >= 1
+    assert a
     assert a == b
     assert ph_a == ph_b
 

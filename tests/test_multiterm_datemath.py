@@ -176,7 +176,7 @@ def test_numeric_range_and_field_value(spark, built):
     assert searcher.field_value_docs("lang", exists=False).count() == 0
 
 
-def test_uncached_postings_path_rank_identical(spark, built):
+def test_uncached_postings_path_rank_identical(spark, built, count_jobs):
     """The postings >> RAM fallback (no persist, parquet pushdown) must
     return bit-identical results to the cached path, and the scan plan
     must show the term predicate pushed into parquet."""
@@ -189,9 +189,11 @@ def test_uncached_postings_path_rank_identical(spark, built):
                                         {"mode": "and"})]:
         a = [(r["doc_id"], np.float32(r["score"]).tobytes())
              for r in cached.search(q, k=10, **kw).collect()]
-        b = [(r["doc_id"], np.float32(r["score"]).tobytes())
-             for r in uncached.search(q, k=10, **kw).collect()]
-        assert a == b, q
+        rows, n_jobs = count_jobs(
+            lambda: uncached.search(q, k=10, **kw).collect())
+        b = [(r["doc_id"], np.float32(r["score"]).tobytes()) for r in rows]
+        assert n_jobs >= 1, q  # the uncached side ran on Spark
+        assert a and a == b, q
     plan = (
         uncached._postings.filter(
             uncached._postings["term"].isin(["common_util"])
@@ -209,21 +211,35 @@ def test_uncached_postings_path_rank_identical(spark, built):
         del os.environ["LSS_POSTINGS_CACHE_MAX_BYTES"]
 
 
-def test_time_limiting_collector(spark, built):
-    """TimeLimitingCollector analogue: a generous budget returns the
-    normal top-k; an expired budget cancels the job group and raises
-    TimeExceededError."""
+def _check_time_limit(s):
     from lucene_solr_spark.search.executor import TimeExceededError
 
-    index_dir, _ = built
-    s = IndexSearcher(spark, index_dir)
     rows = s.search_with_time_limit("common_util", timeout_ms=120_000,
                                     k=5)
     want = s.search("common_util", k=5).collect()
-    assert [r["doc_id"] for r in rows] == [r["doc_id"] for r in want]
+    assert rows and [r["doc_id"] for r in rows] == [
+        r["doc_id"] for r in want]
     with pytest.raises(TimeExceededError):
         s.search_with_time_limit("common_util base_handler",
                                  timeout_ms=1, k=5, mode="and")
+
+
+def test_time_limiting_collector(spark, built):
+    """TimeLimitingCollector analogue: a generous budget returns the
+    normal top-k; an expired budget raises TimeExceededError. On the
+    driver path there is no job to cancel: the clock check after the
+    run raises."""
+    s = IndexSearcher(spark, built[0])
+    assert s._local_postings is not None
+    _check_time_limit(s)
+
+
+def test_time_limiting_collector_distributed(spark_distributed, built):
+    """The same on the distributed path, where an expired budget
+    cancels the query's job group."""
+    s = IndexSearcher(spark_distributed, built[0])
+    assert s._local_postings is None
+    _check_time_limit(s)
 
 
 def test_date_math_parser():

@@ -129,8 +129,11 @@ def test_searcher_opens_a_tombstoned_index_in_three_jobs(spark, tmp_path):
 def test_one_bucket_append_plans_without_a_job(spark, source):
     """A corpus that fits one key bucket (an NRT micro-batch) is
     neither counted nor sampled: a local pandas batch, the shape NRT
-    appends get, is planned without any Spark job. The plan equals the
-    aggregate's answer for any source."""
+    appends get, is planned without any Spark job. Any other source
+    pays the bounded take of its keys once per plan: the count reuses
+    the keys compute_key_bounds took (2 jobs for the row-list source;
+    4 when each pass took them). The plan equals the aggregate's answer
+    for any source."""
     rows = _docs(0, 40, 6) + _docs(0, 5, 7)   # 5 duplicate keys
     corpus = spark.createDataFrame(
         pd.DataFrame(rows) if source == "pandas" else rows,
@@ -142,6 +145,8 @@ def test_one_bucket_append_plans_without_a_job(spark, source):
                              lambda: count_keys_per_bucket(corpus, bounds))
     if source == "pandas":
         assert (n_bounds, n_counts) == (0, 0)
+    else:
+        assert n_counts == 0 and n_bounds + n_counts == 2
     want = corpus.agg(F.count_distinct(
         F.struct("repo", "path", "commit"))).first()[0]
     assert bounds == [] and counts == {0: want} and want == 40
