@@ -22,9 +22,9 @@ lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:259-273):
     tie-break, TopDocs.java:95-117; SURVEY.md section 3.3).
 
 Physical execution adapts to scale:
-  - an index whose cached postings fit the caller session's
-    autoBroadcastJoinThreshold is also held on the driver: single
-    queries run the same kernels in-process and merge there
+  - an index whose cached postings are at most
+    IndexSearcher.LOCAL_POSTINGS_MAX_BYTES is also held on the driver:
+    single queries run the same kernels in-process and merge there
     (IndexSearcher._top_hits), with no Spark job — stage B and C
     without the cluster;
   - postings cache pre-partitioned by scoring group (term-sorted within
@@ -53,6 +53,8 @@ import json
 import math
 import os
 import re
+import threading
+import time
 from collections import namedtuple
 from dataclasses import dataclass
 from typing import Dict, List, Optional, Tuple
@@ -213,6 +215,11 @@ class IndexSearcher:
     POSTINGS_CACHE_MAX_BYTES = 8 * 1024 ** 3
     # segment meta (~1 byte/doc of norms) is broadcast up to this size
     SEGS_BROADCAST_MAX_DOCS = 32 * 1024 * 1024
+    # cached postings up to this on-disk size are also held on the
+    # driver, which answers single queries in-process (_top_hits).
+    # Below the measured driver-vs-Spark crossover (README, "Driver
+    # path for single queries"); -1 keeps every query on Spark.
+    LOCAL_POSTINGS_MAX_BYTES = 32 * 1024 * 1024
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  cache_postings: Optional[bool] = None):
@@ -226,10 +233,6 @@ class IndexSearcher:
         # postings plan so its gid hash partitioning is no longer
         # visible to groupBy(gid).applyInPandas — reintroducing a
         # per-query Exchange (see tools/explain_audit.py evidence).
-        # read before newSession(): the sibling starts from the static
-        # conf, so a runtime setting on the caller's session is lost
-        broadcast_max = (spark._jsparkSession.sessionState().conf()
-                         .autoBroadcastJoinThreshold())
         self.spark = spark.newSession()
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         spark = self.spark
@@ -279,14 +282,13 @@ class IndexSearcher:
             ))
             cache_postings = posts_bytes <= limit
         self.postings_cached = bool(cache_postings)
-        # driver path: when the whole index is as small as what Spark
-        # would broadcast anyway, the driver holds it and answers
-        # single queries in-process (_top_hits) — Lucene's in-process
-        # IndexSearcher; a Spark job's fixed cost would dominate. A
-        # threshold of -1 or uncached postings keep every query on Spark.
+        # driver path: a small index is held on the driver, which
+        # answers single queries in-process (_top_hits) — Lucene's
+        # in-process IndexSearcher; a Spark job's fixed cost would
+        # dominate. Uncached postings keep every query on Spark.
         local = (self.postings_cached
                  and self.max_doc <= self.SEGS_BROADCAST_MAX_DOCS
-                 and posts_bytes <= broadcast_max)
+                 and posts_bytes <= self.LOCAL_POSTINGS_MAX_BYTES)
         posts = (
             read_postings_any(spark, snap.tables["postings"])
             .withColumn("gid", (F.col("seg_id") / F.lit(gf)).cast("long"))
@@ -315,25 +317,23 @@ class IndexSearcher:
         # groupBy — one shuffle leg instead of a cogroup's two, and no
         # per-query Arrow transfer of the segs side. Above the
         # threshold (cluster scale) the cogroup path delivers each task
-        # exactly its groups' norms. The one collect also gives n_groups;
-        # the driver path reads the same map with pyarrow (no job).
+        # exactly its groups' norms. The broadcast map is read with
+        # pyarrow on the driver (no Spark job); it also gives n_groups.
         self._segs_bc = None
         # driver path state: postings as one Arrow table, each group's
         # _group_ctx built once per searcher
         self._local_postings = None
         self._local_ctx: Dict[int, tuple] = {}
-        seg_map = None
-        if local:
+        # search_with_time_limit's deadline, per calling thread
+        self._timed = threading.local()
+        if self.max_doc <= self.SEGS_BROADCAST_MAX_DOCS:
             seg_map = self._read_local_segments()
-            self._local_postings = self._read_local_postings()
-            self._local_row = namedtuple(
-                "Row", self._local_postings.column_names)._make
-        elif self.max_doc <= self.SEGS_BROADCAST_MAX_DOCS:
-            seg_map = {int(g): p for g, p in
-                       segments.toPandas().groupby("gid")}
-        if seg_map is not None:
             self._segs_bc = spark.sparkContext.broadcast(seg_map)
             n_gids = len(seg_map)
+            if local:
+                self._local_postings = self._read_local_postings()
+                self._local_row = namedtuple(
+                    "Row", self._local_postings.column_names)._make
         else:
             n_gids = segments.select("gid").distinct().count()
         self.n_groups = max(int(n_gids), 1)
@@ -377,7 +377,8 @@ class IndexSearcher:
     def _read_local_segments(self) -> Dict[int, pd.DataFrame]:
         """The broadcast segment map read with pyarrow on the driver (no
         Spark job): segment meta by gid, tombstones packed per segment
-        as sorted ``<i8`` docIDs — the rows _attach_tombstones builds."""
+        as sorted ``<i8`` docIDs — the rows _attach_tombstones builds
+        for the cogroup path."""
         segs = pa.concat_tables([
             pa_ds.dataset(os.path.join(p, "is_meta=true"), format="parquet")
             .to_table(columns=["seg_id", "doc_base", "doc_count",
@@ -673,8 +674,12 @@ class IndexSearcher:
         for r in map(self._local_row, zip(*cols.values())):
             by_gid.setdefault(r.gid, {}).setdefault(r.term, []).append(r)
         segs = self._segs_bc.value
+        deadline = getattr(self._timed, "deadline", None)
         parts = []
         for gid, rows in by_gid.items():
+            # TimeLimitingCollector's clock, checked between groups
+            if deadline is not None and time.monotonic() >= deadline:
+                raise TimeExceededError("time limit reached")
             if gid not in segs:
                 continue  # no meta: the kernel would return nothing
             ctx = self._local_ctx.get(gid)
@@ -2214,31 +2219,29 @@ class IndexSearcher:
         distributed path the budget is enforced by cancelling the
         query's job group — the distributed equivalent of the
         collector's per-doc clock check. On the driver path (see
-        _top_hits) there is no job to cancel: the search runs to its
-        end and the clock check after it raises. Returns collected rows
+        _top_hits) there is no job to cancel: the clock is checked
+        before each scoring group's kernel. Returns collected rows
         (this API is eager by necessity)."""
-        import threading
-        import time as _time
         import uuid
 
         sc = self.spark.sparkContext
         group = f"lss-timed-{uuid.uuid4().hex[:8]}"
         done = threading.Event()
-        t0 = _time.monotonic()
-        deadline = t0 + timeout_ms / 1000.0
+        deadline = time.monotonic() + timeout_ms / 1000.0
 
         def killer():
             # keep cancelling past the deadline until the submitter
             # thread finishes — a single cancel can land BEFORE the job
             # is registered and silently no-op
             while not done.wait(0.05):
-                if _time.monotonic() >= deadline:
+                if time.monotonic() >= deadline:
                     sc.cancelJobGroup(group)
 
         t = threading.Thread(target=killer, daemon=True)
         sc.setJobGroup(group, f"time-limited search: {query_text!r}",
                        interruptOnCancel=True)
         t.start()
+        self._timed.deadline = deadline
         try:
             rows = self.search(query_text, k=k, **kw).collect()
         except Exception as e:  # cancelled job surfaces as a Py4J error
@@ -2246,9 +2249,10 @@ class IndexSearcher:
                 f"search exceeded {timeout_ms} ms: {query_text!r}"
             ) from e
         finally:
+            self._timed.deadline = None
             done.set()
             sc.setJobGroup(None, None)
-        if _time.monotonic() >= deadline:
+        if time.monotonic() >= deadline:
             # clock ran out while collecting (the reference collector
             # checks the clock per doc and raises even if a segment
             # finished) — partial results are not returned by default

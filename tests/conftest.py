@@ -49,12 +49,18 @@ def built(spark, small_corpus, tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
-def spark_distributed(spark):
-    """A session whose searchers keep single queries on Spark: a -1
-    broadcast threshold turns IndexSearcher's driver path off."""
-    s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    return s
+def open_distributed():
+    """open_distributed(spark, index_dir, **kw) -> an IndexSearcher that
+    keeps single queries on Spark: its driver path is off
+    (LOCAL_POSTINGS_MAX_BYTES -1 while it opens)."""
+    from lucene_solr_spark.search.executor import IndexSearcher
+
+    def open_(spark, index_dir, **kw):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(IndexSearcher, "LOCAL_POSTINGS_MAX_BYTES", -1)
+            return IndexSearcher(spark, index_dir, **kw)
+
+    return open_
 
 
 @pytest.fixture(scope="session")

@@ -1,5 +1,5 @@
 """Single queries scored on the driver: when the postings are cached
-and no larger than the session's broadcast threshold, IndexSearcher
+and no larger than IndexSearcher.LOCAL_POSTINGS_MAX_BYTES, IndexSearcher
 holds the index on the driver and answers search / search_phrase (and
 the span and multi-phrase surfaces, which share the execution seam)
 in-process. Every routed surface must return bit-identical (doc_id,
@@ -52,9 +52,9 @@ def index_dir(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def searchers(spark, spark_distributed, index_dir):
+def searchers(spark, open_distributed, index_dir):
     local = IndexSearcher(spark, index_dir)
-    dist = IndexSearcher(spark_distributed, index_dir)
+    dist = open_distributed(spark, index_dir)
     assert local._local_postings is not None
     assert dist._local_postings is None and dist._segs_bc is not None
     return local, dist
@@ -152,23 +152,17 @@ def test_driver_path_runs_no_job(spark, index_dir, count_jobs):
                                s.search("w00", k=None).collect()}
 
 
-@pytest.mark.parametrize("how", ["threshold", "uncached"])
-def test_distributed_path_selection(spark, spark_distributed, index_dir,
+@pytest.mark.parametrize("how", ["bound", "uncached"])
+def test_distributed_path_selection(spark, open_distributed, index_dir,
                                     count_jobs, how):
-    s = (IndexSearcher(spark_distributed, index_dir) if how == "threshold"
-         else IndexSearcher(spark, index_dir, cache_postings=False))
+    s, n_open = count_jobs(
+        lambda: open_distributed(spark, index_dir) if how == "bound"
+        else IndexSearcher(spark, index_dir, cache_postings=False))
     assert s._local_postings is None
+    # the segment map is read with pyarrow on this path too
+    assert s._segs_bc is not None and n_open == 0
     rows, n = count_jobs(lambda: s.search("w00 w01", k=5).collect())
     assert rows and n >= 1
     rows, n = count_jobs(lambda: s.search_phrase("w00 w01").collect())
     assert rows and n >= 1
 
-
-def test_threshold_is_read_from_the_callers_session(spark, index_dir):
-    """A runtime threshold on the caller's session decides, although
-    the searcher's own sibling session starts from the static conf."""
-    caller = spark.newSession()
-    caller.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-    assert IndexSearcher(caller, index_dir)._local_postings is None
-    caller.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
-    assert IndexSearcher(caller, index_dir)._local_postings is not None

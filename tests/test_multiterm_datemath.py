@@ -226,20 +226,53 @@ def _check_time_limit(s):
 
 def test_time_limiting_collector(spark, built):
     """TimeLimitingCollector analogue: a generous budget returns the
-    normal top-k; an expired budget raises TimeExceededError. On the
-    driver path there is no job to cancel: the clock check after the
-    run raises."""
+    normal top-k; an expired budget raises TimeExceededError."""
     s = IndexSearcher(spark, built[0])
     assert s._local_postings is not None
     _check_time_limit(s)
 
 
-def test_time_limiting_collector_distributed(spark_distributed, built):
+def test_time_limiting_collector_distributed(spark, built,
+                                             open_distributed):
     """The same on the distributed path, where an expired budget
     cancels the query's job group."""
-    s = IndexSearcher(spark_distributed, built[0])
+    s = open_distributed(spark, built[0])
     assert s._local_postings is None
     _check_time_limit(s)
+
+
+def test_time_limit_stops_between_groups_on_the_driver_path(
+        spark, built, monkeypatch):
+    """On the driver path the clock is checked before each scoring
+    group's kernel: with every group slowed down, a short budget stops
+    the search after the group it expired in, well before the untimed
+    run would finish."""
+    import time
+
+    from lucene_solr_spark.search import executor
+    from lucene_solr_spark.search.executor import TimeExceededError
+
+    s = IndexSearcher(spark, built[0])
+    assert s._local_postings is not None
+    real = executor._group_ctx
+    calls = []
+
+    def slow_ctx(seg_pdf):
+        calls.append(1)
+        time.sleep(0.3)
+        return real(seg_pdf)
+
+    monkeypatch.setattr(executor, "_group_ctx", slow_ctx)
+    assert s.search("common_util", k=5).collect()
+    n_groups = len(calls)
+    assert n_groups >= 2
+    s._local_ctx.clear()
+    calls.clear()
+    t0 = time.monotonic()
+    with pytest.raises(TimeExceededError):
+        s.search_with_time_limit("common_util", timeout_ms=100, k=5)
+    assert len(calls) <= 1
+    assert time.monotonic() - t0 < 0.3 * n_groups
 
 
 def test_date_math_parser():

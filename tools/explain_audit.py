@@ -3,10 +3,10 @@ key plans and checks the properties the 100 TB design depends on:
 
   1. query path: ZERO Exchange below the scoring kernel (the postings
      cache partitioning is reused by groupBy(gid).applyInPandas) —
-     audited on searchers opened from a session with a -1 broadcast
-     threshold, which keeps single queries on Spark; with the default
-     threshold the audit index is small enough for the driver path,
-     and a single query plans as a LocalRelation;
+     audited on searchers opened with the driver path off
+     (IndexSearcher.LOCAL_POSTINGS_MAX_BYTES -1), which keeps single
+     queries on Spark; by default the audit index is small enough for
+     the driver path, and a single query plans as a LocalRelation;
   2. docs/term_stats scans: filters pushed to parquet (PushedFilters),
      columns pruned (ReadSchema);
   3. build counts pass: content column pruned below the exchange
@@ -21,7 +21,7 @@ from __future__ import annotations
 import io
 import os
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,6 +35,20 @@ def fmt(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+@contextmanager
+def driver_path_off():
+    """Searchers opened inside keep single queries on Spark, so their
+    distributed plans can be audited."""
+    from lucene_solr_spark.search.executor import IndexSearcher
+
+    old = IndexSearcher.LOCAL_POSTINGS_MAX_BYTES
+    IndexSearcher.LOCAL_POSTINGS_MAX_BYTES = -1
+    try:
+        yield
+    finally:
+        IndexSearcher.LOCAL_POSTINGS_MAX_BYTES = old
 
 
 def main() -> None:
@@ -64,10 +78,10 @@ def main() -> None:
     )
     merge_postings(spark, work, segs_per_group=4)
     s = IndexSearcher(spark, work)
-    # a -1 broadcast threshold keeps single queries on Spark: sections
-    # that audit a query's distributed plan open their searcher here
+    # sections that audit a query's distributed plan open their
+    # searcher under driver_path_off(), from a session of their own (the
+    # entry queries cache one searcher per session)
     dist = spark.newSession()
-    dist.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     sections = []
 
@@ -79,8 +93,9 @@ def main() -> None:
          == "LocalRelation" and "LocalTableScan" in plan),
     ]))
 
-    q = IndexSearcher(dist, work).search("common_util base_handler", k=10,
-                                         mode="and")
+    with driver_path_off():
+        q = IndexSearcher(spark, work).search("common_util base_handler",
+                                              k=10, mode="and")
     plan = fmt(q)
     sections.append(("Single query (AND, WAND on)", plan, [
         ("no shuffle below the kernel",
@@ -127,7 +142,8 @@ def main() -> None:
 
     sf = "/root/testdata/sf0.001"
 
-    plan = fmt(QUERIES["dismax_top10"](dist, sf))
+    with driver_path_off():
+        plan = fmt(QUERIES["dismax_top10"](dist, sf))
     sections.append(("DisMax top-10", plan, [
         ("no shuffle below the kernel",
          plan.split("InMemoryRelation")[0].count("Exchange") == 0),
@@ -168,7 +184,8 @@ def main() -> None:
         ("only the final sort shuffles", plan.count("Exchange") <= 2),
     ]))
 
-    plan = fmt(QUERIES["span_near_ordered"](dist, sf))
+    with driver_path_off():
+        plan = fmt(QUERIES["span_near_ordered"](dist, sf))
     sections.append(("Span near ordered (spans algebra in the kernel)", plan, [
         ("no shuffle below the kernel",
          plan.split("InMemoryRelation")[0].count("Exchange") == 0),
@@ -458,7 +475,8 @@ def main() -> None:
          "TakeOrderedAndProject" in plan),
     ]))
 
-    plan = fmt(QUERIES["graph_syn_phrase"](dist, sf))
+    with driver_path_off():
+        plan = fmt(QUERIES["graph_syn_phrase"](dist, sf))
     sections.append(("Query-time multi-word synonym span query", plan, [
         ("no cartesian", "CartesianProduct" not in plan),
         ("span evaluation in an Arrow kernel stage",
