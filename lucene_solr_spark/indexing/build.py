@@ -51,11 +51,14 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 from typing import Dict, Iterator, List, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pq
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -231,6 +234,71 @@ def write_term_stats(stats: DataFrame, path: str, n_docs: int) -> None:
         .sortWithinPartitions("term")
         .write.mode("overwrite").parquet(path)
     )
+
+
+# -- driver path -------------------------------------------------------------
+# An index whose segment meta fits a broadcast and whose postings are at
+# most LOCAL_POSTINGS_MAX_BYTES on disk is held on the driver: the
+# searcher answers single queries in-process, and NRT appends and
+# deletes write with pyarrow, like Lucene's in-process flush
+# (DirectoryReader.open(writer)). The bound sits below the measured
+# driver-vs-Spark query crossover (README, "Driver path for single
+# queries"); -1 keeps every query and write on Spark.
+SEGS_BROADCAST_MAX_DOCS = 32 * 1024 * 1024
+LOCAL_POSTINGS_MAX_BYTES = 32 * 1024 * 1024
+
+
+def postings_bytes(paths) -> int:
+    """On-disk size of the postings parquet paths (driver-side file
+    stat — no Spark job). Local-FS stand-in; on HDFS/S3 swap in the
+    filesystem client's content summary."""
+    total = 0
+    for p in _as_list(paths):
+        for root, _dirs, files in os.walk(p):
+            for fn in files:
+                if fn.endswith(".parquet"):
+                    try:
+                        total += os.path.getsize(os.path.join(root, fn))
+                    except OSError:
+                        pass
+    return total
+
+
+def held_on_driver(snap: Snapshot) -> bool:
+    """The driver-path rule for the index at ``snap``, shared by the
+    searcher's open and the NRT writers (no Spark job)."""
+    with open(snap.tables["collection_stats"]) as f:
+        max_doc = int(json.load(f)["max_doc"])
+    return (max_doc <= SEGS_BROADCAST_MAX_DOCS
+            and postings_bytes(snap.tables["postings"])
+            <= LOCAL_POSTINGS_MAX_BYTES)
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """Arrow schema of one of the declared DDL strings above."""
+    types = {"string": pa.string(), "long": pa.int64(), "int": pa.int32(),
+             "binary": pa.binary(), "boolean": pa.bool_(),
+             "array<string>": pa.list_(pa.string())}
+    return pa.schema([(name, types[t]) for name, t in
+                      (f.split(" ", 1) for f in ddl.split(", "))])
+
+
+def _write_parquet(tbl: pa.Table, path: str, n_files: int = 1) -> None:
+    """Overwrite ``path`` with ``tbl`` in ``n_files`` contiguous slices,
+    the way the Spark writers lay it out: zstd level 3 (the session's
+    codec at Spark's level), no dictionary pages, no Arrow or pandas
+    schema metadata. With those settings the files come out no bigger
+    than Spark's."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    tbl = tbl.replace_schema_metadata(None)
+    step = -(-tbl.num_rows // n_files) if tbl.num_rows else 0
+    for i in range(n_files):
+        pq.write_table(
+            tbl.slice(i * step, step) if step else tbl,
+            os.path.join(path, f"part-{i:05d}.parquet"),
+            compression="zstd", compression_level=3,
+            use_dictionary=False, store_schema=False)
 
 
 class KeyBounds(list):
@@ -625,23 +693,12 @@ def invert_segment(
             "stf": o_stf,
         }
     else:
-        cols = {c: [] for c in (
-            "is_meta", "term", "seg_id", "df", "cf", "doc_ids_enc",
-            "tfs_enc", "skips_enc", "pos_enc", "pos_cnts", "sdoc", "stf",
-        )}
-    pdf = pd.DataFrame(
-        {c: (pd.Series(v, dtype=object) if not isinstance(v, np.ndarray)
-             else v)
-         for c, v in cols.items()}
-    )
-    for c in ("doc_base", "doc_count", "sum_len", "norms_enc",
-              "doc_lens_enc", "input_sha256", "term_lo", "term_hi",
-              "post_bytes", *_ARRAY_COLS):
-        pdf[c] = None
+        n_terms = 0
+        cols = {"term": [], "doc_ids_enc": [], "tfs_enc": [],
+                "skips_enc": []}
     # lineage stats computed in-pass: per-segment term range + encoded
     # byte volume ride the meta row, so the lineage step never re-reads
     # the postings output
-    n_terms_out = len(cols["term"])
     post_bytes = sum(
         len(v) for col in (cols["doc_ids_enc"], cols["tfs_enc"],
                            cols["skips_enc"])
@@ -652,8 +709,8 @@ def invert_segment(
         "cf": None, "doc_ids_enc": None, "tfs_enc": None,
         "skips_enc": None, "pos_enc": None, "pos_cnts": None,
         "sdoc": None, "stf": None,
-        "term_lo": cols["term"][0] if n_terms_out else None,
-        "term_hi": cols["term"][-1] if n_terms_out else None,
+        "term_lo": cols["term"][0] if n_terms else None,
+        "term_hi": cols["term"][-1] if n_terms else None,
         "post_bytes": post_bytes,
         "doc_base": doc_base, "doc_count": n_docs,
         "sum_len": total_tokens, "norms_enc": nb_lookup.tobytes(),
@@ -665,12 +722,18 @@ def invert_segment(
         "langs": None if keys is None else list(keys["lang"]),
         "shas": list(shas) if keys is not None else None,
     }
-    meta_df = pd.DataFrame(
-        {k: pd.Series([v], dtype=object) for k, v in meta.items()}
-    )
-    pdf = pd.concat([pdf[_OUT_COLS], meta_df[_OUT_COLS]],
-                    ignore_index=True)
-    return pdf
+    # one object column per output column: the postings values, then
+    # the meta row's (postings rows leave the meta columns null, the
+    # meta row the postings columns)
+    out = {}
+    for c in _OUT_COLS:
+        v = cols.get(c)
+        if v is None:
+            v = [None] * n_terms
+        elif isinstance(v, np.ndarray):
+            v = v.tolist()
+        out[c] = pd.Series([*v, meta[c]], dtype=object)
+    return pd.DataFrame(out)
 
 
 _OUT_COLS = [f.split()[0].strip(", ") for f in SEGMENT_OUT_SCHEMA.split(", ")]
@@ -1262,37 +1325,19 @@ def append_documents(
     as a new storage generation, and stats are updated incrementally —
     no touch of existing postings. Keys already present are tombstoned
     first (IndexWriter.updateDocuments delete-then-add semantics,
-    IndexWriter.java:1257)."""
+    IndexWriter.java:1257).
+
+    An index held on the driver (held_on_driver) takes a batch of at
+    most DOCS_PER_BUCKET rows in-process, like Lucene's in-process
+    flush: one bounded take of the rows (no Spark job for a local
+    pandas-backed batch), the same segment kernel, pyarrow writes.
+    Bigger indexes and batches run the Spark plan (_append_spark)."""
     cat = Catalog(index_dir)
     snap = cat.latest_at_stage("commit", "merge", "delete")
     if snap is None:
         raise ValueError("append requires a committed index")
     props = dict(snap.props)
     n0 = int(props["max_doc"])
-    dps = int(props.get("docs_per_segment", DEFAULT_DOCS_PER_SEGMENT))
-
-    # same single-pass shape as build: one range shuffle of the delta,
-    # one Arrow crossing; new docIDs continue the dense space at n0, so
-    # appended segments (seg_id = doc_base >= n0) slot into existing
-    # scoring groups by construction
-    bounds = compute_key_bounds(corpus)
-    keyed = _keyed_corpus(corpus, bounds)
-    counts = count_keys_per_bucket(corpus, bounds)
-    offsets, n_new = offsets_from_counts(counts, base=n0)
-    if n_new == 0:
-        return snap
-    gen = snap.snapshot_id + 1
-    path = cat.path("seg", f"append-{gen}")
-    (
-        keyed.mapInPandas(
-            make_stream_builder(
-                offsets, dps, props.get("analyzer", "standard"),
-                codec=props.get("codec", "for128"),
-            ),
-            schema=SEGMENT_OUT_SCHEMA,
-        )
-        .write.mode("overwrite").partitionBy("is_meta").parquet(path)
-    )
     # Crash-safe append protocol: every write in this function targets a
     # NEW generation-specific path; the ONE snapshot commit at the end
     # flips visibility (docs list + stats + tombstones together). A
@@ -1302,23 +1347,27 @@ def append_documents(
     # (IndexWriter two-phase commit semantics, IndexWriter.java
     # prepareCommit/commit; ADVICE r1: no in-place mutation of the live
     # docs table, no separate delete commit).
-    docs_gen_path = cat.path("docs_gen", f"gen-{gen}")
-    write_docs_table(spark, path, cat.path("seg"), docs_gen_path)
-
-    # incremental stats: old + delta in one aggregation, never a full
-    # re-aggregation of the postings
-    apost, _ = read_segment_output(spark, path, cat.path("seg"))
-    old_ts = read_table(spark, TERM_STATS_SCHEMA, snap.tables["term_stats"])
-    ts_path = cat.path("stats", f"term_stats_gen{gen}")
-    write_term_stats(
-        old_ts.unionByName(apost.select("term", "df", "cf"))
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
-        ts_path, n0 + n_new,
-    )
+    gen = snap.snapshot_id + 1
+    paths = {
+        "seg": cat.path("seg", f"append-{gen}"),
+        "docs": cat.path("docs_gen", f"gen-{gen}"),
+        "term_stats": cat.path("stats", f"term_stats_gen{gen}"),
+        "tombstones": cat.path("tombstones", f"gen-{gen}"),
+    }
+    rows = None
+    if held_on_driver(snap):
+        rows = corpus.limit(DOCS_PER_BUCKET + 1).collect()
+        if len(rows) > DOCS_PER_BUCKET:
+            rows = None
+    if rows is not None:
+        n_new = _append_local(snap, rows, paths)
+    else:
+        n_new = _append_spark(spark, snap, corpus, paths, cat.path("seg"))
+    if n_new == 0:
+        return snap
     # the delta's collection stats sum its few meta rows: read on the
     # driver (like IndexSearcher._lookup_dfs), not by a Spark job
-    meta = pq.read_table(os.path.join(path, "is_meta=true"),
+    meta = pq.read_table(os.path.join(paths["seg"], "is_meta=true"),
                          columns=["doc_count", "sum_len"])
     coll = {
         "max_doc": n0 + int(pc.sum(meta["doc_count"]).as_py() or 0),
@@ -1330,27 +1379,12 @@ def append_documents(
         json.dump(coll, f)
 
     tables = dict(snap.tables)
-    tables["postings"] = _as_list(tables["postings"]) + [path]
-    tables["segments"] = _as_list(tables["segments"]) + [path]
-    tables["docs"] = _as_list(tables["docs"]) + [docs_gen_path]
-    tables["term_stats"] = ts_path
+    tables["postings"] = _as_list(tables["postings"]) + [paths["seg"]]
+    tables["segments"] = _as_list(tables["segments"]) + [paths["seg"]]
+    tables["docs"] = _as_list(tables["docs"]) + [paths["docs"]]
+    tables["term_stats"] = paths["term_stats"]
     tables["collection_stats"] = coll_path
-    # updateDocuments: old versions of replaced keys become tombstones
-    # in the SAME commit as the appended docs (delete-then-add is one
-    # atomic visibility flip, IndexWriter.java:1257 updateDocuments),
-    # unioned into the one generation-specific tombstone write
-    tomb = (
-        read_table(spark, DOCS_SCHEMA, snap.tables["docs"])
-        .join(corpus.select(*DOC_KEY), DOC_KEY, "left_semi")
-        .select("doc_id")
-    )
-    old_tomb = tables.get("tombstones")
-    if old_tomb:
-        tomb = tomb.unionByName(
-            read_table(spark, TOMBSTONES_SCHEMA, old_tomb))
-    tomb_path = cat.path("tombstones", f"gen-{gen}")
-    tomb.distinct().coalesce(1).write.mode("overwrite").parquet(tomb_path)
-    tables["tombstones"] = tomb_path
+    tables["tombstones"] = paths["tombstones"]
     return cat.commit(
         "commit",
         tables=tables,
@@ -1363,6 +1397,157 @@ def append_documents(
     )
 
 
+def _append_spark(spark: SparkSession, snap: Snapshot, corpus: DataFrame,
+                  paths: Dict[str, str], seg_base: str) -> int:
+    """append_documents' writes as Spark jobs; returns the number of
+    new docs (0: nothing written)."""
+    props = snap.props
+    n0 = int(props["max_doc"])
+    dps = int(props.get("docs_per_segment", DEFAULT_DOCS_PER_SEGMENT))
+    # same single-pass shape as build: one range shuffle of the delta,
+    # one Arrow crossing; new docIDs continue the dense space at n0, so
+    # appended segments (seg_id = doc_base >= n0) slot into existing
+    # scoring groups by construction
+    bounds = compute_key_bounds(corpus)
+    keyed = _keyed_corpus(corpus, bounds)
+    counts = count_keys_per_bucket(corpus, bounds)
+    offsets, n_new = offsets_from_counts(counts, base=n0)
+    if n_new == 0:
+        return 0
+    (
+        keyed.mapInPandas(
+            make_stream_builder(
+                offsets, dps, props.get("analyzer", "standard"),
+                codec=props.get("codec", "for128"),
+            ),
+            schema=SEGMENT_OUT_SCHEMA,
+        )
+        .write.mode("overwrite").partitionBy("is_meta")
+        .parquet(paths["seg"])
+    )
+    write_docs_table(spark, paths["seg"], seg_base, paths["docs"])
+
+    # incremental stats: old + delta in one aggregation, never a full
+    # re-aggregation of the postings
+    apost, _ = read_segment_output(spark, paths["seg"], seg_base)
+    old_ts = read_table(spark, TERM_STATS_SCHEMA, snap.tables["term_stats"])
+    write_term_stats(
+        old_ts.unionByName(apost.select("term", "df", "cf"))
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
+        paths["term_stats"], n0 + n_new,
+    )
+    # updateDocuments: old versions of replaced keys become tombstones
+    # in the SAME commit as the appended docs (delete-then-add is one
+    # atomic visibility flip, IndexWriter.java:1257 updateDocuments),
+    # unioned into the one generation-specific tombstone write
+    tomb = (
+        read_table(spark, DOCS_SCHEMA, snap.tables["docs"])
+        .join(corpus.select(*DOC_KEY), DOC_KEY, "left_semi")
+        .select("doc_id")
+    )
+    old_tomb = snap.tables.get("tombstones")
+    if old_tomb:
+        tomb = tomb.unionByName(
+            read_table(spark, TOMBSTONES_SCHEMA, old_tomb))
+    tomb.distinct().coalesce(1).write.mode("overwrite").parquet(
+        paths["tombstones"])
+    return n_new
+
+
+def _read_arrow(paths, ddl: str, columns=None) -> pa.Table:
+    """Engine-written parquet path(s) read on the driver with pyarrow,
+    under the declared schema ``ddl``."""
+    schema = _arrow_schema(ddl)
+    return pa.concat_tables([
+        pa_ds.dataset(p, schema=schema, format="parquet")
+        .to_table(columns=columns)
+        for p in _as_list(paths)
+    ])
+
+
+def _write_tombstones(old: Optional[str], ids, path: str) -> None:
+    """The old tombstones (path, or None) plus the docIDs ``ids``,
+    unique, as one tombstone file — the Spark writers'
+    ``distinct().coalesce(1)``."""
+    tbl = pa.table({"doc_id": ids}).cast(_arrow_schema(TOMBSTONES_SCHEMA))
+    if old:
+        tbl = pa.concat_tables([tbl, _read_arrow(old, TOMBSTONES_SCHEMA)])
+    _write_parquet(tbl.group_by("doc_id").aggregate([]).sort_by("doc_id"),
+                   path)
+
+
+def _docs_from_meta(meta: pa.Table) -> pa.Table:
+    """write_docs_table's explode of the meta rows' key arrays, on the
+    driver: doc_id = doc_base + position in the arrays."""
+    lens = pc.list_value_length(meta["repos"]).to_numpy()
+    first = np.cumsum(lens) - lens
+    doc_id = (np.repeat(meta["doc_base"].to_numpy(), lens)
+              + np.arange(int(lens.sum())) - np.repeat(first, lens))
+    return pa.table(
+        [doc_id, *(pc.list_flatten(meta[c]) for c in _ARRAY_COLS)],
+        schema=_arrow_schema(DOCS_SCHEMA))
+
+
+def _append_local(snap: Snapshot, rows: list, paths: Dict[str, str]) -> int:
+    """append_documents' writes in the driver process, for a batch of
+    at most DOCS_PER_BUCKET rows (one key bucket): the same kernel and
+    the same tables at the same paths as _append_spark, written with
+    pyarrow. Returns the number of new docs (0: nothing written)."""
+    if not rows:
+        return 0
+    props = snap.props
+    n0 = int(props["max_doc"])
+    # the order sortWithinPartitions(*DOC_KEY) hands the kernel: nulls
+    # first, then code-point (== UTF-8 byte) order; stable, so a key
+    # repeated in the batch keeps its first row, as on Spark
+    rows = sorted(rows, key=lambda r: tuple(
+        (r[c] is not None, r[c] or "") for c in DOC_KEY))
+    pdf = pd.DataFrame({
+        c: pd.Series([r[c] for r in rows], dtype=object)
+        for c in (*DOC_KEY, "lang", "content")})
+    pdf["_bkt"] = 0
+    builder = make_stream_builder(
+        {0: n0}, int(props.get("docs_per_segment", DEFAULT_DOCS_PER_SEGMENT)),
+        props.get("analyzer", "standard"), codec=props.get("codec", "for128"))
+    schema = _arrow_schema(SEGMENT_OUT_SCHEMA)
+    out = pa.concat_tables(
+        pa.Table.from_pandas(f, schema=schema, preserve_index=False)
+        for f in builder(iter([pdf])))
+    is_meta = out["is_meta"]
+    meta = out.filter(is_meta).drop_columns(["is_meta"])
+    posts = out.filter(pc.invert(is_meta)).drop_columns(["is_meta"])
+    # the is_meta partition directories partitionBy("is_meta") writes
+    shutil.rmtree(paths["seg"], ignore_errors=True)
+    for flag, part in (("true", meta), ("false", posts)):
+        if part.num_rows:
+            _write_parquet(part, os.path.join(paths["seg"], f"is_meta={flag}"))
+    _write_parquet(_docs_from_meta(meta), paths["docs"])
+
+    n_new = int(pc.sum(meta["doc_count"]).as_py())
+    stats = pa.concat_tables([
+        _read_arrow(snap.tables["term_stats"], TERM_STATS_SCHEMA),
+        posts.select(["term", "df", "cf"]).cast(
+            _arrow_schema(TERM_STATS_SCHEMA)),
+    ]).group_by("term").aggregate([("df", "sum"), ("cf", "sum")])
+    stats = pa.table([stats["term"], stats["df_sum"], stats["cf_sum"]],
+                     names=["term", "df", "cf"]).sort_by("term")
+    _write_parquet(stats, paths["term_stats"], term_stats_files(n0 + n_new))
+
+    # replaced keys: the docs whose key is in the batch (an equi-join
+    # key, so a key with a null part never matches)
+    keys = {tuple(r[c] for c in DOC_KEY) for r in rows}
+    keys = [k for k in keys if None not in k]
+    batch = pa.table({c: pa.array([k[i] for k in keys], pa.string())
+                      for i, c in enumerate(DOC_KEY)})
+    replaced = _read_arrow(snap.tables["docs"], DOCS_SCHEMA,
+                           ["doc_id", *DOC_KEY]).join(
+        batch, DOC_KEY, join_type="left semi")["doc_id"]
+    _write_tombstones(snap.tables.get("tombstones"), replaced,
+                      paths["tombstones"])
+    return n_new
+
+
 def delete_docs(
     spark: SparkSession, index_dir: str, doc_ids: DataFrame
 ) -> Snapshot:
@@ -1370,18 +1555,24 @@ def delete_docs(
     a new snapshot generation carrying a tombstones table; postings are
     untouched and masked at scorer level. Collection/term stats keep
     counting deleted docs until a rebuild — exactly Lucene's maxDoc
-    semantics for BM25 (BM25Similarity.java:150-170 uses maxDoc)."""
+    semantics for BM25 (BM25Similarity.java:150-170 uses maxDoc). On
+    an index held on the driver the only Spark work is the collect of
+    ``doc_ids``; the tombstones are written with pyarrow."""
     cat = Catalog(index_dir)
     snap = cat.latest_at_stage("commit", "merge", "delete")
     if snap is None:
         raise ValueError("no committed index")
     df = doc_ids.select(F.col("doc_id").cast("long").alias("doc_id"))
     old = snap.tables.get("tombstones")
-    if old:
-        df = df.unionByName(read_table(spark, TOMBSTONES_SCHEMA, old))
     gen = snap.snapshot_id + 1
     path = cat.path("tombstones", f"gen-{gen}")
-    df.distinct().coalesce(1).write.mode("overwrite").parquet(path)
+    if held_on_driver(snap):
+        _write_tombstones(old, pa.array([r[0] for r in df.collect()],
+                                        pa.int64()), path)
+    else:
+        if old:
+            df = df.unionByName(read_table(spark, TOMBSTONES_SCHEMA, old))
+        df.distinct().coalesce(1).write.mode("overwrite").parquet(path)
     tables = dict(snap.tables)
     tables["tombstones"] = path
     return cat.commit(

@@ -23,7 +23,7 @@ lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:259-273):
 
 Physical execution adapts to scale:
   - an index whose cached postings are at most
-    IndexSearcher.LOCAL_POSTINGS_MAX_BYTES is also held on the driver:
+    indexing.build.LOCAL_POSTINGS_MAX_BYTES is also held on the driver:
     single queries run the same kernels in-process and merge there
     (IndexSearcher._top_hits), with no Spark job — stage B and C
     without the cluster;
@@ -57,6 +57,7 @@ import threading
 import time
 from collections import namedtuple
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
@@ -84,8 +85,11 @@ from lucene_solr_spark.indexing.build import (
     DOCS_SCHEMA,
     TERM_STATS_SCHEMA,
     TOMBSTONES_SCHEMA,
+    SEGS_BROADCAST_MAX_DOCS,
     _as_list,
     _is_combined_dir,
+    held_on_driver,
+    postings_bytes,
     read_postings_any,
     read_segments_any,
     read_table,
@@ -213,13 +217,6 @@ class IndexSearcher:
     # parquet predicate pushdown + OS page cache (the Lucene mmap
     # model). Override with LSS_POSTINGS_CACHE_MAX_BYTES.
     POSTINGS_CACHE_MAX_BYTES = 8 * 1024 ** 3
-    # segment meta (~1 byte/doc of norms) is broadcast up to this size
-    SEGS_BROADCAST_MAX_DOCS = 32 * 1024 * 1024
-    # cached postings up to this on-disk size are also held on the
-    # driver, which answers single queries in-process (_top_hits).
-    # Below the measured driver-vs-Spark crossover (README, "Driver
-    # path for single queries"); -1 keeps every query on Spark.
-    LOCAL_POSTINGS_MAX_BYTES = 32 * 1024 * 1024
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  cache_postings: Optional[bool] = None):
@@ -252,14 +249,6 @@ class IndexSearcher:
         # built with (QueryParserBase re-analysis semantics)
         self.analyzer = get_analyzer(snap.props.get("analyzer", "standard"))
 
-        # postings cached: every query filters this table by term, and
-        # re-reading + re-decoding parquet per query is the latency
-        # floor otherwise. Spark's columnar cache keeps per-batch
-        # min/max stats on the sorted term column, so the term IN filter
-        # prunes cached batches the same way parquet row groups prune.
-        # (Cluster scale: postings >> RAM — drop the persist and rely
-        # on parquet predicate pushdown + OS page cache, exactly the
-        # Lucene mmap model.)
         gf = self.group_factor
         par = spark.sparkContext.defaultParallelism
         # the cache is pre-partitioned by scoring group and term-sorted
@@ -286,30 +275,7 @@ class IndexSearcher:
         # answers single queries in-process (_top_hits) — Lucene's
         # in-process IndexSearcher; a Spark job's fixed cost would
         # dominate. Uncached postings keep every query on Spark.
-        local = (self.postings_cached
-                 and self.max_doc <= self.SEGS_BROADCAST_MAX_DOCS
-                 and posts_bytes <= self.LOCAL_POSTINGS_MAX_BYTES)
-        posts = (
-            read_postings_any(spark, snap.tables["postings"])
-            .withColumn("gid", (F.col("seg_id") / F.lit(gf)).cast("long"))
-            .repartition(self._posts_parts, "gid")
-            .sortWithinPartitions("term")
-        )
-        if self.postings_cached:
-            posts = posts.persist(StorageLevel.MEMORY_AND_DISK)
-        self._postings = posts
-        segs = read_segments_any(spark, snap.tables["segments"])
-        # segment meta (norm blobs) and term stats are small relative to
-        # postings (O(n_segs) / O(vocab)); cache them — every query
-        # cogroups against segments, and repeated reads from parquet
-        # dominate small-query latency otherwise
-        segments = segs.select("seg_id", "doc_base", "doc_count", "norms_enc")
-        tomb = snap.tables.get("tombstones")
-        if tomb:
-            segments = self._attach_tombstones(segments, tomb)
-        segments = segments.withColumn(
-            "gid", (F.col("seg_id") / F.lit(gf)).cast("long")
-        )
+        local = self.postings_cached and held_on_driver(snap)
         # adaptive broadcast of segment meta (the Catalyst
         # broadcast-join idea applied to the norms side): when all norm
         # blobs fit comfortably (~1 byte/doc + deletions), ship them to
@@ -326,7 +292,7 @@ class IndexSearcher:
         self._local_ctx: Dict[int, tuple] = {}
         # search_with_time_limit's deadline, per calling thread
         self._timed = threading.local()
-        if self.max_doc <= self.SEGS_BROADCAST_MAX_DOCS:
+        if self.max_doc <= SEGS_BROADCAST_MAX_DOCS:
             seg_map = self._read_local_segments()
             self._segs_bc = spark.sparkContext.broadcast(seg_map)
             n_gids = len(seg_map)
@@ -335,44 +301,81 @@ class IndexSearcher:
                 self._local_row = namedtuple(
                     "Row", self._local_postings.column_names)._make
         else:
-            n_gids = segments.select("gid").distinct().count()
+            n_gids = read_segments_any(
+                spark, snap.tables["segments"]).select(
+                (F.col("seg_id") / F.lit(gf)).cast("long")).distinct().count()
         self.n_groups = max(int(n_gids), 1)
-        # pre-shard the segs side by scoring group: cogroups then reuse
-        # this hash partitioning instead of re-sharding into
-        # spark.sql.shuffle.partitions tiny tasks on every query — the
-        # per-query task count tracks n_groups, not the global conf.
-        # Cached only where it is read per query (the cogroup path and
-        # explain's fallback); with the broadcast it stays a plan.
-        n_parts = max(min(self.n_groups, 2 * par), 1)
-        self._segments = segments.repartition(n_parts, "gid")
-        if self._segs_bc is None:
-            self._segments = self._segments.persist()
-            self._segments.count()  # materialize the cache eagerly
-        self._term_stats = read_table(
-            spark, TERM_STATS_SCHEMA, snap.tables["term_stats"]
-        ).persist()
         # the same term-sorted files, read on the driver by _lookup_dfs
         self._term_stats_files = pa_ds.dataset(
             snap.tables["term_stats"], format="parquet")
-        self._docs = read_table(spark, DOCS_SCHEMA, snap.tables["docs"])
         # driver-side TermContext cache (TermQuery gathers stats once
         # per query, TermQuery.java:161-177; hot terms stay cached)
         self._df_cache: Dict[str, Optional[int]] = {}
 
+    # The Spark plans over the snapshot's tables are built on first use
+    # by a Spark-path surface (search_many, term scans, enable_bloom,
+    # ...): an open on the driver path builds, and caches, none of them.
+    @cached_property
+    def _postings(self) -> DataFrame:
+        # postings cached: every query filters this table by term, and
+        # re-reading + re-decoding parquet per query is the latency
+        # floor otherwise. Spark's columnar cache keeps per-batch
+        # min/max stats on the sorted term column, so the term IN
+        # filter prunes cached batches the same way parquet row groups
+        # prune. (Cluster scale: postings >> RAM — drop the persist and
+        # rely on parquet predicate pushdown + OS page cache, exactly
+        # the Lucene mmap model.)
+        posts = (
+            read_postings_any(self.spark, self.snap.tables["postings"])
+            .withColumn("gid", (F.col("seg_id")
+                                / F.lit(self.group_factor)).cast("long"))
+            .repartition(self._posts_parts, "gid")
+            .sortWithinPartitions("term")
+        )
+        if self.postings_cached:
+            posts = posts.persist(StorageLevel.MEMORY_AND_DISK)
+        return posts
+
+    @cached_property
+    def _segments(self) -> DataFrame:
+        # segment meta (norm blobs) is small relative to postings
+        # (O(n_segs)); without the broadcast every query cogroups
+        # against it, so it is cached — repeated reads from parquet
+        # dominate small-query latency otherwise
+        segs = read_segments_any(self.spark, self.snap.tables["segments"])
+        segments = segs.select("seg_id", "doc_base", "doc_count",
+                               "norms_enc")
+        tomb = self.snap.tables.get("tombstones")
+        if tomb:
+            segments = self._attach_tombstones(segments, tomb)
+        segments = segments.withColumn(
+            "gid", (F.col("seg_id") / F.lit(self.group_factor)).cast("long")
+        )
+        # pre-shard the segs side by scoring group: cogroups then reuse
+        # this hash partitioning instead of re-sharding into
+        # spark.sql.shuffle.partitions tiny tasks on every query — the
+        # per-query task count tracks n_groups, not the global conf.
+        # Cached only where it is read per query (the cogroup path);
+        # with the broadcast it stays a plan.
+        n_parts = max(min(self.n_groups,
+                          2 * self.spark.sparkContext.defaultParallelism), 1)
+        segments = segments.repartition(n_parts, "gid")
+        if self._segs_bc is None:
+            segments = segments.persist()
+        return segments
+
+    @cached_property
+    def _term_stats(self) -> DataFrame:
+        return read_table(self.spark, TERM_STATS_SCHEMA,
+                          self.snap.tables["term_stats"]).persist()
+
+    @cached_property
+    def _docs(self) -> DataFrame:
+        return read_table(self.spark, DOCS_SCHEMA, self.snap.tables["docs"])
+
     def _postings_bytes(self) -> int:
-        """On-disk size of the postings parquet paths (driver-side file
-        stat — no Spark job). Local-FS stand-in; on HDFS/S3 swap in the
-        filesystem client's content summary."""
-        total = 0
-        for p in _as_list(self.snap.tables["postings"]):
-            for root, _dirs, files in os.walk(p):
-                for fn in files:
-                    if fn.endswith(".parquet"):
-                        try:
-                            total += os.path.getsize(os.path.join(root, fn))
-                        except OSError:
-                            pass
-        return total
+        """On-disk size of the snapshot's postings (build.postings_bytes)."""
+        return postings_bytes(self.snap.tables["postings"])
 
     def _read_local_segments(self) -> Dict[int, pd.DataFrame]:
         """The broadcast segment map read with pyarrow on the driver (no
@@ -1904,11 +1907,17 @@ class IndexSearcher:
         gf = self.group_factor
         gid = int(doc_id) // gf
         fetch = plan.terms + plan.exclude_terms
-        rows = (
-            self._postings.filter(
+        if self._local_postings is not None:
+            tbl = self._local_postings
+            rows = tbl.filter(pc.and_(
+                pc.equal(tbl["gid"], gid),
+                pc.is_in(tbl["term"],
+                         value_set=pa.array(fetch, pa.string())),
+            )).to_pandas()
+        else:
+            rows = self._postings.filter(
                 (F.col("gid") == gid) & terms_in(fetch)
             ).toPandas()
-        )
         if self._segs_bc is not None:
             segs = self._segs_bc.value.get(gid)
         else:

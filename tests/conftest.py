@@ -52,12 +52,13 @@ def built(spark, small_corpus, tmp_path_factory):
 def open_distributed():
     """open_distributed(spark, index_dir, **kw) -> an IndexSearcher that
     keeps single queries on Spark: its driver path is off
-    (LOCAL_POSTINGS_MAX_BYTES -1 while it opens)."""
+    (build.LOCAL_POSTINGS_MAX_BYTES -1 while it opens)."""
+    from lucene_solr_spark.indexing import build
     from lucene_solr_spark.search.executor import IndexSearcher
 
     def open_(spark, index_dir, **kw):
         with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(IndexSearcher, "LOCAL_POSTINGS_MAX_BYTES", -1)
+            mp.setattr(build, "LOCAL_POSTINGS_MAX_BYTES", -1)
             return IndexSearcher(spark, index_dir, **kw)
 
     return open_

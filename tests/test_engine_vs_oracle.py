@@ -5,6 +5,7 @@ rank-identical — same docIDs, same ranks, bitwise-equal float32 scores.
 """
 
 import os
+import shutil
 
 import numpy as np
 import pytest
@@ -98,14 +99,19 @@ def test_docid_assignment_parallelism_invariant(spark, small_corpus):
 
 
 @pytest.fixture(scope="module")
-def merged(spark, built):
-    """Salted-merge generation over the built index (SegmentMerger /
-    forceMerge analogue) — searched through the same API."""
+def merged(spark, built, tmp_path_factory):
+    """Salted-merge generation over a copy of the built index
+    (SegmentMerger / forceMerge analogue) — searched through the same
+    API. The shared ``built`` index stays read-only: the copy's
+    snapshots still name the built tables, and the merge writes its
+    output and its commit under the copy."""
     from lucene_solr_spark.indexing.build import merge_postings
 
     index_dir, oracle = built
-    merge_postings(spark, index_dir, segs_per_group=2)
-    return index_dir, oracle
+    copy = str(tmp_path_factory.mktemp("merged") / "idx")
+    shutil.copytree(index_dir, copy)
+    merge_postings(spark, copy, segs_per_group=2)
+    return copy, oracle
 
 
 @pytest.mark.parametrize(
@@ -580,3 +586,12 @@ def test_joinutil_score_modes(spark, built):
     import pytest as _pt
     with _pt.raises(ValueError):
         s.join_query_scored(q, "lang", "lang", score_mode="none_x")
+
+
+def test_built_index_stays_read_only(built):
+    """Last in the module: the shared index is still at the build's
+    commit — no fixture or test here committed on top of it."""
+    from lucene_solr_spark.catalog import Catalog
+
+    snap = Catalog(built[0]).latest()
+    assert snap.stage == "commit"

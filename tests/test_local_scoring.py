@@ -1,5 +1,5 @@
 """Single queries scored on the driver: when the postings are cached
-and no larger than IndexSearcher.LOCAL_POSTINGS_MAX_BYTES, IndexSearcher
+and no larger than build.LOCAL_POSTINGS_MAX_BYTES, IndexSearcher
 holds the index on the driver and answers search / search_phrase (and
 the span and multi-phrase surfaces, which share the execution seam)
 in-process. Every routed surface must return bit-identical (doc_id,

@@ -1,5 +1,5 @@
 """Single-query latency on the driver path against the distributed path,
-by index size: the evidence behind IndexSearcher.LOCAL_POSTINGS_MAX_BYTES.
+by index size: the evidence behind indexing.build.LOCAL_POSTINGS_MAX_BYTES.
 
 For each size it generates a corpus of that many docs, builds one index
 (4 segments, one batch), opens it twice — once with the driver path
@@ -33,18 +33,19 @@ import numpy as np  # noqa: E402
 
 import verify  # noqa: E402
 from lucene_solr_spark.corpusgen import CORPUS_SCHEMA, row  # noqa: E402
+from lucene_solr_spark.indexing import build  # noqa: E402
 from lucene_solr_spark.indexing.build import IndexWriter  # noqa: E402
 from lucene_solr_spark.search.executor import IndexSearcher  # noqa: E402
 from lucene_solr_spark.session import get_spark  # noqa: E402
 
 
 def open_searcher(spark, index_dir: str, driver_path: bool) -> IndexSearcher:
-    old = IndexSearcher.LOCAL_POSTINGS_MAX_BYTES
-    IndexSearcher.LOCAL_POSTINGS_MAX_BYTES = (1 << 62) if driver_path else -1
+    old = build.LOCAL_POSTINGS_MAX_BYTES
+    build.LOCAL_POSTINGS_MAX_BYTES = (1 << 62) if driver_path else -1
     try:
         s = IndexSearcher(spark, index_dir)
     finally:
-        IndexSearcher.LOCAL_POSTINGS_MAX_BYTES = old
+        build.LOCAL_POSTINGS_MAX_BYTES = old
     assert (s._local_postings is not None) == driver_path
     return s
 
@@ -111,8 +112,7 @@ def main() -> None:
             print(f"docs={n_docs} "
                   f"postings_mb={sides[0]._postings_bytes() / 1e6:.1f} "
                   f"{stats} mismatches={mismatches}", flush=True)
-            for s in sides:
-                s._postings.unpersist()
+            sides[1]._postings.unpersist()  # the driver side caches none
         finally:
             shutil.rmtree(work, ignore_errors=True)
     spark.stop()

@@ -4,7 +4,7 @@ key plans and checks the properties the 100 TB design depends on:
   1. query path: ZERO Exchange below the scoring kernel (the postings
      cache partitioning is reused by groupBy(gid).applyInPandas) —
      audited on searchers opened with the driver path off
-     (IndexSearcher.LOCAL_POSTINGS_MAX_BYTES -1), which keeps single
+     (indexing.build.LOCAL_POSTINGS_MAX_BYTES -1), which keeps single
      queries on Spark; by default the audit index is small enough for
      the driver path, and a single query plans as a LocalRelation;
   2. docs/term_stats scans: filters pushed to parquet (PushedFilters),
@@ -41,14 +41,14 @@ def fmt(df) -> str:
 def driver_path_off():
     """Searchers opened inside keep single queries on Spark, so their
     distributed plans can be audited."""
-    from lucene_solr_spark.search.executor import IndexSearcher
+    from lucene_solr_spark.indexing import build
 
-    old = IndexSearcher.LOCAL_POSTINGS_MAX_BYTES
-    IndexSearcher.LOCAL_POSTINGS_MAX_BYTES = -1
+    old = build.LOCAL_POSTINGS_MAX_BYTES
+    build.LOCAL_POSTINGS_MAX_BYTES = -1
     try:
         yield
     finally:
-        IndexSearcher.LOCAL_POSTINGS_MAX_BYTES = old
+        build.LOCAL_POSTINGS_MAX_BYTES = old
 
 
 def main() -> None:
