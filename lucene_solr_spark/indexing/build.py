@@ -242,8 +242,10 @@ def write_term_stats(stats: DataFrame, path: str, n_docs: int) -> None:
 # searcher answers single queries in-process, and NRT appends and
 # deletes write with pyarrow, like Lucene's in-process flush
 # (DirectoryReader.open(writer)). The bound sits below the measured
-# driver-vs-Spark query crossover (README, "Driver path for single
-# queries"); -1 keeps every query and write on Spark.
+# driver-vs-Spark query crossover; the writes showed no crossover up to
+# nearly three times the bound, so the queries set it (README, "Driver
+# path for single queries" and "... for NRT writes"). -1 keeps every
+# query and write on Spark.
 SEGS_BROADCAST_MAX_DOCS = 32 * 1024 * 1024
 LOCAL_POSTINGS_MAX_BYTES = 32 * 1024 * 1024
 
@@ -264,14 +266,12 @@ def postings_bytes(paths) -> int:
     return total
 
 
-def held_on_driver(snap: Snapshot) -> bool:
-    """The driver-path rule for the index at ``snap``, shared by the
-    searcher's open and the NRT writers (no Spark job)."""
-    with open(snap.tables["collection_stats"]) as f:
-        max_doc = int(json.load(f)["max_doc"])
+def held_on_driver(max_doc: int, posts_bytes: int) -> bool:
+    """The driver-path rule for an index of ``max_doc`` docs and
+    ``posts_bytes`` of postings on disk, shared by the searcher's open
+    and the NRT writers."""
     return (max_doc <= SEGS_BROADCAST_MAX_DOCS
-            and postings_bytes(snap.tables["postings"])
-            <= LOCAL_POSTINGS_MAX_BYTES)
+            and posts_bytes <= LOCAL_POSTINGS_MAX_BYTES)
 
 
 def _arrow_schema(ddl: str) -> pa.Schema:
@@ -1328,10 +1328,11 @@ def append_documents(
     IndexWriter.java:1257).
 
     An index held on the driver (held_on_driver) takes a batch of at
-    most DOCS_PER_BUCKET rows in-process, like Lucene's in-process
-    flush: one bounded take of the rows (no Spark job for a local
-    pandas-backed batch), the same segment kernel, pyarrow writes.
-    Bigger indexes and batches run the Spark plan (_append_spark)."""
+    most DOCS_PER_BUCKET rows (one key bucket) in-process, like
+    Lucene's in-process flush: the batch's rows are collected (no Spark
+    job for a local pandas-backed batch) and go through the same
+    segment kernel, written with pyarrow. Bigger indexes and batches
+    run the Spark plan (_append_spark)."""
     cat = Catalog(index_dir)
     snap = cat.latest_at_stage("commit", "merge", "delete")
     if snap is None:
@@ -1354,15 +1355,16 @@ def append_documents(
         "term_stats": cat.path("stats", f"term_stats_gen{gen}"),
         "tombstones": cat.path("tombstones", f"gen-{gen}"),
     }
-    rows = None
-    if held_on_driver(snap):
-        rows = corpus.limit(DOCS_PER_BUCKET + 1).collect()
-        if len(rows) > DOCS_PER_BUCKET:
-            rows = None
-    if rows is not None:
-        n_new = _append_local(snap, rows, paths)
+    # the bounded key take decides whether the batch fits one bucket;
+    # only such a batch's whole rows come to the driver, and a bigger
+    # one's Spark plan reuses the bounds
+    bounds = compute_key_bounds(corpus)
+    if (getattr(bounds, "keys", None) is not None
+            and held_on_driver(n0, postings_bytes(snap.tables["postings"]))):
+        n_new = _append_local(snap, corpus.collect(), paths)
     else:
-        n_new = _append_spark(spark, snap, corpus, paths, cat.path("seg"))
+        n_new = _append_spark(spark, snap, corpus, bounds, paths,
+                              cat.path("seg"))
     if n_new == 0:
         return snap
     # the delta's collection stats sum its few meta rows: read on the
@@ -1398,9 +1400,11 @@ def append_documents(
 
 
 def _append_spark(spark: SparkSession, snap: Snapshot, corpus: DataFrame,
-                  paths: Dict[str, str], seg_base: str) -> int:
-    """append_documents' writes as Spark jobs; returns the number of
-    new docs (0: nothing written)."""
+                  bounds: List[str], paths: Dict[str, str],
+                  seg_base: str) -> int:
+    """append_documents' writes as Spark jobs, over the key ``bounds``
+    of compute_key_bounds; returns the number of new docs (0: nothing
+    written)."""
     props = snap.props
     n0 = int(props["max_doc"])
     dps = int(props.get("docs_per_segment", DEFAULT_DOCS_PER_SEGMENT))
@@ -1408,7 +1412,6 @@ def _append_spark(spark: SparkSession, snap: Snapshot, corpus: DataFrame,
     # one Arrow crossing; new docIDs continue the dense space at n0, so
     # appended segments (seg_id = doc_base >= n0) slot into existing
     # scoring groups by construction
-    bounds = compute_key_bounds(corpus)
     keyed = _keyed_corpus(corpus, bounds)
     counts = count_keys_per_bucket(corpus, bounds)
     offsets, n_new = offsets_from_counts(counts, base=n0)
@@ -1566,7 +1569,8 @@ def delete_docs(
     old = snap.tables.get("tombstones")
     gen = snap.snapshot_id + 1
     path = cat.path("tombstones", f"gen-{gen}")
-    if held_on_driver(snap):
+    if held_on_driver(int(snap.props["max_doc"]),
+                      postings_bytes(snap.tables["postings"])):
         _write_tombstones(old, pa.array([r[0] for r in df.collect()],
                                         pa.int64()), path)
     else:

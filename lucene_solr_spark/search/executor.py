@@ -275,7 +275,8 @@ class IndexSearcher:
         # answers single queries in-process (_top_hits) — Lucene's
         # in-process IndexSearcher; a Spark job's fixed cost would
         # dominate. Uncached postings keep every query on Spark.
-        local = self.postings_cached and held_on_driver(snap)
+        local = self.postings_cached and held_on_driver(self.max_doc,
+                                                         posts_bytes)
         # adaptive broadcast of segment meta (the Catalyst
         # broadcast-join idea applied to the norms side): when all norm
         # blobs fit comfortably (~1 byte/doc + deletions), ship them to

@@ -64,6 +64,21 @@ def open_distributed():
     return open_
 
 
+@pytest.fixture
+def spark_writers(monkeypatch):
+    """Keeps one test's NRT appends and deletes (and searcher opens) on
+    Spark: build.LOCAL_POSTINGS_MAX_BYTES -1, and the in-process writers
+    fail the test if they are reached."""
+    from lucene_solr_spark.indexing import build
+
+    def unreachable(*_a, **_kw):
+        raise AssertionError("in-process NRT write with the driver path off")
+
+    monkeypatch.setattr(build, "LOCAL_POSTINGS_MAX_BYTES", -1)
+    monkeypatch.setattr(build, "_append_local", unreachable)
+    monkeypatch.setattr(build, "_write_tombstones", unreachable)
+
+
 @pytest.fixture(scope="session")
 def count_jobs(spark):
     """count_jobs(fn) -> (fn(), number of Spark jobs fn ran), counted

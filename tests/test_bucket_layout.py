@@ -112,6 +112,14 @@ def test_layout_invariant_to_default_parallelism(spark, tmp_path,
     assert a_merged and a_merged == b_merged
 
 
+def test_layout_invariant_to_default_parallelism_on_spark(
+        spark, tmp_path, monkeypatch, spark_writers):
+    """The same invariance for the Spark append (an index not held on
+    the driver)."""
+    test_layout_invariant_to_default_parallelism(spark, tmp_path,
+                                                 monkeypatch)
+
+
 def test_append_folds_replaced_keys_into_one_tombstone_write(spark,
                                                              tmp_path):
     """updateDocuments: the old docIDs of replaced keys join the
@@ -136,3 +144,9 @@ def test_append_folds_replaced_keys_into_one_tombstone_write(spark,
     assert got == want
     assert [n for n in os.listdir(os.path.join(index_dir, "tombstones"))
             if n.startswith("replaced-gen-")] == []
+
+
+def test_append_folds_replaced_keys_into_one_tombstone_write_on_spark(
+        spark, tmp_path, spark_writers):
+    test_append_folds_replaced_keys_into_one_tombstone_write(spark,
+                                                             tmp_path)

@@ -304,6 +304,13 @@ def test_append_crash_before_commit_is_invisible(spark, tmp_path):
     assert len(ids) == len(set(ids)) == 120
 
 
+def test_append_crash_before_commit_is_invisible_on_spark(
+        spark, tmp_path, spark_writers):
+    """The same protocol on the Spark writers (an index not held on the
+    driver)."""
+    test_append_crash_before_commit_is_invisible(spark, tmp_path)
+
+
 def test_null_key_columns_no_docid_collision(spark, tmp_path):
     """NULL doc-key columns (round-2 fix): the JVM distinct-struct
     count and the python dedup agree, so docIDs stay collision-free and

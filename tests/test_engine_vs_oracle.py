@@ -590,8 +590,11 @@ def test_joinutil_score_modes(spark, built):
 
 def test_built_index_stays_read_only(built):
     """Last in the module: the shared index is still at the build's
-    commit — no fixture or test here committed on top of it."""
+    commit — no fixture or test here committed on top of it (a merge,
+    an append, a delete or a rebuild would each add a snapshot)."""
     from lucene_solr_spark.catalog import Catalog
 
-    snap = Catalog(built[0]).latest()
-    assert snap.stage == "commit"
+    cat = Catalog(built[0])
+    snaps = [cat.load_or_none(i) for i in range(cat.latest_id() + 1)]
+    build_commit = next(s for s in snaps if s and s.stage == "commit")
+    assert cat.latest_id() == build_commit.snapshot_id

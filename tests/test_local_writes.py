@@ -183,14 +183,27 @@ def test_driver_path_append_runs_no_job_and_delete_one(
     assert tomb == sorted({*replaced, 5, 100})
 
 
+@pytest.mark.parametrize("pandas", [True, False], ids=["pandas", "rows"])
 def test_a_batch_over_one_bucket_is_appended_on_spark(
-        spark, tmp_path, monkeypatch, count_jobs):
+        spark, tmp_path, monkeypatch, count_jobs, pandas):
+    """A batch over one key bucket goes to the Spark plan, and its
+    whole rows never come to the driver: only the bounded key take
+    decides the path."""
     d = str(tmp_path / "idx")
     _build(spark, d)
     monkeypatch.setattr(build, "DOCS_PER_BUCKET", 8)
-    batch = _frame(spark, _docs(90, 100, 10))
+    batch = _frame(spark, _docs(90, 100, 10), pandas=pandas)
+    frame_cls = type(batch)
+    collected, real_collect = [], frame_cls.collect
+
+    def collect(self):
+        collected.append(self.columns)
+        return real_collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", collect)
     snap, n_jobs = count_jobs(lambda: append_documents(spark, d, batch))
     assert snap.props["max_doc"] == 100 and n_jobs > 0
+    assert collected and not any("content" in c for c in collected)
 
 
 def _cache_entries(spark):

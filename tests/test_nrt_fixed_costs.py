@@ -108,6 +108,12 @@ def test_nrt_calls_read_engine_tables_with_declared_schemas(
     assert undeclared_reads == []
 
 
+def test_nrt_calls_read_engine_tables_with_declared_schemas_on_spark(
+        spark, tmp_path, undeclared_reads, spark_writers):
+    test_nrt_calls_read_engine_tables_with_declared_schemas(
+        spark, tmp_path, undeclared_reads)
+
+
 def test_searcher_opens_a_tombstoned_index_in_three_jobs(spark, tmp_path):
     d = _index(spark, str(tmp_path / "idx"))
     assert Catalog(d).latest().tables.get("tombstones")
