@@ -11191,6 +11191,20 @@ ORACLES["geohash_rpt_top10"] = _GEOHASH_RPT_SQL
 _DIH_PLAN_CACHE: dict = {}
 
 
+def _source_listing(paths) -> tuple:
+    """(path, size, mtime) of every file under each source path: a read
+    relation lists its files once, so a plan built over an older
+    listing would miss added files and fail on deleted ones."""
+    out = []
+    for p in paths:
+        files = ([os.path.join(d, f) for d, _, fs in os.walk(p) for f in fs]
+                 if os.path.isdir(p) else [p])
+        for f in sorted(files):
+            st = os.stat(f)
+            out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
 def q_dih_import(spark, sf_dir):
     """DataImportHandler full-import (solr/contrib/dataimporthandler:
     DataImporter/DocBuilder + Regex/Template/DateFormat transformers;
@@ -11201,16 +11215,21 @@ def q_dih_import(spark, sf_dir):
     cursor loop. The compiled plan caches per (session, tier) — the
     data-config is static, so re-import re-executes a prepared plan
     instead of re-analyzing + re-codegenning an identical tree
-    (~1.1s/call of driver+JVM planning at sf0.1). Note the honest
+    (~1.1s/call of driver+JVM planning at sf0.1). The plan is reused
+    only while the sources' file listing is unchanged: an added,
+    removed or rewritten file rebuilds it. Note the honest
     consequence: Spark also reuses the COMPLETED SHUFFLE MAP STAGES
     of an unchanged lineage across actions, so a repeated import of
     unchanged data re-runs only the result stages — the behavior any
     engine with stage-level caching gives an idempotent re-import;
     the first import per session pays the full pipeline."""
+    orders = os.path.join(sf_dir, "orders.parquet")
+    lineitem = os.path.join(sf_dir, "lineitem.parquet")
     ck = (id(spark), os.path.realpath(sf_dir))
+    listing = _source_listing((orders, lineitem))
     hit = _DIH_PLAN_CACHE.get(ck)
-    if hit is not None:
-        return hit
+    if hit is not None and hit[0] == listing:
+        return hit[1]
     from lucene_solr_spark.sources.dih import (
         ChildEntity,
         DIHField,
@@ -11220,7 +11239,7 @@ def q_dih_import(spark, sf_dir):
 
     root = RootEntity(
         name="order",
-        path=os.path.join(sf_dir, "orders.parquet"),
+        path=orders,
         pk="o_orderkey",
         fields=[
             DIHField("cust_status",
@@ -11235,7 +11254,7 @@ def q_dih_import(spark, sf_dir):
         children=[
             ChildEntity(
                 name="lineitem",
-                path=os.path.join(sf_dir, "lineitem.parquet"),
+                path=lineitem,
                 parent_key="o_orderkey",
                 child_key="l_orderkey",
                 value_field=DIHField("line_no", src="l_linenumber",
@@ -11251,7 +11270,7 @@ def q_dih_import(spark, sf_dir):
          .alias("lines_csv"),
         F.col("lineitem_count").cast("long").alias("lineitem_count"),
     ).orderBy("o_orderkey")
-    _DIH_PLAN_CACHE[ck] = out
+    _DIH_PLAN_CACHE[ck] = (listing, out)
     return out
 
 

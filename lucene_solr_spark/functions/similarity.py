@@ -34,12 +34,17 @@ classic: f itself; LM: length).
 Block-max WAND stays BM25-only: the pruning bound is derived from
 BM25's monotonicity; other models run the exhaustive (still
 partition-parallel) path.
+
+The kernels and ``explain`` see a model only through its spec (``spec``
+builds it once per query on the driver; ``score_clause`` scores a
+clause from it; ``coord_factors`` gives classic's coord): this module
+is the one place that decides what each similarity name computes.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Dict, List
+from typing import Dict, List, Optional
 
 import numpy as np
 
@@ -590,3 +595,104 @@ def sweetspot_score_block(
         ).astype(np.float32)
     raw = (tfw * F32(value)).astype(np.float32)
     return (raw * sweetspot_norms(norm_bytes)).astype(np.float32)
+
+
+# ---------------------------------------------------------------------------
+# The similarity spec: what a named similarity computes, as data.
+#
+# A spec is None (BM25, which the kernels inline), {"subs": [...]} (a
+# MultiSimilarity) or {"fn", "args", "tail", "coord"}: clause t scores
+# fn(*args[t], tfs, norm_bytes, *tail); coord is classic's maxCoord
+# (None: no coord). Specs pickle with the kernels (fn by module path).
+# ---------------------------------------------------------------------------
+
+# name -> (score block, its leading args from (df, cf, max_doc, avg_fl,
+# sum_ttf), its trailing constants)
+_STATS_MODELS = {
+    "lmdirichlet": (lmd_score_block,
+                    lambda df, cf, n, avg, ttf: (lmd_p(cf, ttf),),
+                    (LMD_MU,)),
+    "lmjelinekmercer": (lmjm_score_block,
+                        lambda df, cf, n, avg, ttf: (lmjm_p(cf, ttf),),
+                        (LMJM_LAMBDA,)),
+    "dfr": (dfr_score_block,
+            lambda df, cf, n, avg, ttf: (df, cf, n, avg), ()),
+    "dfr_ifb2": (dfr_ifb2_score_block,
+                 lambda df, cf, n, avg, ttf: (df, cf, n, avg), ()),
+    "dfr_pl2": (dfr_pl2_score_block,
+                lambda df, cf, n, avg, ttf: (cf, n, avg), ()),
+    "dfr_inl2": (dfr_inl2_score_block,
+                 lambda df, cf, n, avg, ttf: (df, n, avg), ()),
+    "ib": (ib_score_block, lambda df, cf, n, avg, ttf: (df, n, avg), ()),
+    "ib_spl": (ib_spl_score_block,
+               lambda df, cf, n, avg, ttf: (df, n, avg), ()),
+}
+
+
+def spec(similarity: str, terms: List[str], dfs: Dict[str, int],
+         cfs: Dict[str, int], max_doc: int, sum_ttf: int
+         ) -> Optional[dict]:
+    """The spec of ``similarity`` for one query's scoring ``terms``,
+    from their global (df, cf) and the collection stats. ``multi:a+b``
+    composes sub-similarities per MultiSimilarity (f32 score sum,
+    MultiSimilarity.java:76-82); ``bm25`` (also inside a multi) is
+    None, the kernels' inlined default."""
+    if similarity == "bm25":
+        return None
+    if similarity.startswith("multi:"):
+        names = similarity[len("multi:"):].split("+")
+        if len(names) < 2:
+            raise ValueError(f"multi needs >= 2 subs: {similarity!r}")
+        return {"subs": [spec(n, terms, dfs, cfs, max_doc, sum_ttf)
+                         for n in names]}
+    coord = None
+    tail: tuple = ()
+    avg_fl = avg_field_length(sum_ttf, max_doc)
+    sbp = sb_parse(similarity)
+    if sbp is not None:
+        # composed SimilarityBase grid (dfr:<model>:<effect>:<norm> /
+        # ib:<dist>:<lambda>:<norm>): sb_score_block composes the parts
+        fn = sb_score_block
+        args = {t: (sbp, dfs[t], cfs[t], max_doc, avg_fl, sum_ttf)
+                for t in terms}
+    elif similarity in ("classic", "sweetspot"):
+        # SweetSpotSimilarity: classic idf/queryNorm weight, its own tf
+        # curve + plateau length norm in the score block, no coord
+        values = classic_values(terms, dfs, max_doc)
+        args = {t: (values[t],) for t in terms}
+        if similarity == "classic":
+            fn, coord = classic_score_block, len(terms)
+        else:
+            fn = sweetspot_score_block
+    elif similarity in _STATS_MODELS:
+        fn, lead, tail = _STATS_MODELS[similarity]
+        args = {t: lead(dfs[t], cfs[t], max_doc, avg_fl, sum_ttf)
+                for t in terms}
+    else:
+        raise ValueError(f"unknown similarity: {similarity}")
+    return {"fn": fn, "args": args, "tail": tail, "coord": coord}
+
+
+def score_clause(sp: Optional[dict], t: str, tfs: np.ndarray,
+                 norm_bytes: np.ndarray, bm25) -> np.ndarray:
+    """f32 scores of term ``t``'s clause at (tfs, norm_bytes) under
+    spec ``sp`` — the SimScorer seam every kernel and ``explain``
+    share. None is the caller's inlined BM25, ``bm25(t, tfs,
+    norm_bytes)``; a multi is the f32 sum of its subs in order."""
+    if sp is None:
+        return bm25(t, tfs, norm_bytes)
+    if "subs" in sp:
+        acc = None
+        for sub in sp["subs"]:
+            s = score_clause(sub, t, tfs, norm_bytes, bm25)
+            acc = s if acc is None else (acc + s).astype(np.float32)
+        return acc
+    return sp["fn"](*sp["args"][t], tfs, norm_bytes, *sp["tail"])
+
+
+def coord_factors(sp: Optional[dict]) -> Optional[np.ndarray]:
+    """coordFactors by matching-clause count when ``sp`` applies coord
+    (classic, TFIDFSimilarity.coord), else None."""
+    if sp is None or sp.get("coord") is None:
+        return None
+    return classic_coords(sp["coord"])

@@ -38,13 +38,22 @@ Physical execution adapts to scale:
     per-(task, group, term) decode sharing and a driver-side exact
     merge — the high-QPS path.
 
+Every per-group kernel is a function of one _Group: a scoring group's
+doc span, norm bytes, tombstones and postings rows by term. Spark's
+applyInPandas adapters build it with _Group.of, the driver path from
+its held rows (IndexSearcher._local_groups), and search_many hands each
+query ``g.view(terms)`` of one shared group, so a term decodes once
+per batch. ``explain`` reads the same group.
+
 Block-max WAND pruning (wand=True, BM25 only) uses the per-block
 (max_tf, max_nb) skip metadata to decode only blocks that can still
 beat the group's running heap floor — score-safe, so results are
 identical with wand on/off (gated by
 tests/test_engine_vs_oracle.py::test_wand_equals_exhaustive).
-Similarities: bm25 (default) / classic TFIDF / lmdirichlet
-(functions/similarity.py), all dual-execution gated.
+Similarities: bm25 (default, inlined in the kernels) and every model of
+functions/similarity.py, whose spec (built once per query in ``plan``)
+the kernels and ``explain`` score through one function; all
+dual-execution gated.
 """
 
 from __future__ import annotations
@@ -78,6 +87,7 @@ from pyspark.sql.types import (
 
 from lucene_solr_spark.catalog import Catalog
 from lucene_solr_spark.constants import B, K1
+from lucene_solr_spark.functions import similarity as S
 from lucene_solr_spark.functions.analysis import get_analyzer
 from lucene_solr_spark.functions.bm25 import K1_PLUS_1, avgdl, idf, norm_cache
 from lucene_solr_spark.indexing.build import (
@@ -472,8 +482,11 @@ class IndexSearcher:
             t: float(idf(dfs[t], self.max_doc)) for t in scoring
         }
         sim = None
-        if similarity != "bm25" and scoring:
-            sim = self._sim_spec(similarity, scoring, dfs)
+        if scoring:
+            # (df, cf) of every scoring term is cached by _lookup_dfs
+            sim = S.spec(similarity, scoring, dfs,
+                         self._lookup_cfs(scoring), self.max_doc,
+                         self.sum_ttf)
         return QueryPlan(
             terms=scoring,
             dfs={t: dfs[t] for t in scoring},
@@ -487,86 +500,6 @@ class IndexSearcher:
             sim=sim,
             tie=float(tie),
         )
-
-    def _sim_spec(self, similarity: str, scoring, dfs):
-        """Build the serializable similarity spec for the kernels.
-        ``multi:a+b+...`` composes sub-similarities per MultiSimilarity
-        (f32 score sum, MultiSimilarity.java:76-82); ``bm25`` inside a
-        multi resolves to the inlined default (spec None)."""
-        from lucene_solr_spark.functions import similarity as S
-
-        if similarity.startswith("multi:"):
-            names = similarity[len("multi:"):].split("+")
-            if len(names) < 2:
-                raise ValueError(f"multi needs >= 2 subs: {similarity!r}")
-            return {"kind": "multi",
-                    "subs": [None if n == "bm25"
-                             else self._sim_spec(n, scoring, dfs)
-                             for n in names]}
-        sbp = S.sb_parse(similarity)
-        if sbp is not None:
-            # composed SimilarityBase grid (dfr:<model>:<effect>:<norm>
-            # / ib:<dist>:<lambda>:<norm>) — ship per-term (df, cf) and
-            # the global stats; the kernel composes the parts
-            cfs = self._lookup_cfs(scoring)
-            return {"kind": "sb", "params": sbp,
-                    "max_doc": self.max_doc, "sum_ttf": self.sum_ttf,
-                    "avg_fl": S.avg_field_length(
-                        self.sum_ttf, self.max_doc),
-                    "values": {t: (dfs[t], cfs[t]) for t in scoring}}
-        if similarity == "classic":
-            return {"kind": "classic",
-                    "values": S.classic_values(scoring, dfs, self.max_doc),
-                    "max_coord": len(scoring)}
-        if similarity == "sweetspot":
-            # SweetSpotSimilarity: classic idf/queryNorm weight, its
-            # own tf curve + plateau length norm in the score block
-            return {"kind": "sweetspot",
-                    "values": S.classic_values(scoring, dfs, self.max_doc)}
-        if similarity == "lmdirichlet":
-            cfs = self._lookup_cfs(scoring)
-            return {"kind": "lmdirichlet", "mu": S.LMD_MU,
-                    "values": {t: S.lmd_p(cfs[t], self.sum_ttf)
-                               for t in scoring}}
-        if similarity == "dfr":
-            cfs = self._lookup_cfs(scoring)
-            return {"kind": "dfr", "max_doc": self.max_doc,
-                    "avg_fl": S.avg_field_length(
-                        self.sum_ttf, self.max_doc),
-                    "values": {t: (dfs[t], cfs[t]) for t in scoring}}
-        if similarity == "lmjelinekmercer":
-            cfs = self._lookup_cfs(scoring)
-            return {"kind": "lmjm", "lambda": S.LMJM_LAMBDA,
-                    "values": {t: S.lmjm_p(cfs[t], self.sum_ttf)
-                               for t in scoring}}
-        if similarity == "ib":
-            return {"kind": "ib", "max_doc": self.max_doc,
-                    "avg_fl": S.avg_field_length(
-                        self.sum_ttf, self.max_doc),
-                    "values": {t: dfs[t] for t in scoring}}
-        if similarity == "dfr_inl2":
-            return {"kind": "dfr_inl2", "max_doc": self.max_doc,
-                    "avg_fl": S.avg_field_length(
-                        self.sum_ttf, self.max_doc),
-                    "values": {t: dfs[t] for t in scoring}}
-        if similarity == "dfr_ifb2":
-            cfs = self._lookup_cfs(scoring)
-            return {"kind": "dfr_ifb2", "max_doc": self.max_doc,
-                    "avg_fl": S.avg_field_length(
-                        self.sum_ttf, self.max_doc),
-                    "values": {t: (dfs[t], cfs[t]) for t in scoring}}
-        if similarity == "dfr_pl2":
-            cfs = self._lookup_cfs(scoring)
-            return {"kind": "dfr_pl2", "max_doc": self.max_doc,
-                    "avg_fl": S.avg_field_length(
-                        self.sum_ttf, self.max_doc),
-                    "values": {t: cfs[t] for t in scoring}}
-        if similarity == "ib_spl":
-            return {"kind": "ib_spl", "max_doc": self.max_doc,
-                    "avg_fl": S.avg_field_length(
-                        self.sum_ttf, self.max_doc),
-                    "values": {t: dfs[t] for t in scoring}}
-        raise ValueError(f"unknown similarity: {similarity}")
 
     def enable_bloom(self, path: Optional[str] = None,
                      rebuild: bool = False):
@@ -633,27 +566,56 @@ class IndexSearcher:
 
 
     def _run_kernel(self, posts: DataFrame, kernel, schema: str) -> DataFrame:
-        """Execute a per-group scoring kernel: broadcast-segments fast
-        path (one shuffle leg) when the norms fit in a broadcast,
-        cogroup (each task receives exactly its groups' norms) at
-        scale."""
+        """Execute a per-group scoring kernel on Spark, over each
+        group's _Group.of: broadcast-segments fast path (one shuffle
+        leg) when the norms fit in a broadcast, cogroup (each task
+        receives exactly its groups' norms) at scale."""
         if self._segs_bc is not None:
             bc = self._segs_bc
 
             def with_bcast(key, pdf):
-                segs = bc.value.get(int(key[0]))
-                if segs is None:
-                    segs = pdf.iloc[0:0]  # no meta: kernel returns empty
-                return kernel(pdf, segs)
+                return kernel(_Group.of(pdf, bc.value.get(int(key[0]))))
 
             return posts.groupBy("gid").applyInPandas(
                 with_bcast, schema=schema
             )
+
+        def with_segs(pdf, segs):
+            return kernel(_Group.of(pdf, segs))
+
         return (
             posts.groupBy("gid")
             .cogroup(self._segments.groupBy("gid"))
-            .applyInPandas(kernel, schema=schema)
+            .applyInPandas(with_segs, schema=schema)
         )
+
+    def _local_groups(self, terms, gid: Optional[int] = None):
+        """The driver path's groups (see __init__): a _Group per scoring
+        group holding driver-held postings rows of ``terms`` (only group
+        ``gid`` when given), each term's rows in seg_id order (the
+        table is sorted). Each group's context is built once per
+        searcher; a search_with_time_limit deadline is checked before
+        each group (TimeLimitingCollector's clock)."""
+        tbl = self._local_postings
+        keep = pc.is_in(tbl["term"],
+                        value_set=pa.array(list(terms), pa.string()))
+        if gid is not None:
+            keep = pc.and_(pc.equal(tbl["gid"], gid), keep)
+        cols = tbl.filter(keep).to_pydict()
+        by_gid: Dict[int, Dict[str, list]] = {}
+        for r in map(self._local_row, zip(*cols.values())):
+            by_gid.setdefault(r.gid, {}).setdefault(r.term, []).append(r)
+        segs = self._segs_bc.value
+        deadline = getattr(self._timed, "deadline", None)
+        for key, rows in by_gid.items():
+            if deadline is not None and time.monotonic() >= deadline:
+                raise TimeExceededError("time limit reached")
+            if key not in segs:
+                continue  # no meta: nothing of the group can match
+            ctx = self._local_ctx.get(key)
+            if ctx is None:
+                ctx = self._local_ctx[key] = _group_ctx(segs[key])
+            yield _Group(ctx, rows)
 
     def _top_hits(self, terms, kernel, k: Optional[int]) -> DataFrame:
         """The single-query execution seam: the postings rows of
@@ -668,29 +630,7 @@ class IndexSearcher:
             out = self._run_kernel(posts, kernel, HITS_SCHEMA).orderBy(
                 F.desc("score"), F.asc("doc_id"))
             return out if k is None else out.limit(k)
-        tbl = self._local_postings
-        cols = tbl.filter(pc.is_in(
-            tbl["term"], value_set=pa.array(list(terms), pa.string()))
-        ).to_pydict()
-        # rows by group, then by term: each term's rows in seg_id order
-        # (the table is sorted), the lists _rows_by_term builds
-        by_gid: Dict[int, Dict[str, list]] = {}
-        for r in map(self._local_row, zip(*cols.values())):
-            by_gid.setdefault(r.gid, {}).setdefault(r.term, []).append(r)
-        segs = self._segs_bc.value
-        deadline = getattr(self._timed, "deadline", None)
-        parts = []
-        for gid, rows in by_gid.items():
-            # TimeLimitingCollector's clock, checked between groups
-            if deadline is not None and time.monotonic() >= deadline:
-                raise TimeExceededError("time limit reached")
-            if gid not in segs:
-                continue  # no meta: the kernel would return nothing
-            ctx = self._local_ctx.get(gid)
-            if ctx is None:
-                ctx = self._local_ctx[gid] = _group_ctx(segs[gid])
-            parts.append(kernel.with_shared(terms, {"ctx": ctx,
-                                                    "rows": rows}))
+        parts = [kernel(g) for g in self._local_groups(terms)]
         hits = pd.concat(parts, ignore_index=True) if parts else _empty_hits()
         docs = hits["doc_id"].to_numpy()
         scores = hits["score"].to_numpy()
@@ -1139,21 +1079,7 @@ class IndexSearcher:
         ).select("term", "df", "doc_ids_enc", "tfs_enc", "skips_enc",
                  "sdoc", "stf")
 
-        def decode(batches):
-            for pdf in batches:
-                terms_out, docs_out = [], []
-                for r in pdf.itertuples(index=False):
-                    d, _ = _row_postings(r)
-                    terms_out.append(
-                        np.repeat(np.array([r.term], object), len(d)))
-                    docs_out.append(d)
-                if docs_out:
-                    yield pd.DataFrame({
-                        "term": np.concatenate(terms_out),
-                        "doc_id": np.concatenate(docs_out),
-                    })
-
-        pairs = posts.mapInPandas(decode, schema="term string, doc_id long")
+        pairs = posts.mapInPandas(_decode_rows, _TERM_DOC_TF)
         out = (
             self._live(pairs)
             .join(F.broadcast(vdf), "term")
@@ -1821,21 +1747,18 @@ class IndexSearcher:
 
         posts = self._postings.filter(terms_in(sorted(fetch)))
 
-        def multi(posts_pdf: pd.DataFrame, segs_pdf: pd.DataFrame):
+        def multi(g: Optional[_Group]) -> pd.DataFrame:
+            # each query scores its own view of the group: the row lists
+            # and decoded term indexes are built once for the batch
             outs = []
-            if len(posts_pdf) and len(segs_pdf):
-                shared = _batch_shared(posts_pdf, segs_pdf)
+            if g is not None:
                 for qid, terms, make, args in specs:
-                    r = make(*args).with_shared(terms, shared)
+                    r = make(*args)(g.view(terms))
                     if len(r):
                         r.insert(0, "query_id", np.int32(qid))
                         outs.append(r)
             if not outs:
-                return pd.DataFrame(
-                    {"query_id": pd.Series(dtype="int32"),
-                     "doc_id": pd.Series(dtype="int64"),
-                     "score": pd.Series(dtype="float32")}
-                )
+                return pd.DataFrame()
             return pd.concat(outs, ignore_index=True)
 
         per_group = self._run_kernel(posts, multi, out_schema)
@@ -1905,42 +1828,34 @@ class IndexSearcher:
         if plan.empty:
             return {"match": False, "value": 0.0,
                     "description": "no scoring clauses"}
-        gf = self.group_factor
-        gid = int(doc_id) // gf
+        gid = int(doc_id) // self.group_factor
         fetch = plan.terms + plan.exclude_terms
         if self._local_postings is not None:
-            tbl = self._local_postings
-            rows = tbl.filter(pc.and_(
-                pc.equal(tbl["gid"], gid),
-                pc.is_in(tbl["term"],
-                         value_set=pa.array(fetch, pa.string())),
-            )).to_pandas()
+            g = next(self._local_groups(fetch, gid), None)
         else:
             rows = self._postings.filter(
                 (F.col("gid") == gid) & terms_in(fetch)
             ).toPandas()
-        if self._segs_bc is not None:
-            segs = self._segs_bc.value.get(gid)
-        else:
-            segs = self._segments.filter(F.col("gid") == gid).toPandas()
-        if segs is None or len(segs) == 0 or len(rows) == 0:
+            if self._segs_bc is not None:
+                segs = self._segs_bc.value.get(gid)
+            else:
+                segs = self._segments.filter(F.col("gid") == gid).toPandas()
+            g = _Group.of(rows, segs)
+        if g is None:
             return {"match": False, "value": 0.0,
                     "description": "document matches no query term"}
-        gbase, span, norms, deleted = _group_ctx(segs)
-        off = int(doc_id) - gbase
-        if off < 0 or off >= span or (
-            deleted is not None and deleted[off]
+        off = int(doc_id) - g.gbase
+        if off < 0 or off >= g.span or (
+            g.deleted is not None and g.deleted[off]
         ):
             return {"match": False, "value": 0.0,
                     "description": "document deleted or out of range"}
-        nb = int(norms[off])
-        by_term = _rows_by_term(rows)
+        nbs = g.norms[off:off + 1]
 
         def tf_of(term: str) -> int:
-            sub = by_term.get(term)
-            if not sub:
+            ti = g.tindex(term)
+            if ti is None:
                 return 0
-            ti = _TermIndex(sub, norms, gbase)
             bi = int(np.searchsorted(ti.his, doc_id, side="left"))
             if bi >= ti.n_blocks:
                 return 0
@@ -1955,98 +1870,11 @@ class IndexSearcher:
                 return {"match": False, "value": 0.0,
                         "description": f"excluded by MUST_NOT '{t}'"}
 
-        def _spec_value(spec, t: str, tfs, nbs) -> np.float32:
-            if spec is None:
-                wv = F32(F32(plan.weights[t]) * K1_PLUS_1)
-                freq = tfs.astype(np.float32)
-                nrm = plan.cache[nbs.astype(np.int64)]
-                return F32((wv * freq / (freq + nrm))[0])
-            kind = spec["kind"]
-            if kind == "classic":
-                from lucene_solr_spark.functions.similarity import (
-                    classic_score_block,
-                )
-                return F32(classic_score_block(
-                    spec["values"][t], tfs, nbs)[0])
-            if kind == "sweetspot":
-                from lucene_solr_spark.functions.similarity import (
-                    sweetspot_score_block,
-                )
-                return F32(sweetspot_score_block(
-                    spec["values"][t], tfs, nbs)[0])
-            if kind == "dfr":
-                from lucene_solr_spark.functions.similarity import (
-                    dfr_score_block,
-                )
-                df_t, cf_t = spec["values"][t]
-                return F32(dfr_score_block(
-                    df_t, cf_t, spec["max_doc"], spec["avg_fl"],
-                    tfs, nbs)[0])
-            if kind == "lmjm":
-                from lucene_solr_spark.functions.similarity import (
-                    lmjm_score_block,
-                )
-                return F32(lmjm_score_block(
-                    spec["values"][t], tfs, nbs, spec["lambda"])[0])
-            if kind == "ib":
-                from lucene_solr_spark.functions.similarity import (
-                    ib_score_block,
-                )
-                return F32(ib_score_block(
-                    spec["values"][t], spec["max_doc"],
-                    spec["avg_fl"], tfs, nbs)[0])
-            if kind == "dfr_inl2":
-                from lucene_solr_spark.functions.similarity import (
-                    dfr_inl2_score_block,
-                )
-                return F32(dfr_inl2_score_block(
-                    spec["values"][t], spec["max_doc"],
-                    spec["avg_fl"], tfs, nbs)[0])
-            if kind == "dfr_ifb2":
-                from lucene_solr_spark.functions.similarity import (
-                    dfr_ifb2_score_block,
-                )
-                df_t, cf_t = spec["values"][t]
-                return F32(dfr_ifb2_score_block(
-                    df_t, cf_t, spec["max_doc"],
-                    spec["avg_fl"], tfs, nbs)[0])
-            if kind == "dfr_pl2":
-                from lucene_solr_spark.functions.similarity import (
-                    dfr_pl2_score_block,
-                )
-                return F32(dfr_pl2_score_block(
-                    spec["values"][t], spec["max_doc"],
-                    spec["avg_fl"], tfs, nbs)[0])
-            if kind == "ib_spl":
-                from lucene_solr_spark.functions.similarity import (
-                    ib_spl_score_block,
-                )
-                return F32(ib_spl_score_block(
-                    spec["values"][t], spec["max_doc"],
-                    spec["avg_fl"], tfs, nbs)[0])
-            if kind == "sb":
-                from lucene_solr_spark.functions.similarity import (
-                    sb_score_block,
-                )
-                df_t, cf_t = spec["values"][t]
-                return F32(sb_score_block(
-                    spec["params"], df_t, cf_t, spec["max_doc"],
-                    spec["avg_fl"], spec["sum_ttf"], tfs, nbs)[0])
-            if kind == "multi":  # f32 sum of subs in order
-                acc = F32(0.0)
-                for s2 in spec["subs"]:
-                    acc = F32(acc + _spec_value(s2, t, tfs, nbs))
-                return acc
-            from lucene_solr_spark.functions.similarity import (
-                lmd_score_block,
-            )
-            return F32(lmd_score_block(
-                spec["values"][t], tfs, nbs, spec["mu"])[0])
+        bm25 = _bm25_clause(plan.weights, plan.cache)
 
         def clause_value(t: str, tf: int) -> np.float32:
-            tfs = np.array([tf], np.int32)
-            nbs = np.array([nb], np.uint8)
-            return _spec_value(plan.sim, t, tfs, nbs)
+            return S.score_clause(plan.sim, t, np.array([tf], np.int32),
+                                  nbs, bm25)[0]
 
         tfs_by_term = {t: tf_of(t) for t in plan.terms}
         details = []
@@ -2061,7 +1889,8 @@ class IndexSearcher:
                 v = clause_value(t, tfs_by_term[t])
                 acc = F32(acc + v)
                 details.append({"term": t, "value": float(v),
-                                "tf": tfs_by_term[t], "norm_byte": nb,
+                                "tf": tfs_by_term[t],
+                                "norm_byte": int(nbs[0]),
                                 "df": plan.dfs[t]})
             value = acc
             desc = "sum of (float32, cost order):"
@@ -2079,18 +1908,16 @@ class IndexSearcher:
                 v = clause_value(t, tfs_by_term[t])
                 acc += float(v)
                 details.append({"term": t, "value": float(v),
-                                "tf": tfs_by_term[t], "norm_byte": nb,
+                                "tf": tfs_by_term[t],
+                                "norm_byte": int(nbs[0]),
                                 "df": plan.dfs[t]})
             value = F32(acc)
             desc = "sum of (double accumulate, float32 cast):"
-            if plan.sim is not None and plan.sim["kind"] == "classic":
-                from lucene_solr_spark.functions.similarity import (
-                    classic_coords,
-                )
-                coords = classic_coords(plan.sim["max_coord"])
+            coords = S.coord_factors(plan.sim)
+            if coords is not None:
                 value = F32(value * coords[len(matched)])
                 desc = (f"{desc} coord({len(matched)}/"
-                        f"{plan.sim['max_coord']}) applied")
+                        f"{len(coords) - 1}) applied")
         return {"match": True, "value": float(value),
                 "description": desc, "similarity": similarity,
                 "details": details}
@@ -2207,15 +2034,9 @@ class IndexSearcher:
             "df", "doc_ids_enc", "tfs_enc", "skips_enc", "sdoc", "stf"
         )
 
-        def decode(batches):
-            for pdf in batches:
-                out = [_row_postings(r)[0]
-                       for r in pdf.itertuples(index=False)]
-                if out:
-                    yield pd.DataFrame({"doc_id": np.concatenate(out)})
-
         return self._live(
-            posts.mapInPandas(decode, schema="doc_id long").distinct()
+            posts.mapInPandas(_decode_rows, _DOC_TF).select("doc_id")
+            .distinct()
         )
 
     def search_with_time_limit(
@@ -2721,22 +2542,7 @@ class IndexSearcher:
             "df", "doc_ids_enc", "tfs_enc", "skips_enc", "sdoc", "stf"
         )
 
-        def decode(batches):
-            for pdf in batches:
-                ds, ts = [], []
-                for r in pdf.itertuples(index=False):
-                    d, t = _row_postings(r)
-                    ds.append(d)
-                    ts.append(t.astype(np.int64))
-                if ds:
-                    yield pd.DataFrame({
-                        "doc_id": np.concatenate(ds),
-                        "tf": np.concatenate(ts),
-                    })
-
-        return self._live(
-            posts.mapInPandas(decode, schema="doc_id long, tf long")
-        )
+        return self._live(posts.mapInPandas(_decode_rows, _DOC_TF))
 
     def _live(self, df: DataFrame) -> DataFrame:
         """Apply the live-docs mask to a doc_id DataFrame (LiveDocsFormat
@@ -3167,19 +2973,7 @@ class IndexSearcher:
             "term", "df", "doc_ids_enc", "tfs_enc", "skips_enc", "sdoc",
             "stf")
 
-        def decode(batches):
-            for pdf in batches:
-                terms_out, docs_out = [], []
-                for r in pdf.itertuples(index=False):
-                    d, _ = _row_postings(r)
-                    terms_out.append(np.repeat(r.term, len(d)))
-                    docs_out.append(d)
-                if docs_out:
-                    yield pd.DataFrame({
-                        "term": np.concatenate(terms_out),
-                        "doc_id": np.concatenate(docs_out)})
-
-        pairs = posts.mapInPandas(decode, "term string, doc_id long")
+        pairs = posts.mapInPandas(_decode_rows, _TERM_DOC_TF)
         counts = (
             pairs.join(doc_ids.select("doc_id"), "doc_id")
             .groupBy("term").agg(F.count("*").alias("n"))
@@ -3381,6 +3175,30 @@ def _row_postings(r, block_mask: Optional[np.ndarray] = None
                            block_mask)
 
 
+_DOC_TF = "doc_id long, tf long"
+_TERM_DOC_TF = "term string, doc_id long, tf long"
+
+
+def _decode_rows(batches):
+    """mapInPandas body of the doc-set decoders: every postings row
+    decoded to ``doc_id, tf`` (schema _DOC_TF), led by the row's
+    ``term`` when the input has that column (_TERM_DOC_TF)."""
+    for pdf in batches:
+        with_term = "term" in pdf.columns
+        terms, docs, tfs = [], [], []
+        for r in pdf.itertuples(index=False):
+            d, t = _row_postings(r)
+            docs.append(d)
+            tfs.append(t.astype(np.int64))
+            if with_term:
+                terms.append(np.repeat(np.array([r.term], object), len(d)))
+        if docs:
+            out = {"doc_id": np.concatenate(docs), "tf": np.concatenate(tfs)}
+            if with_term:
+                out = {"term": np.concatenate(terms), **out}
+            yield pd.DataFrame(out)
+
+
 class _TermIndex:
     """Lazy, block-granular view of one term's postings inside a scoring
     group — the TermScorer + skip-list reader analogue
@@ -3460,10 +3278,14 @@ class _TermIndex:
 
 # -- the per-group scoring skeleton -----------------------------------------
 #
+# A kernel is a function of one _Group — or of None, a group with no
+# postings rows or no segment meta — returning its frame. Spark's
+# adapters (IndexSearcher._run_kernel) build the group with
+# _Group.of; the driver path (IndexSearcher._local_groups) from the
+# driver-held rows; search_many hands each query ``g.view(terms)``.
 # Every scoring kernel is ``_kernel(body, k)``. The skeleton owns the
-# frame around a body: the empty-input check, the group context, the
-# by-term row grouping, ONE live-docs mask, the searchAfter cursor,
-# the bounded top-k and the ``doc_id long, score float`` frame. A body
+# frame around a body: ONE live-docs mask, the searchAfter cursor, the
+# bounded top-k and the ``doc_id long, score float`` frame. A body
 # receives the _Group and returns (docs, scores) — the group's
 # matching docIDs (int64, unique, any order) with their float32
 # scores — or None for no match. A body must NOT mask tombstones or
@@ -3485,14 +3307,6 @@ def _rows_by_term(posts: pd.DataFrame) -> Dict[str, list]:
     return by_term
 
 
-def _batch_shared(posts: pd.DataFrame, segs: pd.DataFrame) -> dict:
-    """The (task, group) state every query of a search_many batch
-    reads: the group context and the by-term row lists, built once
-    from the whole group frame; _Group.tindex adds the decoded term
-    indexes (``("ti", term)``) as queries ask for them."""
-    return {"ctx": _group_ctx(segs), "rows": _rows_by_term(posts)}
-
-
 class _Group:
     """One scoring group as a body sees it: the doc span [gbase,
     gbase + span), dense norm bytes, the tombstone mask (None = no
@@ -3500,19 +3314,23 @@ class _Group:
     make_boolean_scorer's docset clauses by their ``_cl`` tag."""
 
     __slots__ = ("gbase", "span", "norms", "deleted", "by_term",
-                 "by_clause", "_shared")
+                 "by_clause", "_tis")
 
     def __init__(self, ctx, by_term: Dict[str, list],
                  by_clause: Optional[Dict[int, pd.DataFrame]] = None,
-                 shared: Optional[dict] = None):
+                 tis: Optional[Dict[str, _TermIndex]] = None):
         self.gbase, self.span, self.norms, self.deleted = ctx
         self.by_term = by_term
         self.by_clause = by_clause or {}
-        self._shared = shared
+        self._tis = {} if tis is None else tis
 
     @classmethod
-    def of(cls, posts: pd.DataFrame, segs: pd.DataFrame) -> "_Group":
-        """One query's group from its own cogrouped frames."""
+    def of(cls, posts: pd.DataFrame,
+           segs: Optional[pd.DataFrame]) -> Optional["_Group"]:
+        """The group of a postings frame and its segment meta frame;
+        None when either is empty (or ``segs`` is None, no meta)."""
+        if segs is None or len(posts) == 0 or len(segs) == 0:
+            return None
         # docset clauses ride in with a _cl tag (>= 0); term-addressed
         # clauses use the _cl == -1 rows (or everything when untagged)
         by_clause: Dict[int, pd.DataFrame] = {}
@@ -3523,29 +3341,26 @@ class _Group:
             posts = posts[cl == -1]
         return cls(_group_ctx(segs), _rows_by_term(posts), by_clause)
 
-    @classmethod
-    def from_shared(cls, terms, shared: dict) -> Optional["_Group"]:
-        """One query's view of a search_many group: the shared row
-        lists of its own terms, or None when none has rows here."""
-        rows = shared["rows"]
-        by_term = {t: rows[t] for t in terms if t in rows}
+    def view(self, terms) -> Optional["_Group"]:
+        """One search_many query's view of the group: the rows of its
+        own terms (None when none has rows here), sharing the decoded
+        term indexes with every other view."""
+        by_term = {t: self.by_term[t] for t in terms if t in self.by_term}
         if not by_term:
             return None
-        return cls(shared["ctx"], by_term, shared=shared)
+        return _Group((self.gbase, self.span, self.norms, self.deleted),
+                      by_term, tis=self._tis)
 
     def tindex(self, t: str) -> Optional[_TermIndex]:
-        """Block view of term ``t`` (None when absent). Under
-        search_many one instance serves every query of the batch, so
-        high-DF terms decode once per (task, group)."""
+        """Block view of term ``t`` (None when absent), built once per
+        group: under search_many one instance serves every query of
+        the batch, so high-DF terms decode once per (task, group)."""
         rows = self.by_term.get(t)
         if not rows:
             return None
-        if self._shared is None:
-            return _TermIndex(rows, self.norms, self.gbase)
-        ti = self._shared.get(("ti", t))
+        ti = self._tis.get(t)
         if ti is None:
-            ti = self._shared[("ti", t)] = _TermIndex(
-                rows, self.norms, self.gbase)
+            ti = self._tis[t] = _TermIndex(rows, self.norms, self.gbase)
         return ti
 
     def postings(self, t: str) -> Optional[Tuple[np.ndarray, np.ndarray]]:
@@ -3559,12 +3374,27 @@ class _Group:
 
     def bm25(self, cache: np.ndarray, wv, docs: np.ndarray,
              freq: np.ndarray) -> np.ndarray:
-        """f32 BM25 at weightValue ``wv`` and freq (tf, or a phrase /
-        span freq): wv * freq / (freq + cache[norm byte])
-        (BM25Similarity.java:233-238)."""
-        freq = freq.astype(np.float32)
-        nrm = cache[self.norms[docs - self.gbase].astype(np.int64)]
-        return ((F32(wv) * freq) / (freq + nrm)).astype(np.float32)
+        """f32 BM25 of ``docs`` at weightValue ``wv`` and freq (tf, or
+        a phrase / span freq); see _bm25_block."""
+        return _bm25_block(cache, wv, freq, self.norms[docs - self.gbase])
+
+
+def _bm25_block(cache: np.ndarray, wv, freq: np.ndarray,
+                norm_bytes: np.ndarray) -> np.ndarray:
+    """f32 BM25 at weightValue ``wv``: wv * freq / (freq + cache[norm
+    byte]) (BM25Similarity.java:233-238)."""
+    freq = freq.astype(np.float32)
+    nrm = cache[norm_bytes.astype(np.int64)]
+    return ((F32(wv) * freq) / (freq + nrm)).astype(np.float32)
+
+
+def _bm25_clause(weights: Dict[str, float], cache: np.ndarray):
+    """The inlined BM25 of similarity.score_clause (spec None): term
+    t's clause at weightValue f32(idf) * (k1 + 1)."""
+    def score(t: str, tfs: np.ndarray, norm_bytes: np.ndarray):
+        return _bm25_block(cache, F32(F32(weights[t]) * K1_PLUS_1), tfs,
+                           norm_bytes)
+    return score
 
 
 def _empty_hits() -> pd.DataFrame:
@@ -3574,12 +3404,16 @@ def _empty_hits() -> pd.DataFrame:
 
 def _kernel(body, k: Optional[int],
             after: Optional[Tuple[float, int]] = None):
-    """Wrap a per-group ``body`` (see the contract above) into the
-    2-arg cogroup kernel; ``kernel.with_shared(terms, shared)`` is the
-    search_many entry over a group's _batch_shared state (and the
-    driver path's, see IndexSearcher._top_hits)."""
+    """Wrap a per-group ``body`` (see the contract above) into its
+    kernel. ``kernel(posts, segs)`` over two frames is
+    ``kernel(_Group.of(posts, segs))``, the form the perfbench kernel
+    replay calls."""
 
-    def score(g: _Group) -> pd.DataFrame:
+    def kernel(g, segs: Optional[pd.DataFrame] = None) -> pd.DataFrame:
+        if segs is not None:
+            g = _Group.of(g, segs)
+        if g is None:
+            return _empty_hits()
         hit = body(g)
         if hit is None:
             return _empty_hits()
@@ -3609,16 +3443,6 @@ def _kernel(body, k: Optional[int],
             order = order[:k]
         return pd.DataFrame({"doc_id": docs[order], "score": scores[order]})
 
-    def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
-        if len(posts) == 0 or len(segs) == 0:
-            return _empty_hits()
-        return score(_Group.of(posts, segs))
-
-    def with_shared(terms, shared: dict) -> pd.DataFrame:
-        g = _Group.from_shared(terms, shared)
-        return _empty_hits() if g is None else score(g)
-
-    kernel.with_shared = with_shared  # type: ignore[attr-defined]
     return kernel
 
 
@@ -3630,10 +3454,9 @@ def make_conjunction_counter(terms):
     per-term arrays unique, so assume_unique intersection is exact."""
     uniq = list(dict.fromkeys(terms))
 
-    def kernel(posts: pd.DataFrame, segs: pd.DataFrame) -> pd.DataFrame:
+    def kernel(g: Optional[_Group]) -> pd.DataFrame:
         cur = np.empty(0, np.int64)
-        if len(posts) and len(segs):
-            g = _Group.of(posts, segs)
+        if g is not None:
             for i, t in enumerate(uniq):
                 p = g.postings(t)
                 if p is None:
@@ -3687,6 +3510,8 @@ def make_group_scorer(plan: QueryPlan, wand: bool):
     # block-max bound is BM25-specific and assumes sum-combination
     wand = wand and sim is None and mode != "dismax"
     and_order = sorted(terms, key=lambda t: dfs[t])  # stable: ties keep order
+    bm25 = _bm25_clause(weights, cache)
+    coords = S.coord_factors(sim)
 
     def body(g: _Group):
         gbase, span, norms = g.gbase, g.span, g.norms
@@ -3697,123 +3522,8 @@ def make_group_scorer(plan: QueryPlan, wand: bool):
         def term_scores(wv, docs, tfs):
             return g.bm25(cache, wv, docs, tfs)
 
-        def scorer_for(spec):
-            """Per-similarity clause scorer factory (the SimScorer
-            seam). spec None = BM25 (the kernel-inlined default)."""
-            if spec is None:
-                return lambda t, docs, tfs: term_scores(
-                    wv_of(t), docs, tfs
-                )
-            kind = spec["kind"]
-            if kind == "classic":
-                from lucene_solr_spark.functions.similarity import (
-                    classic_score_block,
-                )
-                return lambda t, docs, tfs: classic_score_block(
-                    spec["values"][t], tfs, norms[docs - gbase]
-                )
-            if kind == "sweetspot":
-                from lucene_solr_spark.functions.similarity import (
-                    sweetspot_score_block,
-                )
-                return lambda t, docs, tfs: sweetspot_score_block(
-                    spec["values"][t], tfs, norms[docs - gbase]
-                )
-            if kind == "lmdirichlet":
-                from lucene_solr_spark.functions.similarity import (
-                    lmd_score_block,
-                )
-                return lambda t, docs, tfs: lmd_score_block(
-                    spec["values"][t], tfs, norms[docs - gbase],
-                    spec["mu"],
-                )
-            if kind == "dfr":
-                from lucene_solr_spark.functions.similarity import (
-                    dfr_score_block,
-                )
-                return lambda t, docs, tfs: dfr_score_block(
-                    spec["values"][t][0], spec["values"][t][1],
-                    spec["max_doc"], spec["avg_fl"],
-                    tfs, norms[docs - gbase],
-                )
-            if kind == "lmjm":
-                from lucene_solr_spark.functions.similarity import (
-                    lmjm_score_block,
-                )
-                return lambda t, docs, tfs: lmjm_score_block(
-                    spec["values"][t], tfs, norms[docs - gbase],
-                    spec["lambda"],
-                )
-            if kind == "ib":
-                from lucene_solr_spark.functions.similarity import (
-                    ib_score_block,
-                )
-                return lambda t, docs, tfs: ib_score_block(
-                    spec["values"][t], spec["max_doc"], spec["avg_fl"],
-                    tfs, norms[docs - gbase],
-                )
-            if kind == "dfr_inl2":
-                from lucene_solr_spark.functions.similarity import (
-                    dfr_inl2_score_block,
-                )
-                return lambda t, docs, tfs: dfr_inl2_score_block(
-                    spec["values"][t], spec["max_doc"], spec["avg_fl"],
-                    tfs, norms[docs - gbase],
-                )
-            if kind == "dfr_ifb2":
-                from lucene_solr_spark.functions.similarity import (
-                    dfr_ifb2_score_block,
-                )
-                return lambda t, docs, tfs: dfr_ifb2_score_block(
-                    spec["values"][t][0], spec["values"][t][1],
-                    spec["max_doc"], spec["avg_fl"],
-                    tfs, norms[docs - gbase],
-                )
-            if kind == "dfr_pl2":
-                from lucene_solr_spark.functions.similarity import (
-                    dfr_pl2_score_block,
-                )
-                return lambda t, docs, tfs: dfr_pl2_score_block(
-                    spec["values"][t], spec["max_doc"], spec["avg_fl"],
-                    tfs, norms[docs - gbase],
-                )
-            if kind == "ib_spl":
-                from lucene_solr_spark.functions.similarity import (
-                    ib_spl_score_block,
-                )
-                return lambda t, docs, tfs: ib_spl_score_block(
-                    spec["values"][t], spec["max_doc"], spec["avg_fl"],
-                    tfs, norms[docs - gbase],
-                )
-            if kind == "sb":
-                from lucene_solr_spark.functions.similarity import (
-                    sb_score_block,
-                )
-                return lambda t, docs, tfs: sb_score_block(
-                    spec["params"], spec["values"][t][0],
-                    spec["values"][t][1], spec["max_doc"],
-                    spec["avg_fl"], spec["sum_ttf"],
-                    tfs, norms[docs - gbase],
-                )
-            if kind == "multi":
-                # MultiSimilarity (similarities/MultiSimilarity.java
-                # :76-82): float32 SUM of the sub-scorers' scores in
-                # sub order
-                subs = [scorer_for(s2) for s2 in spec["subs"]]
-
-                def multi_scores(t, docs, tfs):
-                    acc = None
-                    for sub in subs:
-                        s = sub(t, docs, tfs)
-                        acc = s if acc is None else (
-                            acc + s
-                        ).astype(np.float32)
-                    return acc
-
-                return multi_scores
-            raise ValueError(kind)
-
-        clause_scores = scorer_for(sim)
+        def clause_scores(t, docs, tfs):
+            return S.score_clause(sim, t, tfs, norms[docs - gbase], bm25)
 
         def excl_mask() -> Optional[np.ndarray]:
             """MUST_NOT docs of this group as a dense mask, or None."""
@@ -3919,14 +3629,9 @@ def make_group_scorer(plan: QueryPlan, wand: bool):
             hit &= ~em
         idxs = np.nonzero(hit)[0]
         cand_scores = acc[idxs].astype(np.float32)
-        if sim is not None and sim["kind"] == "classic":
+        if coords is not None:
             # coordFactors[m] applied to the f32 sum
             # (BooleanScorer2 coordinator, TFIDFSimilarity.coord)
-            from lucene_solr_spark.functions.similarity import (
-                classic_coords,
-            )
-
-            coords = classic_coords(sim["max_coord"])
             cand_scores = (
                 cand_scores * coords[cnt[idxs]]
             ).astype(np.float32)

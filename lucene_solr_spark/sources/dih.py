@@ -116,35 +116,19 @@ class RootEntity:
     fmt: str = "parquet"
 
 
-_READ_CACHE: dict = {}
-
-
-def _read(spark: SparkSession, path: str, fmt: str) -> DataFrame:
-    """Per-(session, source) DataFrame cache — the catalog role a
-    registered table would play under spark.table(): repeated imports
-    of the same entity reuse the resolved relation instead of
-    re-listing files and re-reading parquet footers per call."""
-    key = (id(spark), fmt, path)
-    df = _READ_CACHE.get(key)
-    if df is None:
-        df = spark.read.format(fmt).load(path)
-        _READ_CACHE[key] = df
-    return df
-
-
 def full_import(spark: SparkSession, root: RootEntity,
                 last_index_time=None) -> DataFrame:
     """Compile the entity tree to a DataFrame. With last_index_time
     set and a delta_column declared, only changed rows import
     (delta-import semantics, DocBuilder.collectDelta — expressed as a
     plain pushdown predicate instead of a pk round-trip)."""
-    df = _read(spark, root.path, root.fmt)
+    df = spark.read.format(root.fmt).load(root.path)
     if last_index_time is not None and root.delta_column:
         df = df.filter(F.col(root.delta_column) > F.lit(last_index_time))
     cols = [f.compile() for f in root.fields]
     out = df.select(F.col(root.pk), *cols)
     for ch in root.children:
-        child = _read(spark, ch.path, ch.fmt)
+        child = spark.read.format(ch.fmt).load(ch.path)
         vf = ch.value_field
         agg = (
             child.select(F.col(ch.child_key).alias("__k"),

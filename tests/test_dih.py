@@ -305,3 +305,41 @@ def test_dih_evaluators():
     # wrong-arity formatDate
     with pytest.raises(ValueError, match="two, three or four"):
         vr.evaluators["formatDate"]("'NOW'", vr)
+
+
+def test_reimport_sees_a_file_added_to_the_source(spark, tmp_path):
+    """A re-import lists its sources again: the rows of a parquet file
+    added to the orders source between two imports are imported by the
+    second, and join the child entity's rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lucene_solr_spark.driver_entry import q_dih_import
+
+    def orders(keys):
+        n = len(keys)
+        return pa.table({
+            "o_orderkey": pa.array(keys, pa.int64()),
+            "o_custkey": pa.array([7] * n, pa.int64()),
+            "o_orderstatus": ["O"] * n,
+            "o_orderdate": pa.array([datetime.datetime(2020, 1, 2)] * n,
+                                    pa.timestamp("us")),
+            "o_orderpriority": ["1-URGENT"] * n,
+        })
+
+    for name in ("orders.parquet", "lineitem.parquet"):
+        (tmp_path / name).mkdir()
+    pq.write_table(orders([1, 2]),
+                   tmp_path / "orders.parquet" / "part-0.parquet")
+    pq.write_table(pa.table({"l_orderkey": pa.array([1, 1, 3], pa.int64()),
+                             "l_linenumber": pa.array([1, 2, 1], pa.int64())}),
+                   tmp_path / "lineitem.parquet" / "part-0.parquet")
+
+    def imported():
+        return [(r["o_orderkey"], r["lineitem_count"])
+                for r in q_dih_import(spark, str(tmp_path)).collect()]
+
+    assert imported() == [(1, 2), (2, 0)]
+    pq.write_table(orders([3]),
+                   tmp_path / "orders.parquet" / "part-1.parquet")
+    assert imported() == [(1, 2), (2, 0), (3, 1)]

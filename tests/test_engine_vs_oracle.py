@@ -309,19 +309,21 @@ def test_search_many_executor_merge_path(spark, built):
     assert norm(small) == norm(big)
 
 
-@pytest.mark.parametrize(
-    "similarity",
-    ["classic", "lmdirichlet", "dfr", "lmjelinekmercer", "ib",
-     "dfr_inl2", "dfr_ifb2", "dfr_pl2", "ib_spl", "sweetspot",
-     "multi:bm25+lmdirichlet", "multi:dfr+ib",
-     # composed SimilarityBase grid sample: every BasicModel,
-     # AfterEffect, Normalization, Distribution and Lambda appears
-     # at least once (full grid available; see sb_parse)
-     "dfr:be:l:h2", "dfr:d:b:h1", "dfr:g:l:h3", "dfr:ine:b:z",
-     "dfr:if:no:no", "dfr:p:b:h1",
-     "ib:ll:ttf:h2", "ib:spl:df:h3",
-     "multi:dfr:be:l:h2+ib:ll:ttf:h1"],
-)
+SIMILARITIES = [
+    "classic", "lmdirichlet", "dfr", "lmjelinekmercer", "ib",
+    "dfr_inl2", "dfr_ifb2", "dfr_pl2", "ib_spl", "sweetspot",
+    "multi:bm25+lmdirichlet", "multi:dfr+ib",
+    # composed SimilarityBase grid sample: every BasicModel,
+    # AfterEffect, Normalization, Distribution and Lambda appears
+    # at least once (full grid available; see sb_parse)
+    "dfr:be:l:h2", "dfr:d:b:h1", "dfr:g:l:h3", "dfr:ine:b:z",
+    "dfr:if:no:no", "dfr:p:b:h1",
+    "ib:ll:ttf:h2", "ib:spl:df:h3",
+    "multi:dfr:be:l:h2+ib:ll:ttf:h1",
+]
+
+
+@pytest.mark.parametrize("similarity", SIMILARITIES)
 @pytest.mark.parametrize("q", [QUERY_SET[0], QUERY_SET[2], QUERY_SET[3],
                                QUERY_SET[5]],
                          ids=lambda q: f"q{q['query_id']}")
@@ -372,27 +374,52 @@ def test_sb_composition_equals_fused_alias(spark, built, alias, composed):
 
 def test_cogroup_path_matches_broadcast_path(spark, built, count_jobs):
     """The at-scale cogroup execution (norms too big to broadcast) must
-    return bit-identical results to the broadcast fast path."""
+    return bit-identical results to the broadcast fast path: single
+    queries (AND, phrase, classic OR) and a mixed search_many batch."""
     index_dir, _ = built
     s = IndexSearcher(spark, index_dir)
     assert s._segs_bc is not None  # small index: broadcast active
-    a = [(r["doc_id"], np.float32(r["score"]))
-         for r in s.search("common_util base_handler", k=10,
-                           mode="and").collect()]
-    ph_a = [(r["doc_id"], np.float32(r["score"]))
-            for r in s.search_phrase("seven hundred", k=10).collect()]
+    batch = [
+        {"query_text": "common_util base_handler", "mode": "and"},
+        "hundred seventy",
+        {"query_text": "read_buf scan_impl token_codec", "mode": "or",
+         "mm": 2},
+        {"query_text": "common_util read_buf", "mode": "or",
+         "exclude": "base_handler"},
+    ]
+
+    def run_all():
+        return {
+            "and": [(r["doc_id"], np.float32(r["score"]))
+                    for r in s.search("common_util base_handler", k=10,
+                                      mode="and").collect()],
+            "phrase": [(r["doc_id"], np.float32(r["score"]))
+                       for r in s.search_phrase("hundred seventy",
+                                                k=10).collect()],
+            "classic": [(r["doc_id"], np.float32(r["score"]))
+                        for r in s.search("common_util read_buf scan_impl",
+                                          k=10, similarity="classic")
+                        .collect()],
+            **{f"many_k{k}": sorted(
+                (r["query_id"], r["doc_id"],
+                 np.float32(r["score"]).tobytes())
+                for r in s.search_many(batch, k=k).collect())
+               for k in (10, None)},
+        }
+
+    a = run_all()
     s._segs_bc = None  # force the cogroup path
     rows, n_jobs = count_jobs(lambda: s.search(
         "common_util base_handler", k=10, mode="and").collect())
-    b = [(r["doc_id"], np.float32(r["score"])) for r in rows]
-    rows, n_phrase_jobs = count_jobs(lambda: s.search_phrase(
-        "seven hundred", k=10).collect())
-    ph_b = [(r["doc_id"], np.float32(r["score"])) for r in rows]
+    _, n_phrase_jobs = count_jobs(lambda: s.search_phrase(
+        "hundred seventy", k=10).collect())
     # the forced side really ran on Spark, not on the driver path
     assert n_jobs >= 1 and n_phrase_jobs >= 1
-    assert a
-    assert a == b
-    assert ph_a == ph_b
+    b = run_all()
+    for name, got in a.items():
+        assert got, name
+        assert got == b[name], name
+    assert {q for q, _, _ in a["many_kNone"]} == set(range(len(batch)))
 
 
 def test_assign_doc_ids_dedupes_duplicate_keys(spark):
@@ -474,37 +501,47 @@ def test_whitespace_analyzer_rank_identical(spark, small_corpus, tmp_path):
     assert [c.terms for c in ast] == [["mergeIdx"], ["="]]
 
 
-def test_explain_rederives_collector_scores(spark, built):
+@pytest.mark.parametrize("similarity", ["bm25"] + SIMILARITIES)
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_explain_rederives_collector_scores(spark, built, open_distributed,
+                                            path, similarity):
     """The CheckHits contract (test-framework/.../search/CheckHits.java
     :288+): explain(query, doc).value must equal the float32 score the
-    collector returned, for every hit, across modes and similarities."""
+    collector returned, for every hit, across modes and similarities,
+    both with the index held on the driver and with it on Spark."""
     index_dir, _ = built
-    s = IndexSearcher(spark, index_dir)
+    if path == "driver":
+        s = IndexSearcher(spark, index_dir)
+    else:
+        s = open_distributed(spark, index_dir)
+    assert (s._local_postings is not None) == (path == "driver")
     cases = [
         dict(query_text="common_util base_handler", mode="and",
              min_should_match=0, exclude=""),
         dict(query_text="read_buf scan_impl token_codec", mode="or",
              min_should_match=2, exclude=""),
+        # plain OR: partial matches (classic's coord < 1) among the hits
+        dict(query_text="common_util read_buf scan_impl", mode="or",
+             min_should_match=0, exclude=""),
     ]
     for kw in cases:
-        for similarity in ("bm25", "classic"):
-            hits = s.search(k=5, similarity=similarity, **kw).collect()
-            assert hits
-            for r in hits:
-                ex = s.explain(
-                    kw["query_text"], int(r["doc_id"]), mode=kw["mode"],
-                    min_should_match=kw["min_should_match"],
-                    exclude=kw["exclude"], similarity=similarity,
-                )
-                assert ex["match"], (kw, similarity, r)
-                assert np.float32(ex["value"]).tobytes() == np.float32(
-                    r["score"]
-                ).tobytes(), (kw, similarity, r["doc_id"])
+        hits = s.search(k=5, similarity=similarity, **kw).collect()
+        assert hits
+        for r in hits:
+            ex = s.explain(
+                kw["query_text"], int(r["doc_id"]), mode=kw["mode"],
+                min_should_match=kw["min_should_match"],
+                exclude=kw["exclude"], similarity=similarity,
+            )
+            assert ex["match"], (kw, similarity, r)
+            assert np.float32(ex["value"]).tobytes() == np.float32(
+                r["score"]
+            ).tobytes(), (kw, similarity, r["doc_id"])
     # non-matching doc explains as no-match
     hits = s.search("common_util", k=None).collect()
     matched = {r["doc_id"] for r in hits}
     non = next(d for d in range(s.max_doc) if d not in matched)
-    assert not s.explain("common_util", non)["match"]
+    assert not s.explain("common_util", non, similarity=similarity)["match"]
 
 
 def test_randomized_query_duel(spark, built):
