@@ -307,13 +307,11 @@ def main() -> None:
     # noise up to 2x on identical work (BASELINE.md rep history), so a
     # single-shot cold build measures the neighbor, not the engine —
     # same methodology as the min-of-2 query passes below.
-    index_dir = os.path.join(
-        "/tmp", "lss_entry_index", sf_name
-    )
+    index_dir = de._entry_dir(sf_dir)
     build_runs = []
     for _ in range(2):
         shutil.rmtree(index_dir, ignore_errors=True)
-        de._SEARCHERS.clear()
+        de._MEMO.clear()
         t0 = time.time()
         searcher = de.get_searcher(spark, sf_dir)
         build_runs.append(round(time.time() - t0, 3))

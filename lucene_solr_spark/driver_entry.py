@@ -30,8 +30,11 @@ both sides (exact widening) so schemas agree.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import math
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -73,14 +76,45 @@ TOP_K = 10
 # corpus mapping + cached index build
 # ---------------------------------------------------------------------------
 
-def documents_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map the driver's ``documents`` table onto the engine corpus shape.
+_MEMO: dict = {}
+
+
+def _memo(spark: SparkSession, key, build):
+    """The value stored for ``key`` if it was built under this same
+    session, else ``build()``, stored in its place: one entry per key,
+    never one per session. The entry holds its session, so an ``is``
+    match cannot be a recycled object. A replaced value is not
+    unpersisted: sessions of one SparkContext share the cached data of
+    an identical plan, so unpersisting the old value would drop the new
+    one's cache too."""
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] is spark:
+        return hit[1]
+    value = build()
+    _MEMO[key] = (spark, value)
+    return value
+
+
+def _per_tier(fn):
+    """``fn(spark, sf_dir)``, built once per session and tier (_memo)."""
+    @functools.wraps(fn)
+    def cached(spark, sf_dir):
+        return _memo(spark, (fn.__name__, os.path.realpath(sf_dir)),
+                     lambda: fn(spark, sf_dir))
+    return cached
+
+
+def _documents(spark, sf_dir):
+    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+
+
+def _as_corpus(docs: DataFrame) -> DataFrame:
+    """Map ``documents`` rows onto the engine corpus shape.
 
     path is the zero-padded original doc_id, so the engine's
     deterministic docID (dense rank over (repo, path, commit),
     SURVEY.md section 1.4) equals ``row_number() OVER (ORDER BY
     doc_id) - 1`` — exactly what the oracle SQL uses."""
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     return docs.select(
         F.lit("corpus").alias("repo"),
         F.format_string("%012d", F.col("doc_id")).alias("path"),
@@ -90,14 +124,17 @@ def documents_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def documents_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The driver's ``documents`` table in the engine corpus shape."""
+    return _as_corpus(_documents(spark, sf_dir))
+
+
 def _ensure_pyfiles(spark: SparkSession) -> None:
     """Ship the package to executors regardless of the driver's CWD
     (local mode inherits sys.path, but addPyFile is the contract that
     also holds under spark-submit on a real cluster)."""
     if getattr(spark, "_lss_pyfiles", False):
         return
-    import hashlib
-
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     # content-addressed zip name: a zip cached only by existence goes
     # STALE across sessions — workers then resolve the package from the
@@ -129,46 +166,53 @@ def _ensure_pyfiles(spark: SparkSession) -> None:
     spark._lss_pyfiles = True  # type: ignore[attr-defined]
 
 
-_SEARCHERS: dict = {}
+def _entry_dir(sf_dir: str, suffix: str = "") -> str:
+    """Where an entry index over tier ``sf_dir`` lives. Keyed on the
+    tier's real path, so two tiers with one basename never share an
+    index (a resumed build would serve the other tier's snapshot);
+    ``suffix`` names the derived index (``_title``, ``_replica``...)."""
+    real = os.path.realpath(sf_dir)
+    tag = hashlib.sha256(real.encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), "lss_entry_index",
+                        f"{os.path.basename(real)}_{tag}{suffix}")
+
+
+def _entry_index(spark: SparkSession, sf_dir: str, suffix: str, corpus):
+    """Build (once per session, resumable) the index of ``corpus()``
+    in ``_entry_dir(sf_dir, suffix)`` and return its IndexSearcher.
+    Build = segment build + salted merge + commit; an index left by
+    another codec version is wiped first."""
+    def build():
+        from lucene_solr_spark.catalog import Catalog
+        from lucene_solr_spark.constants import FORMAT_VERSION
+        from lucene_solr_spark.indexing.build import (
+            IndexWriter,
+            merge_postings,
+        )
+        from lucene_solr_spark.search.executor import IndexSearcher
+
+        _ensure_pyfiles(spark)
+        index_dir = _entry_dir(sf_dir, suffix)
+        old = Catalog(index_dir).latest()
+        if old is not None and int(
+            old.props.get("format_version", 0)
+        ) != FORMAT_VERSION:
+            shutil.rmtree(index_dir, ignore_errors=True)
+        writer = IndexWriter(
+            spark, index_dir, docs_per_segment=DOCS_PER_SEGMENT, n_batches=2
+        )
+        snap = writer.build(corpus(), resume=True)
+        if snap.stage != "merge":
+            merge_postings(spark, index_dir, segs_per_group=SEGS_PER_GROUP)
+        return IndexSearcher(spark, index_dir)
+
+    return _memo(spark, ("index", os.path.realpath(sf_dir), suffix), build)
 
 
 def get_searcher(spark: SparkSession, sf_dir: str):
-    """Build (once, resumable) the index for sf_dir and return a cached
-    IndexSearcher. Build = segment build + salted merge + commit."""
-    from lucene_solr_spark.indexing.build import IndexWriter, merge_postings
-    from lucene_solr_spark.search.executor import IndexSearcher
-
-    key = os.path.realpath(sf_dir)
-    hit = _SEARCHERS.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    _ensure_pyfiles(spark)
-    index_dir = os.path.join(
-        tempfile.gettempdir(),
-        "lss_entry_index",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    # stale-format guard: wipe cached indexes from older codec versions
-    from lucene_solr_spark.catalog import Catalog
-    from lucene_solr_spark.constants import FORMAT_VERSION
-
-    old = Catalog(index_dir).latest()
-    if old is not None and int(
-        old.props.get("format_version", 0)
-    ) != FORMAT_VERSION:
-        import shutil
-
-        shutil.rmtree(index_dir, ignore_errors=True)
-    corpus = documents_as_corpus(spark, sf_dir)
-    writer = IndexWriter(
-        spark, index_dir, docs_per_segment=DOCS_PER_SEGMENT, n_batches=2
-    )
-    snap = writer.build(corpus, resume=True)
-    if snap.stage != "merge":
-        merge_postings(spark, index_dir, segs_per_group=SEGS_PER_GROUP)
-    searcher = IndexSearcher(spark, index_dir)
-    _SEARCHERS[key] = (spark, searcher)
-    return searcher
+    """The cached IndexSearcher over the whole ``documents`` table."""
+    return _entry_index(spark, sf_dir, "",
+                        lambda: documents_as_corpus(spark, sf_dir))
 
 
 # Multi-field surface (SURVEY.md §2.11 / Solr qf): a second indexed
@@ -181,55 +225,15 @@ def get_searcher(spark: SparkSession, sf_dir: str):
 TITLE_NTOK = 8
 
 
-def documents_as_title_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    title = F.array_join(
-        F.slice(F.split(F.col("text"), " ", -1), 1, TITLE_NTOK), " "
-    )
-    return docs.select(
-        F.lit("corpus").alias("repo"),
-        F.format_string("%012d", F.col("doc_id")).alias("path"),
-        F.lit("head").alias("commit"),
-        F.col("lang"),
-        title.alias("content"),
-    )
-
-
 def get_title_searcher(spark: SparkSession, sf_dir: str):
-    """Build (once, resumable) the title-field index for sf_dir."""
-    from lucene_solr_spark.indexing.build import IndexWriter, merge_postings
-    from lucene_solr_spark.search.executor import IndexSearcher
+    """The cached IndexSearcher over the title field."""
+    def corpus():
+        title = F.array_join(
+            F.slice(F.split(F.col("text"), " ", -1), 1, TITLE_NTOK), " "
+        )
+        return _as_corpus(_documents(spark, sf_dir).withColumn("text", title))
 
-    key = ("title", os.path.realpath(sf_dir))
-    hit = _SEARCHERS.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    _ensure_pyfiles(spark)
-    index_dir = os.path.join(
-        tempfile.gettempdir(),
-        "lss_entry_index",
-        os.path.basename(os.path.normpath(sf_dir)) + "_title",
-    )
-    from lucene_solr_spark.catalog import Catalog
-    from lucene_solr_spark.constants import FORMAT_VERSION
-
-    old = Catalog(index_dir).latest()
-    if old is not None and int(
-        old.props.get("format_version", 0)
-    ) != FORMAT_VERSION:
-        import shutil
-
-        shutil.rmtree(index_dir, ignore_errors=True)
-    corpus = documents_as_title_corpus(spark, sf_dir)
-    writer = IndexWriter(
-        spark, index_dir, docs_per_segment=DOCS_PER_SEGMENT, n_batches=2
-    )
-    snap = writer.build(corpus, resume=True)
-    if snap.stage != "merge":
-        merge_postings(spark, index_dir, segs_per_group=SEGS_PER_GROUP)
-    searcher = IndexSearcher(spark, index_dir)
-    _SEARCHERS[key] = (spark, searcher)
-    return searcher
+    return _entry_index(spark, sf_dir, "_title", corpus)
 
 
 # Distributed-search shards (q_dist_merge): two OVERLAPPING shards —
@@ -245,49 +249,13 @@ def get_shard_searcher(spark: SparkSession, sf_dir: str, shard: int):
     statistics (df, maxDoc, avgdl -> idf, norm cache) are shard-local,
     exactly the reference's non-merged distributed idf
     (QueryComponent.java:722-724 createDistributedIdf is empty)."""
-    from lucene_solr_spark.indexing.build import IndexWriter, merge_postings
-    from lucene_solr_spark.search.executor import IndexSearcher
+    def corpus():
+        docs = _documents(spark, sf_dir)
+        return _as_corpus(docs.filter(
+            (F.col("doc_id") % 2 == shard) | (F.col("doc_id") < DIST_OVERLAP)
+        ))
 
-    key = (os.path.realpath(sf_dir), shard)
-    hit = _SEARCHERS.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    _ensure_pyfiles(spark)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    docs = docs.filter(
-        (F.col("doc_id") % 2 == shard) | (F.col("doc_id") < DIST_OVERLAP)
-    )
-    corpus = docs.select(
-        F.lit("corpus").alias("repo"),
-        F.format_string("%012d", F.col("doc_id")).alias("path"),
-        F.lit("head").alias("commit"),
-        F.col("lang"),
-        F.col("text").alias("content"),
-    )
-    index_dir = os.path.join(
-        tempfile.gettempdir(),
-        "lss_entry_index",
-        os.path.basename(os.path.normpath(sf_dir)) + f"_shard{shard}",
-    )
-    from lucene_solr_spark.catalog import Catalog
-    from lucene_solr_spark.constants import FORMAT_VERSION
-
-    old = Catalog(index_dir).latest()
-    if old is not None and int(
-        old.props.get("format_version", 0)
-    ) != FORMAT_VERSION:
-        import shutil
-
-        shutil.rmtree(index_dir, ignore_errors=True)
-    writer = IndexWriter(
-        spark, index_dir, docs_per_segment=DOCS_PER_SEGMENT, n_batches=2
-    )
-    snap = writer.build(corpus, resume=True)
-    if snap.stage != "merge":
-        merge_postings(spark, index_dir, segs_per_group=SEGS_PER_GROUP)
-    searcher = IndexSearcher(spark, index_dir)
-    _SEARCHERS[key] = (spark, searcher)
-    return searcher
+    return _entry_index(spark, sf_dir, f"_shard{shard}", corpus)
 
 
 # ---------------------------------------------------------------------------
@@ -1064,9 +1032,6 @@ def q_wfst_complete(spark, sf_dir):
     return s.complete_wfst("s", n=5)
 
 
-_REPLICAS = {}
-
-
 def q_replication_top10(spark, sf_dir):
     """Index replication (lucene/replicator: IndexRevision immutable
     file set, IndexReplicationHandler publish-segments-last,
@@ -1078,22 +1043,14 @@ def q_replication_top10(spark, sf_dir):
     from lucene_solr_spark.replicator import replicate
     from lucene_solr_spark.search.executor import IndexSearcher
 
-    get_searcher(spark, sf_dir)  # ensure the source index exists
-    key = os.path.realpath(sf_dir)
-    hit = _REPLICAS.get(key)
-    if hit is not None and hit[0] is spark:
-        s = hit[1]
-    else:
-        src = os.path.join(
-            tempfile.gettempdir(), "lss_entry_index",
-            os.path.basename(os.path.normpath(sf_dir)))
-        dst = src + "_replica"
-        import shutil
-
+    def build():
+        get_searcher(spark, sf_dir)  # ensure the source index exists
+        dst = _entry_dir(sf_dir, "_replica")
         shutil.rmtree(dst, ignore_errors=True)
-        replicate(src, dst)
-        s = IndexSearcher(spark, dst)
-        _REPLICAS[key] = (spark, s)
+        replicate(_entry_dir(sf_dir), dst)
+        return IndexSearcher(spark, dst)
+
+    s = _memo(spark, ("replica", os.path.realpath(sf_dir)), build)
     return _topk_double(s.search(Q_SINGLE, k=TOP_K))
 
 
@@ -1195,30 +1152,18 @@ def q_fuzzy_query(spark, sf_dir):
     return _topk_double(s.search_boolean(f"{Q_FUZZY}~", k=TOP_K))
 
 
-_SORTED_IDX: dict = {}
-
-
 def q_sorted_index_top10(spark, sf_dir):
     """Index-time sorting + early termination (SortingMergePolicy +
     EarlyTerminatingSortingCollector, lucene/misc/.../sorter/): top-10
     by doc_len from the range-ordered sort projection — only the first
     bucket dir(s) are ever read (I/O proportional to k, not corpus)."""
-    import tempfile as _tf
-
     from lucene_solr_spark.search.sorted import SortedIndex
 
-    s = get_searcher(spark, sf_dir)
-    key = os.path.realpath(sf_dir)
-    hit = _SORTED_IDX.get(key)
-    if hit is None or hit[0] is not spark:
-        out = os.path.join(
-            _tf.gettempdir(), "lss_entry_index",
-            os.path.basename(os.path.normpath(sf_dir)) + "_sorted_doclen",
-        )
-        si = SortedIndex.build(s, "doc_len", out, buckets=16)
-        _SORTED_IDX[key] = (spark, si)
-        hit = _SORTED_IDX[key]
-    return hit[1].top(TOP_K, ascending=True).select("doc_id", "doc_len")
+    si = _memo(spark, ("sorted", os.path.realpath(sf_dir)),
+               lambda: SortedIndex.build(
+                   get_searcher(spark, sf_dir), "doc_len",
+                   _entry_dir(sf_dir, "_sorted_doclen"), buckets=16))
+    return si.top(TOP_K, ascending=True).select("doc_id", "doc_len")
 
 
 PAYLOAD_MOD = 5   # deterministic payload = (token position % 5) + 1
@@ -1234,7 +1179,7 @@ def q_payload_term(spark, sf_dir):
                                                       payload_term_query)
 
     s = get_searcher(spark, sf_dir)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = _documents(spark, sf_dir)
     ann = docs.select(
         "doc_id",
         F.array_join(
@@ -3204,10 +3149,6 @@ def q_facet_sampled(spark, sf_dir):
 # corpus/pipeline operators (documents + embeddings, no index)
 # ---------------------------------------------------------------------------
 
-def _documents(spark, sf_dir):
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
 def _documents_par(spark, sf_dir):
     """documents, repartitioned to the session parallelism — for
     entries whose cost is a heavy Python kernel per doc. A small
@@ -3272,16 +3213,19 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     shingles carry no near-dup signal anyway. MinHash/LSH
     (minhash_lsh_pairs) is the sub-quadratic path at full scale."""
     sh = _shingles_df(spark, sf_dir)
-    # inverted index with bounded postings: ONE shuffle of the shingle
-    # table builds per-shingle sorted doc lists; the df ceiling drops
-    # hot (boilerplate) shingles at the same aggregation; candidate
-    # pairs then generate LOCALLY inside each list (<= CAP^2/2 per
-    # shingle) — no shingle-keyed self-join shuffle. Same pair
-    # multiset as the former a-join-b-on-shingle plan.
+    # the df ceiling is counted BEFORE any doc list is built: rows are
+    # distinct (doc_id, shingle), so count(*) is the shingle's df, and
+    # a hot (boilerplate) shingle never fills a collect_set buffer.
+    # The inverted index then holds bounded per-shingle sorted doc
+    # lists; candidate pairs generate LOCALLY inside each list
+    # (<= CAP^2/2 per shingle) — no shingle-keyed self-join shuffle.
+    cold = (
+        sh.groupBy("shingle").agg(F.count("*").alias("df"))
+        .filter(F.col("df") <= SHINGLE_DF_CAP).select("shingle")
+    )
     inv = (
-        sh.groupBy("shingle")
+        sh.join(cold, "shingle", "leftsemi").groupBy("shingle")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("ds"))
-        .filter(F.size("ds") <= SHINGLE_DF_CAP)
     )
     sizes = (
         inv.select(F.explode("ds").alias("doc_id"))
@@ -3824,7 +3768,7 @@ def q_payload_near(spark, sf_dir):
         payload_near_query, payload_positions)
 
     s = get_searcher(spark, sf_dir)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = _documents(spark, sf_dir)
     ann = docs.select(
         "doc_id",
         F.array_join(
@@ -4350,9 +4294,7 @@ def _ann_planes() -> np.ndarray:
 EMBED_NEARDUP_TAU = 0.4
 
 
-_BAND_KEYS_CACHE: dict = {}
-
-
+@_per_tier
 def _band_keys_df(spark, sf_dir):
     """(vec_id, band, key) sign-LSH band signatures for every
     embedding (shared by the ANN search and the near-dup join).
@@ -4360,10 +4302,6 @@ def _band_keys_df(spark, sf_dir):
     signature table twice and the ANN query reuses it — at production
     scale this is the signatures table you materialize alongside the
     corpus, not a projection you recompute per query."""
-    ck = (id(spark), os.path.realpath(sf_dir))
-    hit = _BAND_KEYS_CACHE.get(ck)
-    if hit is not None:
-        return hit
     planes = _ann_planes()
     B = ANN_PLANES // ANN_BAND_BITS
     e = _embeddings(spark, sf_dir)
@@ -4391,7 +4329,6 @@ def _band_keys_df(spark, sf_dir):
     sigs = e.select("vec_id", "embedding").mapInPandas(
         band_keys, "vec_id long, band int, key long"
     ).persist()
-    _BAND_KEYS_CACHE[ck] = sigs
     return sigs
 
 
@@ -8185,19 +8122,13 @@ def _md5int(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-_SHINGLES_CACHE: dict = {}
-
-
+@_per_tier
 def _shingles_df(spark, sf_dir):
     """Distinct (doc_id, 3-gram shingle) rows, persisted once per
     (session, tier): the MinHash pipeline reads this 4x (distinct
     hash, sizes, and both sides of the verify probe) — one shuffle to
     build, reused thereafter, the same materialize-once shape a
     production dedup run uses."""
-    ck = (id(spark), os.path.realpath(sf_dir))
-    hit = _SHINGLES_CACHE.get(ck)
-    if hit is not None:
-        return hit
     # ~300x row explosion before the distinct's shuffle: spread the
     # single parquet split first so the map side isn't one task
     d = _documents_par(spark, sf_dir).select(
@@ -8218,13 +8149,10 @@ def _shingles_df(spark, sf_dir):
             )
         ).alias("shingle"),
     ).distinct().persist()
-    _SHINGLES_CACHE[ck] = sh
     return sh
 
 
-_MINHASH_BANDS_CACHE: dict = {}
-
-
+@_per_tier
 def _minhash_bands_df(spark, sf_dir):
     """Per-(doc, band) LSH signature table, persisted once per
     (session, tier): hash each DISTINCT shingle once per hash function
@@ -8233,10 +8161,6 @@ def _minhash_bands_df(spark, sf_dir):
     average shingle df), min per (doc, hid), concat per band. A
     production dedup run materializes signatures once and probes them
     repeatedly — this is that table."""
-    ck = (id(spark), os.path.realpath(sf_dir))
-    hit = _MINHASH_BANDS_CACHE.get(ck)
-    if hit is not None:
-        return hit
     sh = _shingles_df(spark, sf_dir)
     hid = F.explode(
         F.sequence(F.lit(0), F.lit(MINHASH_FUNCS - 1))
@@ -8267,22 +8191,15 @@ def _minhash_bands_df(spark, sf_dir):
             ).alias("sig")
         )
     ).persist()
-    _MINHASH_BANDS_CACHE[ck] = bands
     return bands
 
 
-_MINHASH_PAIRS_CACHE: dict = {}
-
-
+@_per_tier
 def _minhash_pairs_df(spark, sf_dir):
     """Verified near-dup pair graph (ida, idb, jacc), persisted once
     per (session, tier): minhash_lsh_pairs AND dedup_clusters consume
     the same graph, so clustering reuses the candidate verification
     instead of re-running the LSH join (r4 verdict item 4)."""
-    ck = (id(spark), os.path.realpath(sf_dir))
-    hit = _MINHASH_PAIRS_CACHE.get(ck)
-    if hit is not None:
-        return hit
     sh = _shingles_df(spark, sf_dir)
     bands = _minhash_bands_df(spark, sf_dir)
     a, b = bands.alias("a"), bands.alias("b")
@@ -8325,7 +8242,6 @@ def _minhash_pairs_df(spark, sf_dir):
         .select("ida", "idb", "jacc")
         .persist()
     )
-    _MINHASH_PAIRS_CACHE[ck] = verified
     return verified
 
 
@@ -8341,9 +8257,7 @@ def q_minhash_lsh(spark, sf_dir):
     return _minhash_pairs_df(spark, sf_dir).orderBy("ida", "idb")
 
 
-_SIMHASH_FP_CACHE: dict = {}
-
-
+@_per_tier
 def _simhash_fp_df(spark, sf_dir):
     """Per-doc 60-bit SimHash fingerprints, persisted once per
     (session, tier). Plan shape: ONE groupBy(doc_id) carrying all 60
@@ -8351,10 +8265,6 @@ def _simhash_fp_df(spark, sf_dir):
     60x row explode (the previous per-(doc,bit) shape shuffled 60
     rows per token; at 100 TB that blowup IS the job cost). The
     fingerprint folds the 60 sign bits inside the same projection."""
-    ck = (id(spark), os.path.realpath(sf_dir))
-    hit = _SIMHASH_FP_CACHE.get(ck)
-    if hit is not None:
-        return hit
     d = _documents(spark, sf_dir).select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     ).filter(F.col("tok") != "")
@@ -8377,7 +8287,6 @@ def _simhash_fp_df(spark, sf_dir):
         ).otherwise(F.lit(0).cast("long"))
         fp_expr = term if fp_expr is None else fp_expr + term
     fp = sums.select("doc_id", fp_expr.alias("fp")).persist()
-    _SIMHASH_FP_CACHE[ck] = fp
     return fp
 
 
@@ -10199,6 +10108,7 @@ def _ivf_assign_topr_expr(cents, r: int):
     )["cid"]
 
 
+@_per_tier
 def _ivf_train(spark, sf_dir):
     """Coarse quantizer training on a bounded PUSHDOWN SAMPLE (r3
     verdict item 4): ONE collect fetches the query vector, the fixed
@@ -10219,11 +10129,7 @@ def _ivf_train(spark, sf_dir):
     At 100 TB this IS the standard design: train the coarse quantizer
     on a bounded in-memory sample (one pushdown scan), broadcast the
     centroid literals, keep the full-scan ASSIGNMENT distributed.
-    Returns ((cents, qv)) cached per sf_dir."""
-    ckey = os.path.realpath(sf_dir)
-    hit = _IVF_CENTROIDS.get(ckey)
-    if hit is not None:
-        return hit
+    Returns ((cents, qv)) cached per session and tier."""
     rows = (
         _embeddings(spark, sf_dir)
         .filter(
@@ -10283,12 +10189,7 @@ def _ivf_train(spark, sf_dir):
             (cid, [float(x) for x in s.astype(np.float64)
                    / (n * qscale)])
             for cid, s, n in zip(keep, sums, counts))
-    out = (cents, qv)
-    _IVF_CENTROIDS[ckey] = out
-    return out
-
-
-_IVF_CENTROIDS: dict = {}
+    return cents, qv
 
 
 def q_ann_ivf_top10(spark, sf_dir):
@@ -11188,9 +11089,6 @@ ORACLES["geohash_rpt_top10"] = _GEOHASH_RPT_SQL
 
 # --- DataImportHandler source -----------------------------------------------
 
-_DIH_PLAN_CACHE: dict = {}
-
-
 def _source_listing(paths) -> tuple:
     """(path, size, mtime) of every file under each source path: a read
     relation lists its files once, so a plan built over an older
@@ -11225,11 +11123,12 @@ def q_dih_import(spark, sf_dir):
     the first import per session pays the full pipeline."""
     orders = os.path.join(sf_dir, "orders.parquet")
     lineitem = os.path.join(sf_dir, "lineitem.parquet")
-    ck = (id(spark), os.path.realpath(sf_dir))
-    listing = _source_listing((orders, lineitem))
-    hit = _DIH_PLAN_CACHE.get(ck)
-    if hit is not None and hit[0] == listing:
-        return hit[1]
+    key = ("dih", os.path.realpath(sf_dir),
+           _source_listing((orders, lineitem)))
+    return _memo(spark, key, lambda: _dih_plan(spark, orders, lineitem))
+
+
+def _dih_plan(spark, orders, lineitem):
     from lucene_solr_spark.sources.dih import (
         ChildEntity,
         DIHField,
@@ -11262,16 +11161,13 @@ def q_dih_import(spark, sf_dir):
             )
         ],
     )
-    out = full_import(spark, root)
-    out = out.select(
+    return full_import(spark, root).select(
         F.col("o_orderkey").cast("long").alias("o_orderkey"),
         "cust_status", "priority_code", "priority_name", "order_date",
         F.coalesce(F.concat_ws(",", F.col("line_no")), F.lit(""))
          .alias("lines_csv"),
         F.col("lineitem_count").cast("long").alias("lineitem_count"),
     ).orderBy("o_orderkey")
-    _DIH_PLAN_CACHE[ck] = (listing, out)
-    return out
 
 
 _DIH_SQL = r"""
@@ -11310,7 +11206,7 @@ def q_solr_cell(spark, sf_dir):
     path."""
     from lucene_solr_spark.sources.extract import extract
 
-    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    d = _documents(spark, sf_dir)
     html = F.concat(
         F.lit('<html><head><title> Doc '), F.col("doc_id").cast("string"),
         F.lit(' </title><meta name="lang" content="'), F.col("lang"),
@@ -11434,7 +11330,7 @@ def q_composite_route(spark, sf_dir):
     DuckDB SQL."""
     from lucene_solr_spark.cloud import route
 
-    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    d = _documents(spark, sf_dir)
     d = d.withColumn(
         "ckey", F.concat(F.col("source"), F.lit("!"),
                          F.col("doc_id").cast("string")))
@@ -11543,7 +11439,7 @@ def q_facet_taxonomy(spark, sf_dir):
     every tree node.  One explode -> array_distinct -> hash agg; at
     100 TB this is a single partial-aggregated shuffle on the node key,
     no taxonomy side-index needed."""
-    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    d = _documents(spark, sf_dir)
     paths = F.array(
         F.concat_ws("/", "source", "lang"),
         F.concat_ws("/", "source",
@@ -11605,7 +11501,7 @@ def q_facet_topk_node(spark, sf_dir):
     insertion-order artifact we replace with the deterministic path
     order). One node-count agg + one per-parent ranked window + one
     broadcast-size children-count join."""
-    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    d = _documents(spark, sf_dir)
     paths = F.array(
         F.concat_ws("/", "source", "lang"),
         F.concat_ws("/", "source",
@@ -11988,7 +11884,7 @@ def q_facet_assoc(spark, sf_dir):
     single FacetArrays accumulation."""
     from lucene_solr_spark.facets import sum_associations
 
-    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    d = _documents(spark, sf_dir)
     m = d.filter(F.col("n_chars") % 5 != 0)
     mk = lambda cat, iv: m.select(  # noqa: E731
         "doc_id", cat.alias("category"), iv.cast("long").alias("int_val"),
@@ -12036,38 +11932,25 @@ ORACLES["facet_assoc_sums"] = _FACET_ASSOC_SQL
 # ---------------------------------------------------------------------------
 
 ATOMIC_MOD = 101
-_ATOMIC_DIRS: dict = {}
 
 
+@_per_tier
 def _atomic_index(spark, sf_dir):
     """Replicate the sf index (manifest-rewriting replicator — never
     copytree) and apply a deterministic atomic-update batch: every
     doc_id % ATOMIC_MOD == 0 gets {lang: {set: xx}, content: {add:
     atomupdated}}, plus one created-by-default doc (missing key,
     versionOnUpdate<=0 branch)."""
-    key = os.path.realpath(sf_dir)
-    hit = _ATOMIC_DIRS.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    get_searcher(spark, sf_dir)  # ensure the base index exists
-    base_dir = os.path.join(
-        tempfile.gettempdir(), "lss_entry_index",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    dst = base_dir + "_atomic"
-    import shutil
-
     from lucene_solr_spark.atomic import atomic_update_index
     from lucene_solr_spark.replicator import replicate
 
+    get_searcher(spark, sf_dir)  # ensure the base index exists
+    dst = _entry_dir(sf_dir, "_atomic")
     shutil.rmtree(dst, ignore_errors=True)
-    replicate(base_dir, dst)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    core = docs.filter((F.col("doc_id") % ATOMIC_MOD) == 0).select(
-        F.lit("corpus").alias("repo"),
-        F.format_string("%012d", F.col("doc_id")).alias("path"),
-        F.lit("head").alias("commit"),
-    )
+    replicate(_entry_dir(sf_dir), dst)
+    docs = _documents(spark, sf_dir)
+    core = _as_corpus(docs.filter((F.col("doc_id") % ATOMIC_MOD) == 0)
+                      ).select("repo", "path", "commit")
     ops = F.array(
         F.struct(F.lit(0).alias("seq"), F.lit("lang").alias("field"),
                  F.lit("set").alias("op"), F.lit("xx").alias("value")),
@@ -12090,7 +11973,6 @@ def _atomic_index(spark, sf_dir):
         spark, dst, documents_as_corpus(spark, sf_dir),
         upd.unionByName(created),
     )
-    _ATOMIC_DIRS[key] = (spark, dst)
     return dst
 
 
@@ -12181,6 +12063,7 @@ ORACLES["realtime_get"] = _RTG_SQL
 # merged by docID rebase must equal the single full index bit-for-bit
 # ---------------------------------------------------------------------------
 
+@_per_tier
 def _addindexes_searcher(spark, sf_dir):
     """Build half-corpus indexes A (doc_id < n/2) and B (rest), then
     addIndexes B into A. Dense docIDs are rank-by-key, so A+B's docID
@@ -12190,26 +12073,14 @@ def _addindexes_searcher(spark, sf_dir):
     from lucene_solr_spark.indexing.build import IndexWriter, merge_postings
     from lucene_solr_spark.search.executor import IndexSearcher
 
-    key = ("addidx", os.path.realpath(sf_dir))
-    hit = _SEARCHERS.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
     _ensure_pyfiles(spark)
-    import shutil
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    n = docs.count()
-    half = n // 2
-    base = os.path.join(
-        tempfile.gettempdir(), "lss_entry_index",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    half = _documents(spark, sf_dir).count() // 2
     corpus = documents_as_corpus(spark, sf_dir)
     crit = F.col("path") < F.format_string("%012d", F.lit(half))
     dirs = {}
     for name, part in (("a", corpus.filter(crit)),
                        ("b", corpus.filter(~crit))):
-        d = base + f"_addidx_{name}"
+        d = _entry_dir(sf_dir, f"_addidx_{name}")
         shutil.rmtree(d, ignore_errors=True)
         IndexWriter(
             spark, d, docs_per_segment=DOCS_PER_SEGMENT, n_batches=2
@@ -12217,9 +12088,7 @@ def _addindexes_searcher(spark, sf_dir):
         merge_postings(spark, d, segs_per_group=SEGS_PER_GROUP)
         dirs[name] = d
     add_indexes(spark, dirs["a"], [dirs["b"]])
-    searcher = IndexSearcher(spark, dirs["a"])
-    _SEARCHERS[key] = (spark, searcher)
-    return searcher
+    return IndexSearcher(spark, dirs["a"])
 
 
 def q_addindexes(spark, sf_dir):
@@ -12532,33 +12401,19 @@ ORACLES["blockjoin_scoremodes"] = _blockjoin_scoremodes_sql()
 # (stats keep counting deleted docs; PKIndexSplitter rewrites nothing)
 # ---------------------------------------------------------------------------
 
-_PK_SPLIT_DIRS: dict = {}
-
-
+@_per_tier
 def _pk_split_searcher(spark, sf_dir):
     from lucene_solr_spark.indexing.splitter import pk_split
     from lucene_solr_spark.search.executor import IndexSearcher
 
-    key = os.path.realpath(sf_dir)
-    hit = _PK_SPLIT_DIRS.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
     get_searcher(spark, sf_dir)  # ensure the base index exists
-    base_dir = os.path.join(
-        tempfile.gettempdir(), "lss_entry_index",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    import shutil
-
     n = _documents(spark, sf_dir).count()
     mid = "%012d" % (n // 2)
-    lt, ge = base_dir + "_pk_lt", base_dir + "_pk_ge"
+    lt, ge = _entry_dir(sf_dir, "_pk_lt"), _entry_dir(sf_dir, "_pk_ge")
     shutil.rmtree(lt, ignore_errors=True)
     shutil.rmtree(ge, ignore_errors=True)
-    pk_split(spark, base_dir, lt, ge, F.col("path") < F.lit(mid))
-    s = IndexSearcher(spark, lt)
-    _PK_SPLIT_DIRS[key] = (spark, s)
-    return s
+    pk_split(spark, _entry_dir(sf_dir), lt, ge, F.col("path") < F.lit(mid))
+    return IndexSearcher(spark, lt)
 
 
 def q_pk_split(spark, sf_dir):
@@ -13263,7 +13118,7 @@ def q_span_payload_check(spark, sf_dir):
     from lucene_solr_spark.functions.payloads import (
         payload_positions, span_payload_check)
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = _documents(spark, sf_dir)
     ann = docs.select(
         "doc_id",
         F.array_join(
@@ -13548,7 +13403,7 @@ def q_facet_params(spark, sf_dir):
     s = get_searcher(spark, sf_dir)
     hits = s.search(Q_FACET, k=None)
     docs_src = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        _documents(spark, sf_dir)
         .select(F.col("doc_id").alias("orig_id"), "source")
     )
     with_src = (

@@ -844,15 +844,14 @@ class IndexSearcher:
                     f"phrase expansion of {c.text!r} exceeds "
                     f"maxClauseCount={self.MAX_CLAUSE_COUNT}")
             if not rows:
-                return self.spark.createDataFrame(
-                    [], "doc_id long, score float")
+                return self._hits_frame()
             if len(rows) == 1:
                 span_clauses.append(SP.SpanTerm(rows[0][0]))
             else:
                 span_clauses.append(SP.SpanOr(
                     tuple(SP.SpanTerm(t) for t, _df, _b in rows)))
         if not span_clauses:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._hits_frame()
         if len(span_clauses) == 1:
             return self.search_spans(span_clauses[0], k=k)
         return self.search_spans(
@@ -1068,7 +1067,7 @@ class IndexSearcher:
                 selected.append(
                     (t, np.float32(np.float32(boost * boost) * idf)))
         if not selected:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._hits_frame()
         selected.sort(key=lambda v: (-float(v[1]), v[0]))
         selected = selected[:max_num_terms]
         vdf = self.spark.createDataFrame(
@@ -1199,9 +1198,8 @@ class IndexSearcher:
         try:
             out = run(node)
         except _SrndUnsat:
-            return self.spark.createDataFrame([], "doc_id long, score float")
-        out = out.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out if k is None else out.limit(k)
+            return self._hits_frame()
+        return self._filter_top(out, (), k)
 
     MAX_CLAUSE_COUNT = 1024  # BooleanQuery.maxClauseCount default
     # search_many merges per-group top-k on the driver below this many
@@ -1369,9 +1367,8 @@ class IndexSearcher:
         search_boolean) — the shared back-end for the classic string
         parser and alternative front-ends (XML query parser,
         programmatic BooleanQuery construction)."""
-        empty_df = self.spark.createDataFrame([], "doc_id long, score float")
         if not ast:
-            return empty_df
+            return self._hits_frame()
         # field ranges (doc_len:[50 TO 150]) are NON-SCORING filters —
         # FilteredQuery / Solr fq semantics (search/FilteredQuery.java;
         # CachingWrapperFilter): the doc-set predicate intersects (or,
@@ -1382,7 +1379,7 @@ class IndexSearcher:
         ast = [c for c in ast
                if not (c.kind == "range" and c.field is not None)]
         if not ast:
-            return empty_df
+            return self._hits_frame()
         if any(c.kind == "bool" for c in ast):
             # grouping parens -> nested BooleanQuery tree
             return self._search_boolean_tree(
@@ -1394,7 +1391,6 @@ class IndexSearcher:
                       field_filters=()):
         """One-level BooleanQuery execution (the cogrouped kernel path);
         ``ast`` is a flat occur-tagged clause list."""
-        empty_df = self.spark.createDataFrame([], "doc_id long, score float")
         exact = set()
         for c in ast:
             exact.update(c.terms)
@@ -1414,7 +1410,7 @@ class IndexSearcher:
                 t = c.terms[0]
                 if t not in dfs:
                     if c.occur == "must":
-                        return empty_df
+                        return self._hits_frame()
                     continue
                 planned.append(
                     {"occur": c.occur, "kind": "term", "terms": [t],
@@ -1424,7 +1420,7 @@ class IndexSearcher:
             elif c.kind == "phrase":
                 if any(t not in dfs for t in c.terms):
                     if c.occur == "must":
-                        return empty_df
+                        return self._hits_frame()
                     continue
                 w = F32(0.0)
                 for t, _ in c.offsets:  # f32 idf sum in clause order
@@ -1452,7 +1448,7 @@ class IndexSearcher:
                     )
                     if not agg["n"]:
                         if c.occur == "must":
-                            return empty_df
+                            return self._hits_frame()
                         continue
                     cl = len(docset_conds)
                     docset_conds.append(cond)
@@ -1463,7 +1459,7 @@ class IndexSearcher:
                     continue
                 if not rows:
                     if c.occur == "must":
-                        return empty_df
+                        return self._hits_frame()
                     continue
                 entry = {
                     "occur": c.occur,
@@ -1487,7 +1483,7 @@ class IndexSearcher:
         if not planned or not any(
             p["occur"] in ("must", "should") for p in planned
         ):
-            return empty_df
+            return self._hits_frame()
         planned[0]["mm"] = int(min_should_match)
         posts = self._postings.filter(terms_in(sorted(fetch)))
         if docset_conds:
@@ -1507,17 +1503,24 @@ class IndexSearcher:
         kern_k = None if field_filters else k
         kernel = make_boolean_scorer(planned, self.cache, kern_k)
         out = self._run_kernel(posts, kernel, "doc_id long, score float")
-        for c in field_filters:
-            def _coerce(v):
-                if v is None:
-                    return None
+        return self._filter_top(out, field_filters, k)
+
+    def _filter_top(self, out, field_filters, k):
+        """Apply the top-level field-range filters to the all-match
+        (doc_id, score) set, then order (score desc, doc_id asc) and
+        keep the first ``k`` (all when ``k`` is None)."""
+        def _coerce(v):
+            if v is None:
+                return None
+            try:
+                return int(v)
+            except ValueError:
                 try:
-                    return int(v)
+                    return float(v)
                 except ValueError:
-                    try:
-                        return float(v)
-                    except ValueError:
-                        return v
+                    return v
+
+        for c in field_filters:
             rng = self.numeric_range_docs(
                 c.field, _coerce(c.lo), _coerce(c.hi),
                 include_lo=c.include_lo, include_hi=c.include_hi,
@@ -1562,8 +1565,6 @@ class IndexSearcher:
         (MinShouldMatchSumScorer), as in the flat path."""
         from dataclasses import replace as _replace
 
-        empty_df = self.spark.createDataFrame(
-            [], "doc_id long, score float")
         evaled = []  # (occur, DF, cost, idx)
         for i, c in enumerate(clauses):
             if c.kind == "range" and c.field is not None:
@@ -1591,7 +1592,7 @@ class IndexSearcher:
         shoulds = [e for e in evaled if e[0] == "should"]
         nots = [e for e in evaled if e[0] == "not"]
         if not musts and not shoulds:
-            return empty_df
+            return self._hits_frame()
         req = None
         for _, d, _, i in musts:
             d = d.select("doc_id", F.col("score").alias(f"_s{i}"))
@@ -1646,26 +1647,8 @@ class IndexSearcher:
                 else:
                     yield from c.terms
         self._lookup_dfs(sorted(set(_tree_terms(ast))))
-        out = self._eval_bool(ast, min_should_match, rewrite)
-        for c in field_filters:
-            def _coerce(v):
-                if v is None:
-                    return None
-                try:
-                    return int(v)
-                except ValueError:
-                    try:
-                        return float(v)
-                    except ValueError:
-                        return v
-            rng = self.numeric_range_docs(
-                c.field, _coerce(c.lo), _coerce(c.hi),
-                include_lo=c.include_lo, include_hi=c.include_hi,
-            )
-            how = "left_anti" if c.occur == "not" else "leftsemi"
-            out = out.join(rng, "doc_id", how)
-        out = out.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out if k is None else out.limit(k)
+        return self._filter_top(
+            self._eval_bool(ast, min_should_match, rewrite), field_filters, k)
 
     def search_many(
         self,
@@ -2796,10 +2779,10 @@ class IndexSearcher:
             .collect()
         )
         if not row:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._hits_frame()
         terms = self._mlt_terms(row[0][0] or "", min_tf, min_df, max_terms)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._hits_frame()
         hits = self.search(" ".join(terms), k=None, mode="or")
         return (
             hits.filter(F.col("doc_id") != doc_id)
@@ -2868,7 +2851,7 @@ class IndexSearcher:
         scored = self._mlt_terms_scored(
             like_text, min_term_freq, min_doc_freq, max_query_terms)
         if not scored:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._hits_frame()
         mm = int(len(scored) * percent_terms_to_match)
         if not boost:
             return self.search(

@@ -152,6 +152,17 @@ def test_driver_path_runs_no_job(spark, index_dir, count_jobs):
                                s.search("w00", k=None).collect()}
 
 
+def test_empty_boolean_results_run_no_job(searchers, count_jobs):
+    """A boolean result known empty before any kernel runs is a local
+    relation: collecting it runs no Spark job."""
+    local, _ = searchers
+    rows, n = count_jobs(
+        lambda: local.search_boolean("zz_absent qq_absent").collect())
+    assert rows == [] and n == 0
+    rows, n = count_jobs(lambda: local.search_clauses([]).collect())
+    assert rows == [] and n == 0
+
+
 @pytest.mark.parametrize("how", ["bound", "uncached"])
 def test_distributed_path_selection(spark, open_distributed, index_dir,
                                     count_jobs, how):

@@ -25,7 +25,9 @@ PIPELINE_ENTRIES = [
     "source_token_counts",
     "langid_pred",
     "winnow_fingerprints",
+    "ngram_jaccard_pairs",
     "minhash_lsh_pairs",
+    "dedup_clusters",
     "simhash_neardups",
     "embed_neardup_pairs",
     "ann_cosine_top10",
