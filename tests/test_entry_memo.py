@@ -15,7 +15,16 @@ import pyarrow.parquet as pq
 
 from lucene_solr_spark import driver_entry as de
 
-SF_DIR = "/root/testdata/sf0.001"
+
+def _tier(path, n):
+    """A tier directory holding an n-doc ``documents`` table."""
+    (path / "documents.parquet").mkdir(parents=True)
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(n), pa.int64()),
+        "text": [f"doc word{i} common shared tail" for i in range(n)],
+        "lang": ["en"] * n,
+    }), path / "documents.parquet" / "part-0.parquet")
+    return str(path)
 
 
 def _cached(df):
@@ -27,16 +36,18 @@ def _persisted_rdds(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
-def test_memo_serves_its_session_and_replaces_across_sessions(spark):
+def test_memo_serves_its_session_and_replaces_across_sessions(spark,
+                                                              tmp_path):
+    sf_dir = _tier(tmp_path / "sf_tiny", 6)
     other = spark.newSession()
-    first = de._shingles_df(spark, SF_DIR)
-    assert de._shingles_df(spark, SF_DIR) is first
+    first = de._shingles_df(spark, sf_dir)
+    assert de._shingles_df(spark, sf_dir) is first
     n = first.count()
     persisted = _persisted_rdds(spark)
-    second = de._shingles_df(other, SF_DIR)
+    second = de._shingles_df(other, sf_dir)
     assert second is not first
     assert second.sparkSession is other
-    real = os.path.realpath(SF_DIR)
+    real = os.path.realpath(sf_dir)
     assert [k for k in de._MEMO if k[0] == "_shingles_df"
             and real in k] == [("_shingles_df", real)]
     held = de._MEMO[("_shingles_df", real)]
@@ -47,7 +58,7 @@ def test_memo_serves_its_session_and_replaces_across_sessions(spark):
     assert _cached(second) and _cached(first)
     assert persisted <= _persisted_rdds(spark)
     # the first session is served a value built under it again
-    third = de._shingles_df(spark, SF_DIR)
+    third = de._shingles_df(spark, sf_dir)
     assert third is not first and third.sparkSession is spark
     assert _cached(third)
 
@@ -65,16 +76,8 @@ def test_entry_dir_keys_on_the_real_path(tmp_path):
 
 
 def test_two_tiers_with_one_basename_get_their_own_index(spark, tmp_path):
-    tiers = []
-    for parent, n in (("a", 3), ("b", 5)):
-        tier = tmp_path / parent / "sf_tiny"
-        (tier / "documents.parquet").mkdir(parents=True)
-        pq.write_table(pa.table({
-            "doc_id": pa.array(range(n), pa.int64()),
-            "text": [f"doc word{i} common" for i in range(n)],
-            "lang": ["en"] * n,
-        }), tier / "documents.parquet" / "part-0.parquet")
-        tiers.append(str(tier))
+    tiers = [_tier(tmp_path / "a" / "sf_tiny", 3),
+             _tier(tmp_path / "b" / "sf_tiny", 5)]
     try:
         assert [de.get_searcher(spark, t).max_doc for t in tiers] == [3, 5]
     finally:
